@@ -620,8 +620,8 @@ def main():
     customer = E._t(spark, sf_dir, "customer")
     n_customer = customer.count()
     with section("avro_table"):
-        # pure-Python avro codec: parquet-staged write + transcode; decode
-        # via mapInPandas over the schema-compiled columnar decoder
+        # pure-Python avro codec: direct Arrow→avro write task; decode
+        # via mapInArrow over the schema-compiled columnar decoder
         # (formats/avro_decode.py). lineitem (600 K rows), not customer
         # (15 K), so fixed per-commit costs don't swamp the per-row signal.
         quiesce()

@@ -796,19 +796,19 @@ class PaimonStreamReader(SimpleDataSourceStreamReader):
 
 @dataclass
 class _WroteFiles(WriterCommitMessage):
-    paths: list
-    # parallel list of {col: value} partition specs (batch writer only)
-    partitions: list = None
-    # parallel list of bucket ids (batch writer only; None = bucket-0)
-    buckets: list = None
+    # (staging path, size, partition, bucket, stats, file_index) per data
+    # file — the write-task contract of write.build_add_entries; the raw
+    # dynamic-bucket staging reports (path,) only
+    files: list
 
 
 class _BucketedTaskWriter:
     """Shared task-side machinery of the batch and streaming DataSource
     writers: engine bucket per row (vectorized murmur replica of
     write.bucket_expr), LSN/_VALUE_KIND system columns for PK tables,
-    one SORTED level-0 file per (partition, bucket), and the driver-side
-    ADD-entry construction + commit tail shared with Table.write."""
+    one SORTED level-0 file per (partition, bucket) with its stats and
+    bloom index computed in the task, and the driver-side ADD-entry
+    builder + commit tail shared with Table.write."""
 
     def _configure(self, options, verb: str):
         self.options = options
@@ -831,9 +831,13 @@ class _BucketedTaskWriter:
         self.sort_keys = schema.trimmed_primary_keys() if self.is_pk else []
         self.rowkind_field = opts.rowkind_field if self.is_pk else None
         self.part_keys = list(schema.partition_keys)
-        # file.format parity: orc staged directly; avro staged as parquet
-        # and transcoded at commit (the same order Table.write uses)
+        # file.format parity: parquet/orc via pyarrow, avro via the same
+        # encoder and stats rules Table.write uses (formats/avro_direct.py)
         self.file_format = opts.file_format
+        self.stats_mode = opts.metadata_stats_mode
+        self.target_size = opts.target_file_size
+        self.bloom_cols = [c for c in opts.bloom_filter_columns
+                           if c in schema.field_names()]
         self.table_path = t.path
 
     def _row_buckets(self, tbl):
@@ -859,25 +863,27 @@ class _BucketedTaskWriter:
 
     def _stage_task(self, iterator, seq_base: int):
         """Executor side: group the task's Arrow batches into one sorted
-        staged file per (partition spec, bucket)."""
+        staged file per (partition spec, bucket), reporting each file's
+        size, stats and bloom index from here — the commit reads no data."""
         import numpy as np
         import pyarrow as pa
         import pyarrow.compute as pc
 
         from .fileio import for_path
+        from .metadata.stats import collect_file_stats
         from .metadata.util import new_uuid
+        from .write import FileBloom, _partition_value
         io = for_path(self.staging)
         batches = list(iterator)
         if not batches:
-            return _WroteFiles(paths=[], partitions=[], buckets=[])
+            return _WroteFiles(files=[])
         tbl = pa.Table.from_batches(batches)
         if self.dynamic_assign:
             # raw staging: one parquet per task; the commit runs the
-            # DataFrame assigner over these (partitions/buckets unset
-            # marks the message as raw)
+            # DataFrame assigner over these
             p = os.path.join(self.staging, f"raw-{new_uuid()}.parquet")
             io.write_parquet(tbl, p)
-            return _WroteFiles(paths=[p])
+            return _WroteFiles(files=[(p,)])
         n = tbl.num_rows
         bucketed = self.num_buckets > 0 and bool(self.bucket_keys)
         if self.is_pk:
@@ -904,12 +910,20 @@ class _BucketedTaskWriter:
                            pa.int64())
             tbl = tbl.append_column(SEQUENCE_NUMBER, seq) \
                      .append_column(VALUE_KIND, kind)
+        if self.file_format == "avro":
+            from pyspark.sql.pandas.types import from_arrow_schema
+
+            from .formats.avro_direct import AvroFileSpec, _GroupWriter
+            avro = AvroFileSpec(
+                from_arrow_schema(tbl.schema, prefer_timestamp_ntz=True),
+                self.staging, self.stats_mode, None, self.bloom_cols,
+                self.target_size)
         group_keys = list(self.part_keys)
         if bucketed:
             tbl = tbl.append_column(
                 "__bucket", pa.array(self._row_buckets(tbl), pa.int32()))
             group_keys.append("__bucket")
-        paths, parts, bks = [], [], []
+        files = []
 
         def emit(sub, spec, bucket):
             if self.sort_keys:
@@ -918,6 +932,13 @@ class _BucketedTaskWriter:
                                    + [SEQUENCE_NUMBER]])
             if bucketed:
                 sub = sub.drop_columns(["__bucket"])
+            part = {c: _partition_value(spec[c]) for c in self.part_keys}
+            if self.file_format == "avro":
+                w = _GroupWriter(avro, part, bucket)
+                w.append(sub)
+                w.close_file()
+                files.extend(w.results)
+                return
             if self.file_format == "orc":
                 import pyarrow.orc as orc
                 p = os.path.join(self.staging, f"data-{new_uuid()}.orc")
@@ -928,9 +949,11 @@ class _BucketedTaskWriter:
                 p = os.path.join(self.staging,
                                  f"data-{new_uuid()}.parquet")
                 io.write_parquet(sub, p)
-            paths.append(p)
-            parts.append(spec)
-            bks.append(bucket)
+            bloom = FileBloom(self.bloom_cols)
+            bloom.add(sub)
+            files.append((p, io.size(p), part, bucket,
+                          collect_file_stats(p, self.stats_mode),
+                          bloom.index()))
 
         if not group_keys:
             emit(tbl, {}, 0)
@@ -948,10 +971,9 @@ class _BucketedTaskWriter:
                        .aggregate([("__rowidx", "list")]))
             lists = grouped.column("__rowidx_list").combine_chunks()
             for i, spec in enumerate(grouped.select(group_keys).to_pylist()):
-                emit(tbl.take(lists[i].values),
-                     {c: spec[c] for c in self.part_keys},
+                emit(tbl.take(lists[i].values), spec,
                      spec.get("__bucket", 0))
-        return _WroteFiles(paths=paths, partitions=parts, buckets=bks)
+        return _WroteFiles(files=files)
 
     def _overwrite_mode(self, schema):
         """(static_spec | True | None, dynamic: bool) from the write
@@ -993,7 +1015,7 @@ class _BucketedTaskWriter:
         spark = (SparkSession.getActiveSession()
                  or SparkSession.builder.getOrCreate())
         t = _load_table(self.options)
-        paths = [p for m in messages if m is not None for p in m.paths]
+        paths = [f[0] for m in messages if m is not None for f in m.files]
         if paths:
             df = spark.read.parquet(*paths)
         elif overwrite:  # INSERT OVERWRITE with an empty SELECT truncates
@@ -1016,56 +1038,26 @@ class _BucketedTaskWriter:
 
     def _commit_staged(self, messages, overwrite: bool,
                        commit_identifier: int = -1):
-        """Driver side: footer stats -> ADD entries, bucket-layout guard,
-        bloom index, move into layout, then the commit tail shared with
+        """Driver side: the tasks' reported files -> ADD entries (the
+        builder Table.write uses; no data or footer reads), bucket-layout
+        guard, move into layout, then the commit tail shared with
         Table.write (_finish_commit: overwrite retractions, changelog
         producers, snapshot commit, post-commit hooks)."""
         if self.dynamic_assign:
             return self._commit_dynamic(messages, overwrite,
                                         commit_identifier)
-        import time as _t
-
         from pyspark.sql import SparkSession
 
-        from .metadata.manifest import DataFileMeta
-        from .metadata.stats import collect_file_stats
-        from .write import (BatchTableWrite, _AddEntry, _attach_bloom_index,
-                            _dir_value)
+        from .write import BatchTableWrite, build_add_entries
 
         t = _load_table(self.options)
         schema = t.schema
-        opts = schema.core_options
         latest = t.snapshots.latest()
         seq_base = latest.next_sequence_number if latest else 0
         bucketed = self.num_buckets > 0 and bool(self.bucket_keys)
-        adds = []
-        now = int(_t.time() * 1000)
-        for m in (m2 for m2 in messages if m2 is not None):
-            n_paths = len(m.paths)
-            for path, spec, bucket in zip(
-                    m.paths, m.partitions or [{}] * n_paths,
-                    m.buckets or [0] * n_paths):
-                st = collect_file_stats(path, opts.metadata_stats_mode)
-                seq_stats = st["cols"].get(SEQUENCE_NUMBER, {})
-                if not self.is_pk:
-                    delete_rows = 0
-                else:  # same rule as BatchTableWrite._collect_entries
-                    kmax = (st["cols"].get(VALUE_KIND) or {}).get("max")
-                    delete_rows = (0 if isinstance(kmax, str)
-                                   and kmax.startswith("+") else None)
-                part_dir = "/".join(f"{c}={_dir_value(spec[c])}"
-                                    for c in self.part_keys)
-                rel = "/".join(x for x in (part_dir, f"bucket-{bucket}",
-                                           os.path.basename(path)) if x)
-                adds.append(_AddEntry(path, spec, bucket, DataFileMeta(
-                    file_name=rel, file_size=t.io.size(path),
-                    row_count=st["_row_count"],
-                    min_seq=seq_stats.get("min", 0) or 0,
-                    max_seq=seq_stats.get("max", 0) or 0,
-                    schema_id=schema.id, level=0,
-                    stats=st["cols"], creation_time_millis=now,
-                    delete_row_count=delete_rows,
-                    total_buckets=self.num_buckets if bucketed else None)))
+        adds = build_add_entries(
+            schema, [f for m in messages if m is not None for f in m.files],
+            total_buckets=self.num_buckets if bucketed else None)
         w = BatchTableWrite(t)
         if bucketed and adds and not overwrite:
             try:
@@ -1073,24 +1065,14 @@ class _BucketedTaskWriter:
             except Exception:
                 self.abort_paths(messages)
                 raise
+        for e in adds:
+            t.io.rename(e.staging_path,
+                        os.path.join(t.path, e.file.file_name))
         # the DSv2 commit runs on a separate driver thread where the
         # thread-local active session may be unset; getOrCreate returns
         # the existing default session (the SparkContext is live)
         spark = (SparkSession.getActiveSession()
                  or SparkSession.builder.getOrCreate())
-        bloom_cols = [c for c in opts.bloom_filter_columns
-                      if c in schema.field_names()]
-        if bloom_cols and adds and spark is not None:
-            _attach_bloom_index(spark, self.staging, adds, bloom_cols)
-        if self.file_format == "avro" and adds:
-            from .write import _transcode_adds_to_avro
-            _transcode_adds_to_avro(spark, adds, schema)
-            for e in adds:  # the staged basename became .avro
-                e.file.file_name = (e.file.file_name[:-len(".parquet")]
-                                    + ".avro")
-        for e in adds:
-            t.io.rename(e.staging_path,
-                        os.path.join(t.path, e.file.file_name))
         ow, dyn = self._overwrite_mode(schema) if overwrite else (None,
                                                                   False)
         return w._finish_commit(
@@ -1101,9 +1083,9 @@ class _BucketedTaskWriter:
     def abort_paths(self, messages):
         from .fileio import for_path
         for m in (m2 for m2 in messages if m2 is not None):
-            for path in getattr(m, "paths", []):
+            for f in getattr(m, "files", []):
                 try:
-                    for_path(path).delete(path)
+                    for_path(f[0]).delete(f[0])
                 except OSError:
                     pass
 

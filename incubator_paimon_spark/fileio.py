@@ -192,7 +192,10 @@ class FileIO(ABC):
 
     @abstractmethod
     def write_overwrite(self, path: str, data: bytes) -> None:
-        """Overwriting write (hint files only — never commit-critical)."""
+        """Overwriting write of the whole file: hint files, and staged data
+        files before the commit moves them into place. The file is
+        complete when the call returns; LocalFileIO replaces atomically
+        (temp file + os.replace), so readers never see a partial file."""
 
     # --- namespace
     @abstractmethod

@@ -1,31 +1,25 @@
-"""Direct Arrow → Avro staging write: one materialization instead of two.
+"""Direct Arrow → Avro data-file write: the one way avro data files get
+written.
 
-Before r16 every avro-table commit materialized the data TWICE: Spark wrote
-the commit as parquet (staging layout + rolling + footer stats), then a
-distributed pass re-read each staged file and re-encoded it as an avro
-container (avro_spark.transcode_parquet_to_avro). Measured at bench scale the
-staged parquet save was 1.6–1.9 s of a 2.6–3.0 s 600 K-row write — pure
-double I/O that grows linearly with data volume (guide §1.2 step 1: fix the
-algorithm's passes before per-task work).
-
-This module is the single-pass replacement: a `mapInArrow` task walks its
-partition's batches, groups rows by the layout columns (partition dirs +
+A write task walks its Arrow batches, groups rows by layout (partition +
 bucket), encodes each group straight into avro container blocks with the
 vectorized columnar encoder (avro_encode), rolls files at
-`maxRecordsPerFile`, computes the per-file column stats FROM THE ARROW DATA
-in the same pass, and ships back O(files) small result rows
-(path, size, stats) — the driver never touches data, exactly like the
-staged path's footer collection.
+`maxRecordsPerFile` or at the table's target-file-size, and computes each
+file's column stats and bloom index FROM THE ARROW DATA in the same pass.
+It ships back O(files) small rows (path, size, partition, bucket, stats,
+file_index) and the driver never touches data (write.build_add_entries).
+Table.write runs it as one `mapInArrow` job (write_avro_staging); the
+DataSource writers run _GroupWriter inside their own write tasks.
 
 Stats parity is the correctness surface: the manifest min/max/null_count
 feed file pruning, `_SEQUENCE_NUMBER` ordering and the `_VALUE_KIND`
 delete-row proof, so the numbers here replicate what Spark-written parquet
-footers produced for the SAME rows, verified empirically and pinned by
-tests/test_avro_direct.py:
+footers produce for the SAME rows, pinned against a parquet table written
+from the same input by tests/test_avro_direct.py:
 
 - nested columns (array/map/struct): parquet exposes only dotted leaf paths,
   which collect_file_stats skips → NO stats entry at all;
-- TimestampType (tz-aware): Spark stages it as INT96, which carries no
+- TimestampType (tz-aware): Spark writes it as INT96, which carries no
   footer statistics → entry is exactly ``{"null_count": 0}`` (even when the
   column holds nulls); TimestampNTZType is INT64 and gets real stats;
 - DecimalType: pyarrow cannot cast the footer's min/max → real null_count,
@@ -40,9 +34,9 @@ tests/test_avro_direct.py:
   the footer path via metadata.stats._truncate/_jsonable.
 
 Task-retry safety: file names are uuid-unique per attempt; the driver only
-trusts the (path, size, stats) rows returned by SUCCESSFUL attempts, and
+trusts the rows returned by SUCCESSFUL attempts, and
 `_move_into_layout` moves exactly those files before deleting the staging
-dir, so a failed attempt's orphans are swept with the staging skeleton.
+dir, so a failed attempt's orphans are swept with the staging dir.
 """
 
 from __future__ import annotations
@@ -51,10 +45,10 @@ import struct
 
 from ..metadata.stats import _jsonable, _truncate
 
-# flush encoded blocks once this much raw arrow data is buffered, so a task
-# never holds more than ~one flush of raw columns plus the (compressed)
-# container bytes of the file it is building — bounded memory at any
-# partition size, same order as the old per-file transcode held
+# encode buffered rows into container blocks once this much raw arrow data
+# (or target-file-size, if smaller) is buffered. Files also roll at
+# target-file-size of encoded bytes, so a task holds at most ~one flush of
+# raw columns plus one target-size file per open layout group.
 FLUSH_BYTES = 32 << 20
 
 _pack_d = struct.Struct("<d").pack
@@ -74,7 +68,7 @@ def _stat_kind(dt) -> str:
     if isinstance(dt, (T.ArrayType, T.MapType, T.StructType)):
         return "skip"
     if isinstance(dt, T.TimestampType):
-        return "int96"      # staged parquet wrote NO stats for INT96
+        return "int96"      # Spark's parquet writes NO stats for INT96
     if isinstance(dt, T.DecimalType):
         return "counts"     # footer min/max uncastable by pyarrow
     if isinstance(dt, (T.FloatType, T.DoubleType)):
@@ -177,48 +171,79 @@ class _ColStats:
         return entry
 
 
-class _GroupWriter:
-    """One open avro container per layout group; rolls at max_rec rows."""
+class AvroFileSpec:
+    """What every file of one write shares: the container schema and
+    header, the per-column stats rules, bloom columns and roll sizes.
+    Plain picklable data, built on the driver or in the task."""
 
-    def __init__(self, dir_rel: str, header: bytes, avro_schema: dict,
-                 stat_kinds, float32_flags, stats_mode: str, max_rec,
-                 staging: str):
-        self.dir_rel = dir_rel
-        self.header = header
-        self.avro_schema = avro_schema
-        self.stat_kinds = stat_kinds
-        self.float32 = float32_flags
+    def __init__(self, file_schema, staging: str, stats_mode: str,
+                 max_rec: int | None, bloom_cols, target_size: int):
+        from pyspark.sql import types as T
+
+        from .avro_codec import spark_schema_to_avro
+        from .avro_encode import container_header_bytes
+        self.avro_schema = spark_schema_to_avro(file_schema)
+        self.header = container_header_bytes(self.avro_schema, "deflate")
+        self.names = [f.name for f in file_schema.fields]
+        self.stat_kinds = [
+            "skip" if stats_mode == "none" else _stat_kind(f.dataType)
+            for f in file_schema.fields]
+        self.float32 = [isinstance(f.dataType, T.FloatType)
+                        for f in file_schema.fields]
         self.stats_mode = stats_mode
-        self.max_rec = max_rec
         self.staging = staging
-        self.results = []          # (path, size, stats_json)
+        self.max_rec = max_rec
+        self.bloom_cols = list(bloom_cols)
+        self.target_size = target_size
+        self.flush_at = min(FLUSH_BYTES, target_size)
+
+
+class _GroupWriter:
+    """One open avro container per layout group (partition, bucket); rolls
+    at max_rec rows or target_size encoded bytes. `results` collects
+    (path, size, partition, bucket, stats, file_index) per closed file."""
+
+    def __init__(self, spec: AvroFileSpec, partition: dict, bucket: int):
+        self.spec = spec
+        self.partition = partition
+        self.bucket = bucket
+        self.results = []
         self._new_file()
 
     def _new_file(self):
-        self.parts = [self.header]
+        from ..write import FileBloom
+        self.parts = [self.spec.header]
+        self.size = len(self.spec.header)   # encoded bytes so far
         self.buf = []              # raw arrow tables awaiting encode
         self.buf_bytes = 0
         self.rows = 0
-        self.stats = [_ColStats(k) for k in self.stat_kinds]
+        self.stats = [_ColStats(k) for k in self.spec.stat_kinds]
+        self.bloom = FileBloom(self.spec.bloom_cols)
 
     def append(self, tbl):
-        """tbl: pyarrow Table of data columns only (layout already stripped),
-        rows in input order."""
+        """tbl: pyarrow Table of the file's columns only (layout already
+        stripped), rows in input order."""
+        s = self.spec
+        # slice so one flush stays near flush_at even from one huge batch.
+        # Buffer sizes, not nbytes: pyarrow's nbytes reads the offsets of
+        # an empty nested map child, which Spark's Arrow batches ship as a
+        # zero-length buffer (segfault); a slice counts its whole buffers,
+        # so a flush may come early, never late
+        step = max(1, s.flush_at * tbl.num_rows
+                   // max(tbl.get_total_buffer_size(), 1))
         while tbl.num_rows:
-            room = (self.max_rec - self.rows if self.max_rec else
-                    tbl.num_rows)
-            take = tbl.slice(0, room)
-            tbl = tbl.slice(room)
-            for i, name in enumerate(take.column_names):
-                self.stats[i].update(take.column(i))
+            room = min(step, s.max_rec - self.rows) if s.max_rec else step
+            take, tbl = tbl.slice(0, room), tbl.slice(room)
+            for st, col in zip(self.stats, take.columns):
+                st.update(col)
+            self.bloom.add(take)
             self.buf.append(take)
-            self.buf_bytes += take.nbytes
+            self.buf_bytes += take.get_total_buffer_size()
             self.rows += take.num_rows
-            if self.buf_bytes >= FLUSH_BYTES:
+            if self.buf_bytes >= s.flush_at:
                 self._flush()
-            if self.max_rec and self.rows >= self.max_rec and tbl.num_rows:
+            if self.rows == s.max_rec or self.size >= s.target_size:
                 self.close_file()
-                self._new_file()
 
     def _flush(self):
         import pyarrow as pa
@@ -228,54 +253,46 @@ class _GroupWriter:
             return
         chunk = (self.buf[0] if len(self.buf) == 1
                  else pa.concat_tables(self.buf))
-        self.parts.append(encode_container_blocks(chunk, self.avro_schema))
+        blocks = encode_container_blocks(chunk, self.spec.avro_schema)
+        self.parts.append(blocks)
+        self.size += len(blocks)
         self.buf, self.buf_bytes = [], 0
 
     def close_file(self):
+        """Write the open file (if it has rows) and start a new one."""
         from ..fileio import for_path
-        from ..metadata.util import dumps, new_uuid
-        if self.rows == 0:
-            return
-        self._flush()
-        data = b"".join(self.parts)
-        rel = (f"{self.dir_rel}/" if self.dir_rel else "") \
-            + f"part-{new_uuid()}.avro"
-        path = f"{self.staging}/{rel}"
-        for_path(path).write_overwrite(path, data)
-        cols = {}
-        names = [f["name"] for f in self.avro_schema["fields"]]
-        for i, (name, st) in enumerate(zip(names, self.stats)):
-            entry = st.finish(self.stats_mode, self.float32[i])
-            if entry is not None:
-                cols[name] = entry
-        self.results.append((path, len(data), dumps(
-            {"_row_count": self.rows, "cols": cols})))
+        from ..metadata.util import new_uuid
+        s = self.spec
+        if self.rows:
+            self._flush()
+            data = b"".join(self.parts)
+            path = f"{s.staging}/part-{new_uuid()}.avro"
+            for_path(path).write_overwrite(path, data)
+            cols = {}
+            for name, st, f32 in zip(s.names, self.stats, s.float32):
+                entry = st.finish(s.stats_mode, f32)
+                if entry is not None:
+                    cols[name] = entry
+            self.results.append((
+                path, len(data), self.partition, self.bucket,
+                {"_row_count": self.rows, "cols": cols}, self.bloom.index()))
+        self._new_file()
 
 
 def write_avro_staging(spark, df, layout_cols: list[str], staging: str,
-                       stats_mode: str, max_rec: int | None):
-    """Run the single-pass distributed avro staging write; returns
-    {staging_path: (file_size, stats_dict)} for _collect_entries.
+                       stats_mode: str, max_rec: int | None, bloom_cols,
+                       target_size: int):
+    """Table.write's avro data-file write, one mapInArrow job; returns
+    {staging_path: (size, partition, bucket, stats, file_index)}.
 
     `df` must already carry the layout columns (``__pt_*`` + ``__bucket``)
-    and have its final partitioning/sort applied — this replaces only the
-    ``writer.format("parquet").save`` + footer-stats + transcode trio."""
-    from .avro_codec import spark_schema_to_avro
-    from .avro_encode import container_header_bytes
-    from ..metadata.util import loads
+    and have its final partitioning/sort applied."""
+    from ..metadata.util import dumps, loads
+    from ..write import BUCKET_COL, PT_PREFIX, _partition_value
 
-    file_schema = df.drop(*layout_cols).schema
-    data_cols = [f.name for f in file_schema.fields]
-    avro_schema = spark_schema_to_avro(file_schema)
-    header = container_header_bytes(avro_schema, "deflate")
-    stat_kinds = [_stat_kind(f.dataType) for f in file_schema.fields]
-    from pyspark.sql import types as T
-    float32_flags = [isinstance(f.dataType, T.FloatType)
-                     for f in file_schema.fields]
+    spec = AvroFileSpec(df.drop(*layout_cols).schema, staging, stats_mode,
+                        max_rec, bloom_cols, target_size)
     layout = list(layout_cols)
-    mode = stats_mode
-    if mode == "none":
-        stat_kinds = ["skip"] * len(stat_kinds)
 
     def task(batches):
         import pyarrow as pa
@@ -286,26 +303,16 @@ def write_avro_staging(spark, df, layout_cols: list[str], staging: str,
             key = tuple(key_vals)
             w = writers.get(key)
             if w is None:
-                from ..write import _dir_value
-
-                def dv(v):
-                    # partition_value_from_dir decodes booleans from the
-                    # Spark/Hive lowercase form; _dir_value would render
-                    # Python's "True" and flip the value on parse
-                    if isinstance(v, bool):
-                        return "true" if v else "false"
-                    return _dir_value(v)
-
-                dir_rel = "/".join(f"{c}={dv(v)}"
-                                   for c, v in zip(layout, key))
-                w = writers[key] = _GroupWriter(
-                    dir_rel, header, avro_schema, stat_kinds, float32_flags,
-                    mode, max_rec, staging)
+                vals = dict(zip(layout, key))
+                part = {c[len(PT_PREFIX):]: _partition_value(v)
+                        for c, v in vals.items() if c != BUCKET_COL}
+                w = writers[key] = _GroupWriter(spec, part,
+                                                vals.get(BUCKET_COL, 0))
             return w
 
         for b in batches:
             tbl = pa.Table.from_batches([b])
-            data = tbl.select(data_cols)
+            data = tbl.select(spec.names)
             lay = [tbl.column(c) for c in layout]
             # fast path: the whole batch belongs to one layout group
             uniques = [c.unique() for c in lay]
@@ -331,12 +338,20 @@ def write_avro_staging(spark, df, layout_cols: list[str], staging: str,
             w.close_file()
             out.extend(w.results)
         if out:
+            path, size, part, bucket, stats, fidx = zip(*out)
             yield pa.RecordBatch.from_arrays(
-                [pa.array([r[0] for r in out], pa.string()),
-                 pa.array([r[1] for r in out], pa.int64()),
-                 pa.array([r[2] for r in out], pa.string())],
-                names=["path", "size", "stats"])
+                [pa.array(path, pa.string()), pa.array(size, pa.int64()),
+                 pa.array([dumps(p) for p in part], pa.string()),
+                 pa.array(bucket, pa.int32()),
+                 pa.array([dumps(st) for st in stats], pa.string()),
+                 pa.array([dumps(f) for f in fidx], pa.string())],
+                names=["path", "size", "partition", "bucket", "stats",
+                       "file_index"])
 
-    rows = (df.mapInArrow(task, schema="path string, size long, stats string")
+    rows = (df.mapInArrow(task, schema="path string, size long, "
+                          "partition string, bucket int, stats string, "
+                          "file_index string")
               .collect())
-    return {r["path"]: (r["size"], loads(r["stats"])) for r in rows}
+    return {r["path"]: (r["size"], loads(r["partition"]), r["bucket"],
+                        loads(r["stats"]), loads(r["file_index"]))
+            for r in rows}

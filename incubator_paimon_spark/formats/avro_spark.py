@@ -1,12 +1,10 @@
-"""Avro <-> Spark integration on top of the pure-Python codec.
+"""Avro <-> Spark read integration on top of the pure-Python codec.
 
-Write: the engine stages every commit as parquet (Spark-native, stats from
-footers), then one distributed task per staged file transcodes parquet →
-avro container (per-column vectorized encoder, avro_encode.py). Read:
-mapInArrow over size-packed scan units — whole small files, or sync-marker
-byte-range SPLITS of large containers (avro_read_splits) — each task
-decodes its units and yields the decoder's arrow batches directly, so both
-many-file and few-large-file avro tables scan with full executor
+Writes go through formats/avro_direct.py (Arrow → avro in the write task).
+Read: mapInArrow over size-packed scan units — whole small files, or
+sync-marker byte-range SPLITS of large containers (avro_read_splits) — each
+task decodes its units and yields the decoder's arrow batches directly, so
+both many-file and few-large-file avro tables scan with full executor
 parallelism (per-core decode speed is Python-bound; see avro_codec
 docstring).
 """
@@ -14,29 +12,6 @@ docstring).
 from __future__ import annotations
 
 from ..fileio import for_path
-from .avro_codec import spark_schema_to_avro
-
-
-def transcode_parquet_to_avro(src_path: str, dst_path: str,
-                              spark_schema) -> int:
-    """Executor-side: rewrite one staged parquet file as an avro container
-    with the same rows (schema-compiled columnar encoder, byte-identical
-    framing to the row encoder); returns the avro file size."""
-    import pyarrow.parquet as pq
-
-    from .avro_encode import write_container_arrow
-    io = for_path(src_path)
-    with io.open_input(src_path) as f:
-        tbl = pq.read_table(f)
-    avro_schema = spark_schema_to_avro(spark_schema)
-    names = [f["name"] for f in avro_schema["fields"]]
-    assert set(names) == set(tbl.column_names), \
-        f"schema drift: {names} vs {tbl.column_names}"
-    data = write_container_arrow(tbl, avro_schema)
-    out = for_path(dst_path)
-    out.write_overwrite(dst_path, data)
-    io.delete(src_path)
-    return len(data)
 
 
 # Greedy packing floor for avro scan tasks: pure-Python container decode

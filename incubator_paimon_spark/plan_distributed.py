@@ -188,7 +188,7 @@ def plan_entries_distributed(spark, table, snapshot, schema,
     set sorted by file name, or None when a gate fails (caller falls back
     to the Python planner). Pass `manifests` when the caller already read
     the snapshot's manifest lists (avoids a second list read per plan)."""
-    from .read import _bucket_key_hash, devolve_predicate
+    from .read import _bucket_key_hash, bloom_probe_types, devolve_predicate
 
     if "://" in table.path:
         return None  # manifest paths not readable by this Spark session
@@ -224,6 +224,7 @@ def plan_entries_distributed(spark, table, snapshot, schema,
               else devolve_predicate(file_pred, schema, s))
         for sid, s in schemas.items()
     } if file_pred is not None else {}
+    per_sid_bloom = {sid: bloom_probe_types(s) for sid, s in schemas.items()}
     # legacy-file bucket layout by write-time schema (file_layout_buckets)
     per_sid_layout = {sid: s.core_options.bucket for sid, s in schemas.items()}
 
@@ -253,7 +254,8 @@ def plan_entries_distributed(spark, table, snapshot, schema,
                 q = per_sid_pred.get(int(row.schemaId)) if per_sid_pred else None
                 if q is not None:
                     e = e if e is not None else _entry_from_row("ADD", row)
-                    if not (_stats_keep(e, q) and _bloom_keep(e, q)):
+                    if not (_stats_keep(e, q) and _bloom_keep(
+                            e, q, per_sid_bloom.get(int(row.schemaId), {}))):
                         continue
                 e = e if e is not None else _entry_from_row("ADD", row)
                 out.append(dumps(e.to_json()))

@@ -203,12 +203,6 @@ def _migrate_table(spark, catalog, table, source_dir, partition_keys=None,
     them from the manifest entry, `partitionInData=false`), so partitioned
     hive tables migrate zero-copy with pruning intact."""
     import os
-    from .metadata.manifest import DataFileMeta, ManifestEntry
-    from .metadata.commit import CommitMessage
-    from .metadata.stats import collect_file_stats
-    from .metadata.util import new_uuid
-    from .types import ENTRY_ADD
-    from .write import _dir_value
 
     if isinstance(partition_keys, str):  # CALL surface: 'a,b'
         partition_keys = [c.strip() for c in partition_keys.split(",")]
@@ -229,25 +223,34 @@ def _migrate_table(spark, catalog, table, source_dir, partition_keys=None,
             if "=" in seg] or None
     t = catalog.create_table(table, sample.schema, partition_keys=partition_keys,
                              options=options)
-    adds = []
-    for i, p in enumerate(files):
-        st = collect_file_stats(p)
-        part: dict = {}
-        pdir = ""
-        if partition_keys:
-            part = _hive_partition_of(os.path.relpath(p, source_dir),
-                                      sample.schema, partition_keys)
-            pdir = "/".join(f"{k}={_dir_value(v)}"
-                            for k, v in part.items()) + "/"
-        rel = f"{pdir}bucket-0/data-{new_uuid()}-{i}.{fmt}"
-        dst = os.path.join(t.path, rel)
-        t.io.link_or_copy(p, dst)
-        adds.append(ManifestEntry(ENTRY_ADD, part, 0, DataFileMeta(
-            file_name=rel, file_size=sizes[p],
-            row_count=st["_row_count"], stats=st["cols"],
-            partition_in_data=not partition_keys)))
-    t.commit.commit(CommitMessage(add=adds), schema_id=0)
+    _link_files(t, source_dir, sizes, sample.schema)
     return t
+
+
+def _link_files(t, source_dir, sizes: dict, source_schema):
+    """Share a migrate source's files into `t`'s layout (hard link, else
+    copy) and commit them as one snapshot through the shared ADD-entry
+    builder; stats come from their footers. Hive `k=v` dirs bind the
+    table's partition keys: the bytes lack those columns, so the reader
+    injects them from the entry (partitionInData=false)."""
+    import os
+
+    from .metadata.commit import CommitMessage
+    from .metadata.stats import collect_file_stats
+    from .write import build_add_entries
+
+    schema = t.schema
+    keys = schema.partition_keys
+    files = [(p, sz, _hive_partition_of(os.path.relpath(p, source_dir),
+                                        source_schema, keys) if keys else {},
+              0, collect_file_stats(p), {})
+             for p, sz in sizes.items()]
+    adds = build_add_entries(schema, files)
+    for e in adds:
+        e.file.partition_in_data = not keys
+        t.io.link_or_copy(e.staging_path,
+                          os.path.join(t.path, e.file.file_name))
+    return t.commit.commit(CommitMessage(add=adds), schema_id=schema.id)
 
 
 def _walk_data_files(src_io, source_dir) -> tuple[dict, str]:
@@ -267,16 +270,11 @@ def _migrate_file(spark, catalog, source_dir, target_table, **_):
     """Append an existing Parquet dir's files into an EXISTING table without
     rewriting data (MigrateFileProcedure): same zero-copy link/commit as
     migrate_table, but against the target's current schema + a new
-    snapshot on top of its history. Schemas must match by name."""
-    import os
-    from .metadata.manifest import DataFileMeta, ManifestEntry
-    from .metadata.commit import CommitMessage
-    from .metadata.stats import collect_file_stats
-    from .metadata.util import new_uuid
-    from .types import ENTRY_ADD
+    snapshot on top of its history. Schemas must match by name. A
+    hive-layout source binds the target's partition keys from its k=v
+    paths (raises when absent — a file in an empty partition spec would
+    hide from pruning/DROP PARTITION)."""
     from .fileio import for_path
-
-    from .write import _dir_value
 
     t = _t(catalog, target_table)
     schema = t.schema
@@ -289,29 +287,7 @@ def _migrate_file(spark, catalog, source_dir, target_table, **_):
     if set(sample.columns) != set(schema.field_names()):
         raise ValueError(f"schema mismatch: source {sorted(sample.columns)} "
                          f"vs table {sorted(schema.field_names())}")
-    adds = []
-    for i, p in enumerate(sorted(sizes)):
-        st = collect_file_stats(p)
-        part: dict = {}
-        pdir = ""
-        if schema.partition_keys:
-            # r12: a hive-layout source binds the target's partition
-            # keys from its k=v paths (raises when absent — a file in an
-            # empty partition spec would hide from pruning/DROP
-            # PARTITION); bytes stay zero-copy, reader injects
-            part = _hive_partition_of(os.path.relpath(p, source_dir),
-                                      sample.schema,
-                                      schema.partition_keys)
-            pdir = "/".join(f"{k}={_dir_value(v)}"
-                            for k, v in part.items()) + "/"
-        rel = f"{pdir}bucket-0/data-{new_uuid()}-{i}.{fmt}"
-        t.io.link_or_copy(p, os.path.join(t.path, rel))
-        adds.append(ManifestEntry(ENTRY_ADD, part, 0, DataFileMeta(
-            file_name=rel, file_size=sizes[p],
-            row_count=st["_row_count"], stats=st["cols"],
-            schema_id=schema.id,
-            partition_in_data=not schema.partition_keys)))
-    return t.commit.commit(CommitMessage(add=adds), schema_id=schema.id)
+    return _link_files(t, source_dir, sizes, sample.schema)
 
 
 def _expire_changelogs(spark, catalog, table, older_than=None, retain_max=None, **_):

@@ -39,7 +39,7 @@ from .metadata.manifest import ManifestEntry, live_entries
 from .murmur import spark_hash
 from .predicate import And, P
 from .read import (TableScan, _bloom_keep, _stats_keep,
-                   per_schema_predicate)
+                   per_schema_bloom_types, per_schema_predicate)
 from .types import ADD_KINDS, RETRACT_KINDS, SEQUENCE_NUMBER, VALUE_KIND
 
 
@@ -205,6 +205,7 @@ class LocalTableQuery:
             if len(self._trimmed) > 1 else P.eq(self._trimmed[0],
                                                 key_dict[self._trimmed[0]])
         kp = per_schema_predicate(self.table, schema, key_pred)
+        bt = per_schema_bloom_types(self.table)
 
         out = []
         from .read import file_layout_buckets
@@ -221,7 +222,8 @@ class LocalTableQuery:
                 continue
             for e in entries:
                 q = kp(e)
-                if q is None or (_stats_keep(e, q) and _bloom_keep(e, q)):
+                if q is None or (_stats_keep(e, q)
+                                 and _bloom_keep(e, q, bt(e))):
                     out.append(e)
         return out
 

@@ -22,6 +22,7 @@ from __future__ import annotations
 
 import os
 from dataclasses import dataclass, field as dc_field
+from datetime import date
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -164,6 +165,7 @@ class TableScan:
             # fields per whole bucket (every file in the bucket must fail).
             # predicates devolve to each file's write-time schema by field id
             # so renamed columns keep pruning (SchemaEvolutionUtil.java:78)
+            bt = per_schema_bloom_types(t)
             if schema.primary_keys:
                 safe = set(schema.trimmed_primary_keys()) | set(schema.partition_keys)
                 key_pred, value_pred = split_by_fields(predicate, safe)
@@ -171,7 +173,8 @@ class TableScan:
                     kp = per_schema_predicate(t, schema, key_pred)
                     entries = [e for e in entries
                                if (q := kp(e)) is None
-                               or (_stats_keep(e, q) and _bloom_keep(e, q))]
+                               or (_stats_keep(e, q)
+                                   and _bloom_keep(e, q, bt(e)))]
                 if (value_pred is not None and
                         schema.core_options.merge_engine in ("deduplicate", "first-row")):
                     # For these engines the merged row IS one input row, so if
@@ -179,12 +182,14 @@ class TableScan:
                     # partial-update/aggregation combine fields across files —
                     # value pruning there is unsafe even per-bucket; skip it.
                     entries = _prune_whole_buckets(
-                        entries, per_schema_predicate(t, schema, value_pred))
+                        entries, per_schema_predicate(t, schema, value_pred),
+                        bt)
             else:
                 pp = per_schema_predicate(t, schema, predicate)
                 entries = [e for e in entries
                            if (q := pp(e)) is None
-                           or (_stats_keep(e, q) and _bloom_keep(e, q))]
+                           or (_stats_keep(e, q)
+                               and _bloom_keep(e, q, bt(e)))]
             _n_stats = len(entries)
             residual = predicate  # keep full predicate as residual (cheap, exact)
 
@@ -255,7 +260,8 @@ class TableScan:
             if (value_pred is not None and
                     schema.core_options.merge_engine in ("deduplicate", "first-row")):
                 entries = _prune_whole_buckets(
-                    entries, per_schema_predicate(t, schema, value_pred))
+                    entries, per_schema_predicate(t, schema, value_pred),
+                    per_schema_bloom_types(t))
         if limit is not None and not schema.primary_keys:
             picked, total = [], 0
             for e in entries:
@@ -332,12 +338,14 @@ def _bucket_key_hash(schema: TableSchema, pred: Predicate) -> int | None:
     return spark_hash([eqs[k] for k in keys], types)
 
 
-def _prune_whole_buckets(entries: list[ManifestEntry], pred_of) -> list[ManifestEntry]:
+def _prune_whole_buckets(entries: list[ManifestEntry], pred_of,
+                         bloom_types_of) -> list[ManifestEntry]:
     """Drop a (partition, bucket) only when EVERY file in it fails the
     value-column predicate — merge-safe because dropping all versions of
     every key in the bucket cannot resurrect a stale version
     (KeyValueFileStoreScan.filterWholeBucketByStats / filterByValueFilter).
-    `pred_of(entry)` yields the per-write-schema devolved predicate."""
+    `pred_of(entry)` yields the per-write-schema devolved predicate,
+    `bloom_types_of(entry)` its schema's bloom_probe_types."""
     by_bucket: dict = {}
     for e in entries:
         key = (tuple(sorted((k, str(v)) for k, v in e.partition.items())), e.bucket)
@@ -345,7 +353,8 @@ def _prune_whole_buckets(entries: list[ManifestEntry], pred_of) -> list[Manifest
     out = []
     for es in by_bucket.values():
         if any((q := pred_of(e)) is None
-               or (_stats_keep(e, q) and _bloom_keep(e, q)) for e in es):
+               or (_stats_keep(e, q) and _bloom_keep(e, q, bloom_types_of(e)))
+               for e in es):
             out.extend(es)
     return out
 
@@ -423,28 +432,61 @@ def _bloom_pos(value, i: int, m: int) -> int:
     return int(hashlib.md5(f"{i}:{value}".encode()).hexdigest()[:8], 16) % m
 
 
-def _bloom_keep(e: ManifestEntry, pred: Predicate) -> bool:
-    """False = the file's bloom index proves no row can match."""
+# Column types whose bloom the planner probes, with the one literal class
+# each accepts: the writer hashes each value's Spark cast(string), the
+# planner str() of the literal, and the two agree only here (bool is an
+# int subclass and datetime a date subclass — neither matches)
+_BLOOM_PROBE = {"tinyint": int, "smallint": int, "int": int, "bigint": int,
+                "string": str, "date": date}
+
+
+def bloom_probe_types(schema: TableSchema) -> dict:
+    """{column: literal class} of `schema`'s bloom-probeable columns."""
+    return {f.name: _BLOOM_PROBE[f.type.simpleString()]
+            for f in schema.fields if f.type.simpleString() in _BLOOM_PROBE}
+
+
+def per_schema_bloom_types(table):
+    """entry → bloom_probe_types of that entry's write-time schema,
+    memoized per schema id."""
+    cache: dict[int, dict] = {}
+
+    def get(e: ManifestEntry) -> dict:
+        sid = e.file.schema_id
+        if sid not in cache:
+            cache[sid] = bloom_probe_types(table.schema_at(sid))
+        return cache[sid]
+
+    return get
+
+
+def _bloom_keep(e: ManifestEntry, pred: Predicate, probe_types: dict) -> bool:
+    """False = the file's bloom index proves no row can match. Only
+    columns in `probe_types` (bloom_probe_types of the file's schema) are
+    probed, and only with a literal of the matching class; anything else
+    keeps the file."""
     fi = e.file.file_index
     if not fi:
         return True
     from .predicate import And, Leaf, Or
     from .write import BLOOM_K, BLOOM_M
 
-    def contains(ps, value) -> bool:
-        return all(_bloom_pos(value, i, BLOOM_M) in ps for i in range(BLOOM_K))
+    def contains(ps, value, cls) -> bool:
+        return (type(value) is not cls
+                or all(_bloom_pos(value, i, BLOOM_M) in ps
+                       for i in range(BLOOM_K)))
 
     def check(p) -> bool:
         if isinstance(p, And):
             return all(check(c) for c in p.children)
         if isinstance(p, Or):
             return any(check(c) for c in p.children)
-        if isinstance(p, Leaf) and p.field in fi and fi[p.field] is not None:
-            ps = set(fi[p.field])
+        if isinstance(p, Leaf) and fi.get(p.field) is not None:
+            ps, cls = set(fi[p.field]), probe_types.get(p.field)
             if p.op == "eq":
-                return contains(ps, p.literal)
+                return contains(ps, p.literal, cls)
             if p.op == "in":
-                return any(contains(ps, v) for v in p.literal)
+                return any(contains(ps, v, cls) for v in p.literal)
         return True
 
     return check(pred)

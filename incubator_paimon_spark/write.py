@@ -298,6 +298,25 @@ def partition_value_from_dir(name: str, dtype: T.DataType):
     return raw
 
 
+def _partition_value(v):
+    """A task-side partition value in the form the staging-dir walk decodes
+    (partition_value_from_dir): plain scalars as they are, anything else
+    (decimal, …) as its string."""
+    if v is None or isinstance(v, (bool, int, float, str, date)):
+        return v
+    return str(v)
+
+
+def _hashable(dt: T.DataType) -> bool:
+    """False when Spark's hash rejects the type: a map or variant at any
+    depth of arrays and structs."""
+    if isinstance(dt, T.ArrayType):
+        return _hashable(dt.elementType)
+    if isinstance(dt, T.StructType):
+        return all(_hashable(f.dataType) for f in dt.fields)
+    return dt.typeName() not in ("map", "variant")
+
+
 class BatchTableWrite:
     """One write() == one commit (snapshot). Thread-safe use: one instance per job."""
 
@@ -421,21 +440,18 @@ class BatchTableWrite:
             df = df.withColumn(BUCKET_COL, F.lit(0))
             layout_cols.append(BUCKET_COL)
             if opts.file_format == "avro" and not preserve_system_cols:
-                # the avro transcode parallelism equals the staged FILE
-                # count — an append whose input plans one partition (a
-                # single parquet source file) would otherwise transcode a
-                # whole commit on one core. JVM formats don't care (one
-                # 100 MB parquet file writes fast); the python codec does.
+                # avro encode parallelism equals the write's task count — an
+                # append whose input plans one partition (a single parquet
+                # source file) would otherwise encode a whole commit on one
+                # core. JVM formats don't care (one 100 MB parquet file
+                # writes fast); the python codec does.
                 # Capped at the small-file compaction trigger (r15): an
                 # artificial spread past it manufactures > trigger
                 # sub-target-size files and trips the write-time append
-                # compaction on the commit itself — the whole commit was
-                # staged, transcoded, then immediately rewritten (measured
-                # 2x wall on a fresh 600 K-row table). The cap is an
-                # engine-option bound, not a core-count tune; inputs that
-                # already plan more partitions keep their natural layout,
-                # and the columnar encoder holds per-file encode at
-                # ~400 K rows/s/core so trigger-way parallelism amortizes.
+                # compaction on the commit itself (measured 2x wall on a
+                # fresh 600 K-row table). The cap is an engine-option bound,
+                # not a core-count tune; inputs that already plan more
+                # partitions keep their natural layout.
                 # Compaction rewrites (preserve_system_cols) are exempt:
                 # _compact_append sizes its output partitions to
                 # target-file-size deliberately and must not be re-spread.
@@ -454,11 +470,10 @@ class BatchTableWrite:
                     # content key (guide §2.5: derive synthetic keys
                     # deterministically; also retry-safe at scale where
                     # round-robin needs that sort for exactly-once).
-                    # Map-typed columns are unhashable in Spark; if no
-                    # column qualifies, fall back to round-robin.
+                    # Spark cannot hash a map anywhere inside a column's
+                    # type; if no column qualifies, fall back to round-robin.
                     hashable = [F.col(f.name) for f in df.schema.fields
-                                if f.dataType.typeName() not in
-                                ("map", "variant")]
+                                if _hashable(f.dataType)]
                     if hashable:
                         df = df.repartition(target, F.xxhash64(*hashable))
                     else:
@@ -486,25 +501,16 @@ class BatchTableWrite:
         bloom_cols = [c for c in opts.bloom_filter_columns
                       if c in schema.field_names()]
         fixed_layout = num_buckets > 0 and bool(schema.bucket_keys())
-        direct_avro = (opts.file_format == "avro" and not bloom_cols
-                       and os.environ.get("PMN_AVRO_DIRECT", "1") != "0")
-        if direct_avro:
-            # direct Arrow → avro staging write (r16): ONE materialization —
-            # the mapInArrow task encodes containers, rolls at max_rec and
-            # computes the footer-parity stats in the same pass
-            # (formats/avro_direct.py; stats parity pinned in
-            # tests/test_avro_direct.py). Bloom-indexed avro tables keep the
-            # staged-parquet path below: the bloom positions job is a Spark
-            # scan over the staged files, which only parquet/orc support.
+        if opts.file_format == "avro":
+            # direct Arrow → avro write: one mapInArrow task encodes the
+            # containers, rolls them, and computes each file's stats and
+            # bloom index in the same pass (formats/avro_direct.py)
             from .formats.avro_direct import write_avro_staging
-            precomputed = write_avro_staging(
-                spark, df, layout_cols, staging,
-                schema.core_options.metadata_stats_mode,
-                int(max_rec) if max_rec else None)
-            adds = self._collect_entries(
-                spark, staging, schema, level,
-                total_buckets=num_buckets if fixed_layout else None,
-                precomputed=precomputed)
+            staged = write_avro_staging(
+                spark, df, layout_cols, staging, opts.metadata_stats_mode,
+                int(max_rec) if max_rec else None, bloom_cols,
+                opts.target_file_size)
+            files = [(p, *v) for p, v in staged.items()]
         else:
             # file.compression reaches the format writer (CoreOptions
             # FILE_COMPRESSION; snappy default like the reference's
@@ -514,15 +520,11 @@ class BatchTableWrite:
                         .option("compression", opts.file_compression))
             if max_rec:
                 writer = writer.option("maxRecordsPerFile", int(max_rec))
-            # avro+bloom fallback: stage as parquet (Spark-native write +
-            # footer stats), then one distributed transcode pass rewrites
-            # each staged file as an avro container
-            staged_fmt = ("parquet" if opts.file_format == "avro"
-                          else opts.file_format)
-            writer.format(staged_fmt).save(staging)
-            adds = self._collect_entries(
-                spark, staging, schema, level,
-                total_buckets=num_buckets if fixed_layout else None)
+            writer.format(opts.file_format).save(staging)
+            files = _walk_staged(spark, staging, schema, bloom_cols)
+        adds = build_add_entries(
+            schema, files, level,
+            total_buckets=num_buckets if fixed_layout else None)
         if (fixed_layout and adds
                 and overwrite is None and not dynamic_overwrite):
             try:
@@ -531,10 +533,6 @@ class BatchTableWrite:
                 from .fileio import for_path
                 for_path(staging).delete_dir(staging)
                 raise
-        if bloom_cols and adds:
-            _attach_bloom_index(spark, staging, adds, bloom_cols)
-        if opts.file_format == "avro" and adds and not direct_avro:
-            _transcode_adds_to_avro(spark, adds, schema)
         self._move_into_layout(staging, adds, table.path)
 
         index_manifest = None
@@ -665,109 +663,6 @@ class BatchTableWrite:
                     f"Please perform INSERT OVERWRITE to rescale the current "
                     f"data layout first (rescale-bucket.md).")
 
-    # ------------------------------------------------------------------
-    def _collect_entries(self, spark, staging: str, schema: TableSchema,
-                         level: int, total_buckets: int | None = None,
-                         precomputed: dict | None = None):
-        """Walk staging output, collect footer stats distributedly, build ADD
-        entries with final (relative) file names. `precomputed`
-        ({path: (size, stats_dict)}, from the direct avro writer) skips both
-        the walk and the footer reads — the write task already returned
-        them."""
-        from .fileio import for_path
-        fmt = schema.core_options.file_format
-        if precomputed is not None:
-            sizes = {p: v[0] for p, v in precomputed.items()}
-            files = sorted(sizes)
-            if not files:
-                return []
-            stats_by_path = {_path_key(p): v[1]
-                             for p, v in precomputed.items()}
-            suffix = ".avro"
-        else:
-            staged_fmt = "parquet" if fmt == "avro" else fmt
-            suffix = ".orc" if staged_fmt == "orc" else ".parquet"
-            io = for_path(staging)
-            sizes = {p: sz for p, sz in io.walk_files(staging)
-                     if p.endswith(suffix)}
-            files = sorted(sizes)
-            if not files:
-                return []
-
-            stats_mode = schema.core_options.metadata_stats_mode
-            if staged_fmt != "parquet":
-                # no cheap footer API for ORC via pyarrow — one distributed
-                # agg job over the staging dir computes per-file stats
-                stats_by_path = _collect_stats_spark(spark, files, staged_fmt,
-                                                     schema, stats_mode)
-            elif len(files) > 64:
-                # footer reads are ~5ms each; a distributed pass only pays
-                # off once the driver loop rivals the ~1.5s Python-RDD job
-                # spin-up
-                sc = spark.sparkContext
-                stats_list = (sc.parallelize(files, min(len(files), 64))
-                              .map(lambda p: (_path_key(p),
-                                              collect_file_stats(p,
-                                                                 stats_mode)))
-                              .collect())
-                stats_by_path = dict(stats_list)
-            else:
-                stats_by_path = {_path_key(p): collect_file_stats(p,
-                                                                  stats_mode)
-                                 for p in files}
-
-        pt_types = {f"{PT_PREFIX}{c}": schema.field_by_name(c).type
-                    for c in schema.partition_keys}
-        now = int(time.time() * 1000)
-        entries = []
-        for i, path in enumerate(files):
-            # prefix strip, not os.path.relpath: relpath would mangle
-            # URI schemes (s3://… is "relative" to os.path)
-            rel = path[len(staging):].lstrip("/")
-            comps = rel.split("/")[:-1]
-            partition, bucket = {}, 0
-            for comp in comps:
-                key = comp.split("=", 1)[0]
-                if key == BUCKET_COL:
-                    bucket = int(comp.split("=", 1)[1])
-                elif key in pt_types:
-                    col = key[len(PT_PREFIX):]
-                    partition[col] = partition_value_from_dir(comp, pt_types[key])
-            st = stats_by_path[_path_key(path)]
-            seq_stats = st["cols"].get(SEQUENCE_NUMBER, {})
-            # deleteRowCount (reference Optional<Long>): row kinds sort
-            # '+I' < '+U' < '-D' < '-U', so a _VALUE_KIND max starting with
-            # '+' proves the file holds no retract/delete rows. Unknown stats
-            # → None (raw-convertible split only trusts an explicit 0).
-            if not schema.primary_keys:
-                delete_rows = 0
-            else:
-                kind_stats = st["cols"].get(VALUE_KIND) or {}
-                kmax = kind_stats.get("max")
-                delete_rows = (0 if isinstance(kmax, str)
-                               and kmax.startswith("+") else None)
-            part_dir = "/".join(
-                f"{c}={_dir_value(partition[c])}" for c in schema.partition_keys)
-            bucket_dir = BUCKET_DIR.format(b=bucket)
-            final_suffix = ".avro" if fmt == "avro" else suffix
-            fname = f"data-{new_uuid()}-{i}{final_suffix}"
-            rel_final = "/".join(x for x in (part_dir, bucket_dir, fname) if x)
-            meta = DataFileMeta(
-                file_name=rel_final,
-                file_size=sizes[path],
-                row_count=st["_row_count"],
-                min_seq=seq_stats.get("min", 0) or 0,
-                max_seq=seq_stats.get("max", 0) or 0,
-                schema_id=schema.id,
-                level=level,
-                stats=st["cols"],
-                creation_time_millis=now,
-                delete_row_count=delete_rows,
-                total_buckets=total_buckets,
-            )
-            entries.append(_AddEntry(path, partition, bucket, meta))
-        return entries
-
     @staticmethod
     def _move_into_layout(staging: str, adds, table_path: str):
         from .fileio import for_path
@@ -887,12 +782,137 @@ def compute_bloom_positions(spark, paths: list[str], fmt: str,
     return by_file
 
 
-def _attach_bloom_index(spark, staging, adds, cols):
-    paths = [e.staging_path for e in adds]
-    fmt = "orc" if paths and paths[0].endswith(".orc") else "parquet"
-    by_file = compute_bloom_positions(spark, paths, fmt, cols)
-    for e in adds:
-        e.file.file_index = dict(by_file.get(_path_key(e.staging_path), {}))
+class FileBloom:
+    """One data file's bloom index, built in the write task from the Arrow
+    rows it writes: positions come from the planner's own hash
+    (read._bloom_pos) over each distinct non-null value, so for integral,
+    string and date columns — the only ones the planner probes — the index
+    equals what compute_bloom_positions derives from Spark's cast(string).
+    A column that saw only NULLs gets no entry; a saturated one (> M/2 bits
+    set) gets None = no pruning."""
+
+    def __init__(self, cols):
+        self.cols = list(cols)
+        self.pos: dict = {}   # col -> set of positions | None (saturated)
+
+    def add(self, tbl):
+        from .read import _bloom_pos
+        for c in self.cols:
+            ps = self.pos.get(c, set())
+            if ps is None:
+                continue
+            col = tbl.column(c)
+            try:
+                vals = col.unique().drop_null().to_pylist()
+            except NotImplementedError:  # nested types: no unique kernel
+                vals = {str(v) for v in col.to_pylist() if v is not None}
+            for v in vals:
+                ps.update(_bloom_pos(v, i, BLOOM_M) for i in range(BLOOM_K))
+                if len(ps) > BLOOM_M // 2:
+                    ps = None
+                    break
+            if ps is None or ps:
+                self.pos[c] = ps
+
+    def index(self) -> dict:
+        return {c: None if ps is None else sorted(ps)
+                for c, ps in self.pos.items()}
+
+
+def _walk_staged(spark, staging: str, schema: TableSchema,
+                 bloom_cols: list[str]) -> list:
+    """(path, size, partition, bucket, stats, file_index) per file of a
+    Spark-native parquet/orc staging write: the dir walk gives paths, sizes
+    and the layout, the footers give stats (a distributed pass past 64
+    files; one Spark aggregation for ORC), one Spark scan gives blooms."""
+    from .fileio import for_path
+    fmt = "orc" if schema.core_options.file_format == "orc" else "parquet"
+    sizes = {p: sz for p, sz in for_path(staging).walk_files(staging)
+             if p.endswith(f".{fmt}")}
+    files = sorted(sizes)
+    if not files:
+        return []
+    stats_mode = schema.core_options.metadata_stats_mode
+    if fmt == "orc":
+        # no cheap footer API for ORC via pyarrow — one distributed
+        # agg job over the staging dir computes per-file stats
+        stats = _collect_stats_spark(spark, files, fmt, schema, stats_mode)
+    elif len(files) > 64:
+        # footer reads are ~5ms each; a distributed pass only pays off once
+        # the driver loop rivals the ~1.5s Python-RDD job spin-up
+        stats = dict(spark.sparkContext
+                     .parallelize(files, min(len(files), 64))
+                     .map(lambda p: (_path_key(p),
+                                     collect_file_stats(p, stats_mode)))
+                     .collect())
+    else:
+        stats = {_path_key(p): collect_file_stats(p, stats_mode)
+                 for p in files}
+    blooms = (compute_bloom_positions(spark, files, fmt, bloom_cols)
+              if bloom_cols else {})
+    pt_types = {f"{PT_PREFIX}{c}": schema.field_by_name(c).type
+                for c in schema.partition_keys}
+    out = []
+    for path in files:
+        # prefix strip, not os.path.relpath: relpath would mangle URI
+        # schemes (s3://… is "relative" to os.path)
+        partition, bucket = {}, 0
+        for comp in path[len(staging):].lstrip("/").split("/")[:-1]:
+            key = comp.split("=", 1)[0]
+            if key == BUCKET_COL:
+                bucket = int(comp.split("=", 1)[1])
+            elif key in pt_types:
+                partition[key[len(PT_PREFIX):]] = partition_value_from_dir(
+                    comp, pt_types[key])
+        k = _path_key(path)
+        out.append((path, sizes[path], partition, bucket, stats[k],
+                    dict(blooms.get(k, {}))))
+    return out
+
+
+def build_add_entries(schema: TableSchema, files, level: int = 0,
+                      total_buckets: int | None = None) -> list:
+    """ADD entries for freshly written data files — the one place they are
+    built. Every writer reports (staging path, size, partition, bucket,
+    stats, file_index) per file it wrote: the avro and DataSource write
+    tasks from their own encode, the Spark-native parquet/orc write from
+    its staging walk plus footers. No data is read here; each file gets
+    its final name in the table layout and its manifest metadata."""
+    now = int(time.time() * 1000)
+    entries = []
+    for i, (path, size, partition, bucket, st, file_index) in enumerate(
+            sorted(files, key=lambda f: f[0])):
+        seq_stats = st["cols"].get(SEQUENCE_NUMBER, {})
+        # deleteRowCount (reference Optional<Long>): row kinds sort
+        # '+I' < '+U' < '-D' < '-U', so a _VALUE_KIND max starting with
+        # '+' proves the file holds no retract/delete rows. Unknown stats
+        # → None (raw-convertible split only trusts an explicit 0).
+        if not schema.primary_keys:
+            delete_rows = 0
+        else:
+            kmax = (st["cols"].get(VALUE_KIND) or {}).get("max")
+            delete_rows = (0 if isinstance(kmax, str)
+                           and kmax.startswith("+") else None)
+        part_dir = "/".join(
+            f"{c}={_dir_value(partition[c])}" for c in schema.partition_keys)
+        fname = f"data-{new_uuid()}-{i}{os.path.splitext(path)[1]}"
+        rel = "/".join(x for x in (part_dir, BUCKET_DIR.format(b=bucket),
+                                   fname) if x)
+        entries.append(_AddEntry(path, partition, bucket, DataFileMeta(
+            file_name=rel,
+            file_size=size,
+            row_count=st["_row_count"],
+            min_seq=seq_stats.get("min", 0) or 0,
+            max_seq=seq_stats.get("max", 0) or 0,
+            schema_id=schema.id,
+            level=level,
+            stats=st["cols"],
+            creation_time_millis=now,
+            delete_row_count=delete_rows,
+            total_buckets=total_buckets,
+            file_index=file_index or {},
+        )))
+    return entries
 
 
 def state_diff_kinds(old_df, new_df, schema):
@@ -1040,32 +1060,6 @@ def _produce_lookup_changelog(spark, table, schema, adds, prev):
     old_k = old_state.join(delta_keys, keys, "left_semi")
     kinds = state_diff_kinds(old_k, new_k, schema)
     return write_changelog_files(spark, table, schema, kinds)
-
-
-def _transcode_adds_to_avro(spark, adds, schema):
-    """One distributed task per staged file: parquet -> avro container,
-    in-place next to the staging file; entry metadata gets the avro size.
-    The file's OWN schema (incl. system columns on PK tables) drives the
-    avro schema, read from the staged parquet itself."""
-    from .formats.avro_spark import transcode_parquet_to_avro
-
-    jobs = [(e.staging_path, e.staging_path[: -len(".parquet")] + ".avro")
-            for e in adds]
-    import pyarrow.parquet as pq
-    from pyspark.sql.pandas.types import from_arrow_schema
-    from .fileio import for_path
-    with for_path(jobs[0][0]).open_input(jobs[0][0]) as f:
-        file_spark_schema = from_arrow_schema(pq.read_schema(f))
-    sc = spark.sparkContext
-    sizes = dict(
-        sc.parallelize(jobs, min(len(jobs), 64))
-          .map(lambda j: (j[1], transcode_parquet_to_avro(
-              j[0], j[1], file_spark_schema)))
-          .collect())
-    for e in adds:
-        dst = e.staging_path[: -len(".parquet")] + ".avro"
-        e.staging_path = dst
-        e.file.file_size = sizes[dst]
 
 
 class _AddEntry(ManifestEntry):

@@ -1,5 +1,5 @@
 """file.format=avro: pure-Python Object Container codec (Avro 1.11 spec) +
-engine integration — staged-parquet transcode on write, mapInPandas decode
+engine integration — direct Arrow→avro write task, mapInArrow decode
 on read (AvroFileFormat.java:50 parity without the spark-avro jar)."""
 
 from datetime import date, datetime
@@ -493,7 +493,7 @@ def test_native_decoder_fallback_and_kill_switch():
 
 def test_avro_append_spread_capped_at_compaction_trigger(spark, catalog,
                                                          customer):
-    """The transcode-parallelism repartition must not manufacture more
+    """The avro encode-parallelism repartition must not manufacture more
     sub-target-size files than the append small-file compaction trigger:
     a fresh single-commit append stays ONE snapshot (no self-inflicted
     write-time rewrite) with at most `trigger` data files."""

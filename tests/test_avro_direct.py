@@ -1,46 +1,53 @@
-"""Pins for the r16 direct Arrow→avro staging write (formats/avro_direct.py).
+"""Pins for the direct Arrow→avro write (formats/avro_direct.py), the one
+way avro data files get written.
 
-The direct path replaces the staged-parquet + transcode double
-materialization; its correctness surface is (a) identical read-back rows and
-(b) manifest-stats parity with the parquet-footer numbers the staged path
-produced — min/max/null_count feed file pruning, `_SEQUENCE_NUMBER` ordering
-and the `_VALUE_KIND` delete-row proof. `PMN_AVRO_DIRECT=0` forces the old
-staged path on the same tree, so every pin here is a true A/B on identical
-input."""
+Its correctness surface is (a) identical read-back rows and (b) manifest
+stats equal to the parquet-footer numbers Spark's parquet writer produces
+for the same rows — min/max/null_count feed file pruning,
+`_SEQUENCE_NUMBER` ordering and the `_VALUE_KIND` delete-row proof. Every
+pin compares against a parquet table written from the same input with the
+same layout (coalesce(1) / trigger=1 / bucket count), so each is a true
+A/B on identical rows."""
 
+import json
 import math
 import os
+import shutil
 from datetime import date, datetime
+from decimal import Decimal
 
 import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from incubator_paimon_spark.metadata.util import dumps
+from incubator_paimon_spark import P
+from incubator_paimon_spark.metadata.util import _Enc
+from incubator_paimon_spark.types import SEQUENCE_NUMBER
+
+ONE_FILE = {"num-sorted-run.compaction-trigger": "1"}
 
 
-@pytest.fixture()
-def force_staged(monkeypatch):
-    """Context helper: run one write through the pre-r16 staged path."""
-    def _ctx():
-        monkeypatch.setenv("PMN_AVRO_DIRECT", "0")
-    yield _ctx
-    monkeypatch.delenv("PMN_AVRO_DIRECT", raising=False)
+def _sig(obj) -> str:
+    return json.dumps(obj, cls=_Enc, sort_keys=True)
 
 
-def _file_sigs(t, with_file_size=False):
-    """Order-insensitive per-file signature multiset (names carry uuids)."""
-    snap = t.snapshots.latest()
+def _file_sigs(t, drop_cols=(), with_seq=True):
+    """Order-insensitive per-file signature multiset (names carry uuids):
+    row count, stats, seq bounds, delete-row proof, layout, bloom index."""
     sigs = []
-    for e in t.entries_at(snap):
-        sig = {"rc": e.file.row_count, "stats": e.file.stats,
-               "min_seq": e.file.min_seq, "max_seq": e.file.max_seq,
-               "dr": e.file.delete_row_count,
+    for e in t.entries_at(t.snapshots.latest()):
+        stats = {c: s for c, s in e.file.stats.items() if c not in drop_cols}
+        sig = {"rc": e.file.row_count, "stats": stats,
+               "dr": e.file.delete_row_count, "fi": e.file.file_index,
                "part": sorted(e.partition.items()), "bucket": e.bucket}
-        if with_file_size:
-            sig["size"] = e.file.file_size
-        sigs.append(dumps(sig))
+        if with_seq:
+            sig["seq"] = [e.file.min_seq, e.file.max_seq]
+        sigs.append(_sig(sig))
     return sorted(sigs)
+
+
+def _same_rows(a, b):
+    assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
 
 
 EDGE_SCHEMA = T.StructType([
@@ -64,7 +71,6 @@ EDGE_SCHEMA = T.StructType([
 
 
 def _edge_rows():
-    from decimal import Decimal
     return [
         (1, 10, float("nan"), -0.0, float("-0.0"), None, "mid",
          "x" * 5000, "a_string_longer_than_sixteen_chars", True,
@@ -81,8 +87,8 @@ def _edge_rows():
 
 
 def test_direct_stats_parity_edge_types(spark, catalog):
-    """Byte-level stats parity on every footer semantics edge: NaN max
-    (Java total order), -0.0 min, INT96 timestamp no-stats, NTZ full
+    """Byte-level stats parity with parquet footers on every edge: NaN
+    max (Java total order), -0.0 min, INT96 timestamp no-stats, NTZ full
     stats, decimal null-count-only, >4096 string stats drop, truncate(16)
     prefix-min/dropped-max, nested column skipped, all-null column.
     coalesce(1) + trigger=1 keep all rows in ONE file (the avro write
@@ -90,21 +96,17 @@ def test_direct_stats_parity_edge_types(spark, catalog):
     4096-byte stats-drop rule is per-file, so the spot-checks below only
     read cleanly when the edge rows share a footer."""
     df = spark.createDataFrame(_edge_rows(), EDGE_SCHEMA).coalesce(1)
-    one_file = {"file.format": "avro",
-                "num-sorted-run.compaction-trigger": "1"}
-    td = catalog.create_table("db.dx_a", df.schema, options=one_file)
-    td.write(spark, df)
-    os.environ["PMN_AVRO_DIRECT"] = "0"
-    try:
-        ts_ = catalog.create_table("db.dx_b", df.schema, options=one_file)
-        ts_.write(spark, df)
-    finally:
-        os.environ.pop("PMN_AVRO_DIRECT", None)
-    assert _file_sigs(td) == _file_sigs(ts_)
-    # spot-check the semantics themselves on the direct table
-    snap = td.snapshots.latest()
+    ta = catalog.create_table("db.dx_a", df.schema,
+                              options={"file.format": "avro", **ONE_FILE})
+    ta.write(spark, df)
+    tp = catalog.create_table("db.dx_p", df.schema, options=ONE_FILE)
+    tp.write(spark, df)
+    assert _file_sigs(ta) == _file_sigs(tp)
+    _same_rows(ta.read(spark), tp.read(spark))
+    # spot-check the semantics themselves on the avro table
+    snap = ta.snapshots.latest()
     stats = {}
-    for e in td.entries_at(snap):
+    for e in ta.entries_at(snap):
         for c, st in e.file.stats.items():
             cur = stats.setdefault(c, {"null_count": 0})
             cur["null_count"] += st["null_count"]
@@ -135,35 +137,28 @@ def test_direct_stats_parity_edge_types(spark, catalog):
 
 def test_direct_readback_identical_and_pk_system_cols(spark, catalog,
                                                       customer):
-    """PK avro table: read-back rows identical between paths, and the
-    _SEQUENCE_NUMBER min/max + _VALUE_KIND delete proof in the manifests
-    agree (delete_row_count 0 on '+'-only files, None when a -D row is in
-    the file)."""
+    """PK avro table vs PK parquet table from the same commits: read-back
+    rows identical, and the _SEQUENCE_NUMBER min/max + _VALUE_KIND delete
+    proof in the manifests agree (delete_row_count 0 on '+'-only files,
+    None when a -D row is in the file)."""
     from incubator_paimon_spark.types import ROW_KIND
 
     upd = (customer.limit(20)
            .withColumn(ROW_KIND, F.when(F.col("c_custkey") % 2 == 0,
                                         F.lit("-D")).otherwise(F.lit("+I"))))
     tabs = {}
-    for tag, env in (("a", None), ("b", "0")):
-        if env:
-            os.environ["PMN_AVRO_DIRECT"] = env
-        try:
-            t = catalog.create_table(f"db.dxpk_{tag}", customer.schema,
-                                     primary_keys=["c_custkey"],
-                                     options={"file.format": "avro",
-                                              "bucket": "2"})
-            t.write(spark, customer)
-            t.write(spark, upd)
-        finally:
-            os.environ.pop("PMN_AVRO_DIRECT", None)
-        tabs[tag] = t
-    a, b = tabs["a"].read(spark), tabs["b"].read(spark)
-    assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
-    assert _file_sigs(tabs["a"]) == _file_sigs(tabs["b"])
+    for fmt in ("avro", "parquet"):
+        t = catalog.create_table(f"db.dxpk_{fmt}", customer.schema,
+                                 primary_keys=["c_custkey"],
+                                 options={"file.format": fmt, "bucket": "2"})
+        t.write(spark, customer)
+        t.write(spark, upd)
+        tabs[fmt] = t
+    _same_rows(tabs["avro"].read(spark), tabs["parquet"].read(spark))
+    assert _file_sigs(tabs["avro"]) == _file_sigs(tabs["parquet"])
     # the second commit carries -D rows: at least one file must prove it
     drs = [e.file.delete_row_count
-           for e in tabs["a"].entries_at(tabs["a"].snapshots.latest())]
+           for e in tabs["avro"].entries_at(tabs["avro"].snapshots.latest())]
     assert None in drs and 0 in drs
 
 
@@ -178,9 +173,26 @@ def test_direct_rolls_at_max_records_per_file(spark, catalog, customer):
     assert t.read(spark).count() == 100
 
 
+def test_direct_rolls_at_target_file_size_on_first_commit(spark, catalog,
+                                                          customer):
+    """A fresh table has no bytes/row history, so no row cap: the writer
+    still rolls its files at target-file-size of encoded bytes, so a task
+    never holds its whole output."""
+    df = customer.coalesce(1)
+    t = catalog.create_table("db.dx_tfs", customer.schema,
+                             options={"file.format": "avro",
+                                      "target-file-size": "2kb",
+                                      "write-only": "true", **ONE_FILE})
+    t.write(spark, df)
+    entries = t.entries_at(t.snapshots.read(1))
+    assert len(entries) > 1
+    assert sum(e.file.row_count for e in entries) == customer.count()
+    _same_rows(t.read(spark), customer)
+
+
 def test_direct_partitioned_layout_roundtrip(spark, catalog):
-    """Partition dir naming written by the task must decode back to the
-    typed values — including booleans (Hive lowercase), dates and NULL."""
+    """Partition values reported by the task must be the typed values —
+    including booleans, dates and NULL."""
     df = spark.createDataFrame(
         [(1, True, date(2020, 1, 1), "x"),
          (2, False, date(2020, 1, 2), "y"),
@@ -201,49 +213,187 @@ def test_direct_partitioned_layout_roundtrip(spark, catalog):
     assert t.read(spark).filter("flag = true").count() == 2
 
 
-def test_direct_container_schema_matches_transcode(spark, catalog, customer):
-    """The avro writer schema embedded in the container header must be the
-    same one the transcode path derived from the staged parquet (union
-    nullability included), so any avro reader sees identical files."""
-    import json
-
+def _header_schema(t):
     from incubator_paimon_spark.formats.avro_codec import MAGIC
 
-    def header_schema(t):
-        e = t.new_scan().plan().entries[0]
-        path = os.path.join(t.path, e.file.file_name)
-        with open(path, "rb") as f:
-            blob = f.read(1 << 16)
-        assert blob[:4] == MAGIC
-        i = blob.index(b'{"type": "record"')
-        # the schema JSON is length-prefixed; parse greedily via decoder
-        dec = json.JSONDecoder()
-        obj, _ = dec.raw_decode(blob[i:i + 60000].decode("utf-8",
-                                                         "replace"))
-        return obj
-
-    td = catalog.create_table("db.dx_sch_a", customer.schema,
-                              options={"file.format": "avro"})
-    td.write(spark, customer)
-    os.environ["PMN_AVRO_DIRECT"] = "0"
-    try:
-        ts_ = catalog.create_table("db.dx_sch_b", customer.schema,
-                                   options={"file.format": "avro"})
-        ts_.write(spark, customer)
-    finally:
-        os.environ.pop("PMN_AVRO_DIRECT", None)
-    assert header_schema(td) == header_schema(ts_)
+    e = t.new_scan().plan().entries[0]
+    path = os.path.join(t.path, e.file.file_name)
+    with open(path, "rb") as f:
+        blob = f.read(1 << 16)
+    assert blob[:4] == MAGIC
+    i = blob.index(b'{"type": "record"')
+    obj, _ = json.JSONDecoder().raw_decode(
+        blob[i:i + 60000].decode("utf-8", "replace"))
+    return obj
 
 
-def test_bloom_indexed_avro_keeps_staged_path(spark, catalog, customer):
-    """file-index.bloom-filter.columns on an avro table takes the staged
-    fallback (the bloom positions job scans staged parquet) and still
-    produces the index."""
-    t = catalog.create_table("db.dx_bloom", customer.schema,
-                             options={"file.format": "avro",
-                                      "file-index.bloom-filter.columns":
-                                          "c_name"})
-    t.write(spark, customer)
-    entries = t.new_scan().plan().entries
-    assert entries and all("c_name" in e.file.file_index for e in entries)
-    assert t.read(spark).count() == customer.count()
+def test_container_header_schema_golden(spark, catalog):
+    """The avro writer schema embedded in the container header is pinned,
+    union nullability and logical types included, so any avro reader keeps
+    seeing the same files."""
+    df = spark.createDataFrame(
+        [(1, "a", 1.5, date(2020, 1, 1), Decimal("1.25"))],
+        "id bigint not null, s string, x double, d date, dec decimal(10,2)")
+    t = catalog.create_table("db.dx_hdr", df.schema,
+                             primary_keys=["id"],
+                             options={"file.format": "avro", "bucket": "1"})
+    t.write(spark, df)
+    assert _header_schema(t) == {
+        "type": "record", "name": "row", "fields": [
+            {"name": "id", "type": "long"},
+            {"name": "s", "type": ["null", "string"]},
+            {"name": "x", "type": ["null", "double"]},
+            {"name": "d", "type": ["null", {"type": "int",
+                                            "logicalType": "date"}]},
+            {"name": "dec", "type": ["null", {
+                "type": "bytes", "logicalType": "decimal", "precision": 10,
+                "scale": 2}]},
+            {"name": "_VALUE_KIND", "type": "string"},
+            {"name": "_SEQUENCE_NUMBER", "type": "long"}]}
+
+
+def test_nested_map_avro_append(spark, catalog):
+    """A map nested in an array or struct cannot be hashed by Spark; the
+    single-partition avro append's spread key must skip such columns."""
+    df = spark.createDataFrame(
+        [(1, [{"a": 1}], {"m": {"k": 2}}), (2, [], {"m": None}),
+         (3, None, None)],
+        "id int, am array<map<string,int>>, sm struct<m: map<string,int>>"
+    ).coalesce(1)
+    t = catalog.create_table("db.dx_nmap", df.schema,
+                             options={"file.format": "avro"})
+    t.write(spark, df)
+    assert (sorted(t.read(spark).collect(), key=lambda r: r.id)
+            == sorted(df.collect(), key=lambda r: r.id))
+
+
+def test_avro_bloom_index_equals_parquet(spark, catalog):
+    """The bloom index the avro task computes from Arrow values equals the
+    one the parquet path's Spark scan derives, on every probeable type
+    (integral, string, date), including an all-NULL column (no entry) and
+    a saturated one (None)."""
+    n = 1200
+    df = (spark.range(n).coalesce(1)
+          .select(F.col("id").cast("int").alias("i"),
+                  (F.col("id") % 7).cast("smallint").alias("sm"),
+                  (F.col("id") * 1000).alias("big"),
+                  F.concat(F.lit("s"), (F.col("id") % 13).cast("string"))
+                   .alias("s"),
+                  F.date_add(F.lit("2020-01-01").cast("date"),
+                             (F.col("id") % 5).cast("int")).alias("d"),
+                  F.lit(None).cast("string").alias("nul")))
+    cols = "i,sm,big,s,d,nul"
+    ta = catalog.create_table("db.dx_bl_a", df.schema, options={
+        "file.format": "avro", "file-index.bloom-filter.columns": cols,
+        **ONE_FILE})
+    tp = catalog.create_table("db.dx_bl_p", df.schema, options={
+        "file-index.bloom-filter.columns": cols, **ONE_FILE})
+    ta.write(spark, df)
+    tp.write(spark, df)
+    assert _file_sigs(ta) == _file_sigs(tp)
+    fi = ta.entries_at(ta.snapshots.latest())[0].file.file_index
+    assert fi["i"] is None and fi["big"] is None      # saturated
+    assert "nul" not in fi                             # all NULL
+    assert all(fi[c] for c in ("sm", "s", "d"))
+    # the index prunes: an absent in-range value skips the file
+    assert len(ta.new_scan().plan(P.eq("s", "s55")).entries) == 0
+    assert len(ta.new_scan().plan(P.eq("s", "s3")).entries) == 1
+
+
+@pytest.mark.parametrize("fmt", ["parquet", "avro"])
+def test_bloom_never_prunes_unprobeable_types(spark, catalog, fmt):
+    """The writer hashes Spark's cast(string), the planner str(literal);
+    for boolean, double, decimal and timestamp those differ, so the
+    planner must not probe their blooms: every pruned read equals the
+    unpruned filter."""
+    ts = datetime(2021, 3, 4, 5, 6, 7, 123456)
+    df = spark.createDataFrame(
+        [(1, True, 1e20, Decimal("12.3"), ts),
+         (5, False, 2.5, Decimal("1.00"), datetime(2020, 1, 1))],
+        "id int, b boolean, x double, dec decimal(10,2), tsn timestamp_ntz")
+    t = catalog.create_table(f"db.dx_blt_{fmt}", df.schema, options={
+        "file.format": fmt, **ONE_FILE,
+        "file-index.bloom-filter.columns": "id,b,x,dec,tsn"})
+    t.write(spark, df.coalesce(1))
+    full = t.read(spark)
+    for col, lit in (("b", True), ("x", 1e20), ("dec", Decimal("12.3")),
+                     ("tsn", ts)):
+        got = t.read(spark, predicate=P.eq(col, lit)).collect()
+        want = full.filter(F.col(col) == F.lit(lit)).collect()
+        assert len(want) == 1 and got == want, (col, got)
+    # probeable column: an absent in-range value (stats keep it) is still
+    # pruned by the bloom
+    assert len(t.new_scan().plan(P.eq("id", 3)).entries) == 0
+    assert len(t.new_scan().plan(P.eq("id", 5)).entries) == 1
+
+
+def _dsv2_pairs(spark, catalog, src, tag, **table_kw):
+    """(DataSource-written avro table, Table.write avro table) from the
+    same rows: one input partition, so both write one file per bucket."""
+    from incubator_paimon_spark.datasource import register
+
+    register(spark)
+    opts = {"file.format": "avro", **table_kw.pop("options", {})}
+    tw = catalog.create_table(f"db.{tag}_tw", src.schema, options=opts,
+                              **table_kw)
+    tw.write(spark, src)
+    ds = catalog.create_table(f"db.{tag}_ds", src.schema, options=opts,
+                              **table_kw)
+    src.write.format("paimon").mode("append").option("path", ds.path).save()
+    return ds, tw
+
+
+@pytest.mark.parametrize("bloom", [False, True])
+@pytest.mark.parametrize("pk", [False, True])
+def test_dsv2_avro_matches_table_write(spark, catalog, customer, pk, bloom):
+    """df.write.format("paimon") on an avro table encodes in the write task
+    with the same encoder, stats rules and bloom hash as Table.write: the
+    files' stats, seq bounds and bloom index are equal."""
+    src = customer.coalesce(1)
+    kw = {"options": {"bucket": "2"} if pk else dict(ONE_FILE)}
+    if bloom:
+        kw["options"]["file-index.bloom-filter.columns"] = \
+            "c_name,c_nationkey"
+    if pk:
+        kw["primary_keys"] = ["c_custkey"]
+    ds, tw = _dsv2_pairs(spark, catalog, src,
+                         f"dsa_{int(pk)}{int(bloom)}", **kw)
+    files = [e.file.file_name for e in ds.entries_at(ds.snapshots.latest())]
+    assert files and all(f.endswith(".avro") for f in files)
+    assert _file_sigs(ds) == _file_sigs(tw)
+    _same_rows(ds.read(spark), tw.read(spark))
+
+
+@pytest.mark.skipif(shutil.which("javac") is None,
+                    reason="needs a JDK compiler")
+@pytest.mark.parametrize("bloom", [False, True])
+@pytest.mark.parametrize("pk", [False, True])
+def test_sql_insert_avro_matches_table_write(spark, catalog, customer, pk,
+                                             bloom):
+    """SQL INSERT through the native catalog on an avro table: data-column
+    stats and bloom index equal a Table.write avro table from the same
+    rows (the clustered write numbers _SEQUENCE_NUMBER per task, so seq
+    bounds are not compared)."""
+    from incubator_paimon_spark.jvm_catalog import install_sql_catalog
+
+    tag = f"{int(pk)}{int(bloom)}"
+    install_sql_catalog(spark, f"pdx{tag}", catalog.warehouse)
+    opts = {"file.format": "avro"}
+    if bloom:
+        opts["file-index.bloom-filter.columns"] = "c_name"
+    kw = {}
+    if pk:
+        opts["bucket"] = "2"
+        kw["primary_keys"] = ["c_custkey"]
+    else:
+        opts.update(ONE_FILE)
+    tw = catalog.create_table(f"db.sqa_{tag}_tw", customer.schema,
+                              options=opts, **kw)
+    tw.write(spark, customer.coalesce(1))
+    ds = catalog.create_table(f"db.sqa_{tag}_ds", customer.schema,
+                              options=opts, **kw)
+    customer.coalesce(1).createOrReplaceTempView("sqa_src")
+    spark.sql(f"INSERT INTO pdx{tag}.db.sqa_{tag}_ds SELECT * FROM sqa_src")
+    assert (_file_sigs(ds, drop_cols=(SEQUENCE_NUMBER,), with_seq=False)
+            == _file_sigs(tw, drop_cols=(SEQUENCE_NUMBER,), with_seq=False))
+    _same_rows(ds.read(spark), tw.read(spark))

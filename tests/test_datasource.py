@@ -628,8 +628,8 @@ def test_stream_writer_partitioned_append_layout(spark, warehouse, orders):
 
 def test_batch_writer_honors_file_format(spark, warehouse, customer):
     """r13: SQL/df writes through the DataSource writer honor
-    `file.format` — orc staged directly, avro staged as parquet and
-    transcoded at commit (the same order Table.write uses) — and
+    `file.format` — orc via pyarrow, avro via the same in-task encoder
+    Table.write uses — and
     merge-on-read returns the upserted state through either format."""
     from incubator_paimon_spark import Catalog
     from incubator_paimon_spark.datasource import register

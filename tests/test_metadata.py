@@ -359,7 +359,7 @@ class TestPlanningScale:
         t0 = time.time()
         pred = P.between("k", 10_000_000, 11_000_000)
         kept = [e for e in entries
-                if _stats_keep(e, pred) and _bloom_keep(e, pred)]
+                if _stats_keep(e, pred) and _bloom_keep(e, pred, {})]
         schema = TableSchema(id=0, fields=[], highest_field_id=0,
                              partition_keys=[], primary_keys=["k"], options={})
         raw, merge = _split_raw_buckets(entries, 5, table=object(),
