@@ -166,33 +166,6 @@ def _prior_gated(sf: float) -> dict[str, float]:
         if got_sf != sf or int(m.group(1)) <= best_n:
             continue
         qs = dict(inner.get("queries") or {})
-        if not qs and isinstance(data.get("tail"), str):
-            # since r11 the artifact keeps only a FRONT-TRUNCATED tail of
-            # the bench line (parsed: null). r14+ lines put `queries`
-            # LAST so the block survives — parse it out; older tails
-            # recover from the rep_spread fragments instead (min == the
-            # best-of-reps value timed() records)
-            t = data["tail"]
-            i = t.rfind('"queries": {')
-            if i >= 0:
-                j = t.index('{', i)
-                depth = 0
-                for k2 in range(j, len(t)):
-                    if t[k2] == '{':
-                        depth += 1
-                    elif t[k2] == '}':
-                        depth -= 1
-                        if depth == 0:
-                            try:
-                                qs = json.loads(t[j:k2 + 1])
-                            except ValueError:
-                                pass
-                            break
-            if not qs:
-                qs = {mm.group(1): float(mm.group(2))
-                      for mm in re.finditer(
-                          r'"(\w+)":\s*\{"reps":\s*\d+,\s*"min":\s*([\d.]+)',
-                          t)}
         if qs:
             best_n, prior = int(m.group(1)), qs
     return prior

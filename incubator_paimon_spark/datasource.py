@@ -163,6 +163,18 @@ def _load_table(options):
     return Table(path, branch=options.get("branch"))
 
 
+def _read_file(path: str):
+    """A whole data file of any format as one Arrow table."""
+    if path.endswith(".orc"):
+        import pyarrow.orc as orc
+        return orc.ORCFile(path).read()
+    if path.endswith(".avro"):
+        from .formats.avro_spark import read_avro_arrow
+        return read_avro_arrow(path)
+    import pyarrow.parquet as pq
+    return pq.read_table(path)
+
+
 @dataclass
 class _Split(InputPartition):
     files: list          # absolute data-file paths
@@ -409,18 +421,9 @@ class PaimonBatchReaderNoPushdown(DataSourceReader):
                     yield from project(tb).to_batches()
             return
 
-        def read_whole(f):
-            if f.endswith(".orc"):
-                import pyarrow.orc as orc
-                return orc.ORCFile(f).read()
-            if f.endswith(".avro"):
-                from .formats.avro_spark import read_avro_arrow
-                return read_avro_arrow(f)
-            return pq.read_table(f)
-
         tables = []
         for f, rel in zip(split.files, split.rel_names):
-            tables.append(masked(read_whole(f), rel, 0))
+            tables.append(masked(_read_file(f), rel, 0))
         tbl = pa.concat_tables(tables, promote_options="default")
         if target is not None:  # evolution null-fill before the merge
             for name in cols:
@@ -432,16 +435,20 @@ class PaimonBatchReaderNoPushdown(DataSourceReader):
             # bucket-local merge-on-read (deduplicate: max (seq, _SEQ) wins;
             # first-row: min wins). Null user-seq sorts smallest, matching
             # _dedup's asc_nulls_first/desc_nulls_last comparator.
-            df = tbl.to_pandas()
+            # pandas picks the winning row positions only; the rows come
+            # from the Arrow table (a pandas round trip turns NaN into
+            # NULL and a nullable bigint into double)
+            order = split.seq_fields + [SEQUENCE_NUMBER]
+            df = tbl.select(list(dict.fromkeys(
+                split.pks + order + [VALUE_KIND]))).to_pandas()
             if split.ignore_delete:
                 df = df[df[VALUE_KIND] != "-D"]
-            order = split.seq_fields + [SEQUENCE_NUMBER]
             df = df.sort_values(order, kind="stable", na_position="first")
             g = df.groupby(split.pks, as_index=False, sort=False)
             df = g.head(1) if split.merge_engine == "first-row" else g.tail(1)
             df = df[df[VALUE_KIND].isin(list(ADD_KINDS))]
-            tbl = pa.Table.from_pandas(df[cols], preserve_index=False)
-            yield from conform(tbl).to_batches()
+            yield from conform(tbl.take(pa.array(df.index.to_numpy()))
+                               ).to_batches()
         else:
             yield from project(tbl).to_batches()
 
@@ -681,15 +688,7 @@ class PaimonStreamReaderDist(DataSourceStreamReader):
         # runs on an executor: no self/table state, Arrow end-to-end
         import pyarrow as pa
         import pyarrow.ipc as ipc
-        if partition.path.endswith(".orc"):
-            import pyarrow.orc as orc
-            tbl = orc.ORCFile(partition.path).read()
-        elif partition.path.endswith(".avro"):
-            from .formats.avro_spark import read_avro_arrow
-            tbl = read_avro_arrow(partition.path)
-        else:
-            import pyarrow.parquet as pq
-            tbl = pq.read_table(partition.path)
+        tbl = _read_file(partition.path)
         target = ipc.read_schema(pa.py_buffer(partition.arrow_schema_bytes))
         n = tbl.num_rows
         inject = dict(partition.inject)
@@ -761,7 +760,6 @@ class PaimonStreamReader(SimpleDataSourceStreamReader):
     def readBetweenOffsets(self, start, end):
         # returns a list iterator (not a generator): the engine's prefetch
         # cache copy.copy()s the iterator for replay
-        import pyarrow.parquet as pq
         t = self.table
         schema = t.schema
         cols = schema.field_names()
@@ -772,12 +770,7 @@ class PaimonStreamReader(SimpleDataSourceStreamReader):
             snap = t.snapshots.read(sid)
             entries = t.stream_entries(snap, self.changelog)
             for e in entries:
-                fpath = os.path.join(t.path, e.file.file_name)
-                if fpath.endswith(".orc"):
-                    import pyarrow.orc as orc
-                    tbl = orc.ORCFile(fpath).read()
-                else:
-                    tbl = pq.read_table(fpath)
+                tbl = _read_file(os.path.join(t.path, e.file.file_name))
                 have_kind = VALUE_KIND in tbl.column_names
                 # hive-migrated files lack the partition columns in their
                 # bytes (partition_in_data=False): inject from the manifest
@@ -806,9 +799,9 @@ class _BucketedTaskWriter:
     """Shared task-side machinery of the batch and streaming DataSource
     writers: engine bucket per row (vectorized murmur replica of
     write.bucket_expr), LSN/_VALUE_KIND system columns for PK tables,
-    one SORTED level-0 file per (partition, bucket) with its stats and
-    bloom index computed in the task, and the driver-side ADD-entry
-    builder + commit tail shared with Table.write."""
+    SORTED level-0 files per (partition, bucket) written with their stats
+    and bloom index by the layout writer Table.write's avro uses, and the
+    driver-side ADD-entry builder + commit tail shared with Table.write."""
 
     def _configure(self, options, verb: str):
         self.options = options
@@ -831,9 +824,8 @@ class _BucketedTaskWriter:
         self.sort_keys = schema.trimmed_primary_keys() if self.is_pk else []
         self.rowkind_field = opts.rowkind_field if self.is_pk else None
         self.part_keys = list(schema.partition_keys)
-        # file.format parity: parquet/orc via pyarrow, avro via the same
-        # encoder and stats rules Table.write uses (formats/avro_direct.py)
         self.file_format = opts.file_format
+        self.compression = opts.file_compression
         self.stats_mode = opts.metadata_stats_mode
         self.target_size = opts.target_file_size
         self.bloom_cols = [c for c in opts.bloom_filter_columns
@@ -862,34 +854,43 @@ class _BucketedTaskWriter:
         return out
 
     def _stage_task(self, iterator, seq_base: int):
-        """Executor side: group the task's Arrow batches into one sorted
-        staged file per (partition spec, bucket), reporting each file's
-        size, stats and bloom index from here — the commit reads no data."""
+        """Executor side: the DataSource-specific steps (raw dynamic-bucket
+        staging, PK system columns, the per-row bucket, the PK sort), then
+        the shared layout write (formats/avro_direct.write_layout), which
+        reports each file's size, stats and bloom index from here — the
+        commit reads no data. Append tasks stream batch by batch; PK tasks
+        hold their input for the sort."""
+        import itertools
+
         import numpy as np
         import pyarrow as pa
         import pyarrow.compute as pc
+        from pyspark.sql.pandas.types import from_arrow_schema
 
-        from .fileio import for_path
-        from .metadata.stats import collect_file_stats
-        from .metadata.util import new_uuid
-        from .write import FileBloom, _partition_value
-        io = for_path(self.staging)
-        batches = list(iterator)
-        if not batches:
+        from .formats.avro_direct import FileSpec, write_layout
+        from .write import BUCKET_COL
+        batches = iter(iterator)
+        first = next(batches, None)
+        if first is None:
             return _WroteFiles(files=[])
-        tbl = pa.Table.from_batches(batches)
+        batches = itertools.chain([first], batches)
         if self.dynamic_assign:
             # raw staging: one parquet per task; the commit runs the
             # DataFrame assigner over these
+            from .fileio import for_path
+            from .metadata.util import new_uuid
             p = os.path.join(self.staging, f"raw-{new_uuid()}.parquet")
-            io.write_parquet(tbl, p)
+            for_path(self.staging).write_parquet(
+                pa.Table.from_batches(list(batches)), p)
             return _WroteFiles(files=[(p,)])
-        n = tbl.num_rows
-        bucketed = self.num_buckets > 0 and bool(self.bucket_keys)
+        tables = (pa.Table.from_batches([b]) for b in batches)
+        schema = first.schema
         if self.is_pk:
             from pyspark import TaskContext
 
             from .types import ALL_KINDS
+            tbl = pa.Table.from_batches(list(batches))
+            n = tbl.num_rows
             ctx = TaskContext.get()
             pid = ctx.partitionId() if ctx is not None else 0
             if self.rowkind_field is not None:
@@ -908,72 +909,24 @@ class _BucketedTaskWriter:
             # monotonically_increasing_id layout Table.write uses
             seq = pa.array(seq_base + (pid << 33) + np.arange(n),
                            pa.int64())
-            tbl = tbl.append_column(SEQUENCE_NUMBER, seq) \
-                     .append_column(VALUE_KIND, kind)
-        if self.file_format == "avro":
-            from pyspark.sql.pandas.types import from_arrow_schema
-
-            from .formats.avro_direct import AvroFileSpec, _GroupWriter
-            avro = AvroFileSpec(
-                from_arrow_schema(tbl.schema, prefer_timestamp_ntz=True),
-                self.staging, self.stats_mode, None, self.bloom_cols,
-                self.target_size)
-        group_keys = list(self.part_keys)
-        if bucketed:
-            tbl = tbl.append_column(
-                "__bucket", pa.array(self._row_buckets(tbl), pa.int32()))
-            group_keys.append("__bucket")
-        files = []
-
-        def emit(sub, spec, bucket):
-            if self.sort_keys:
-                sub = sub.sort_by([(k, "ascending")
-                                   for k in self.sort_keys
-                                   + [SEQUENCE_NUMBER]])
-            if bucketed:
-                sub = sub.drop_columns(["__bucket"])
-            part = {c: _partition_value(spec[c]) for c in self.part_keys}
-            if self.file_format == "avro":
-                w = _GroupWriter(avro, part, bucket)
-                w.append(sub)
-                w.close_file()
-                files.extend(w.results)
-                return
-            if self.file_format == "orc":
-                import pyarrow.orc as orc
-                p = os.path.join(self.staging, f"data-{new_uuid()}.orc")
-                buf = pa.BufferOutputStream()
-                orc.write_table(sub, buf)
-                io.write_overwrite(p, buf.getvalue().to_pybytes())
-            else:
-                p = os.path.join(self.staging,
-                                 f"data-{new_uuid()}.parquet")
-                io.write_parquet(sub, p)
-            bloom = FileBloom(self.bloom_cols)
-            bloom.add(sub)
-            files.append((p, io.size(p), part, bucket,
-                          collect_file_stats(p, self.stats_mode),
-                          bloom.index()))
-
-        if not group_keys:
-            emit(tbl, {}, 0)
-        else:
-            # ONE grouped pass (was: a fresh full-table equality mask per
-            # distinct spec — O(specs x rows), quadratic at wide-partition
-            # loads): group row indices by (partition spec, bucket), then
-            # gather each group's rows once. Encounter order is preserved
-            # (single-threaded hash aggregate), so append-table row order
-            # matches the old filter-based path.
-            grouped = (tbl.select(group_keys)
-                       .append_column("__rowidx",
-                                      pa.array(np.arange(n), pa.int64()))
-                       .group_by(group_keys, use_threads=False)
-                       .aggregate([("__rowidx", "list")]))
-            lists = grouped.column("__rowidx_list").combine_chunks()
-            for i, spec in enumerate(grouped.select(group_keys).to_pylist()):
-                emit(tbl.take(lists[i].values), spec,
-                     spec.get("__bucket", 0))
-        return _WroteFiles(files=files)
+            # one sort of the task keeps every layout group sorted
+            tbl = (tbl.append_column(SEQUENCE_NUMBER, seq)
+                      .append_column(VALUE_KIND, kind)
+                      .sort_by([(k, "ascending") for k in self.sort_keys
+                                + [SEQUENCE_NUMBER]]))
+            schema, tables = tbl.schema, [tbl]
+        layout = list(self.part_keys)
+        if self.num_buckets > 0 and self.bucket_keys:
+            tables = (t.append_column(BUCKET_COL, pa.array(
+                          self._row_buckets(t), pa.int32()))
+                      for t in tables)
+            layout.append(BUCKET_COL)
+        spec = FileSpec(
+            self.file_format,
+            from_arrow_schema(schema, prefer_timestamp_ntz=True),
+            self.staging, self.stats_mode, None, self.bloom_cols,
+            self.target_size, self.compression)
+        return _WroteFiles(files=write_layout(spec, tables, layout))
 
     def _overwrite_mode(self, schema):
         """(static_spec | True | None, dynamic: bool) from the write
@@ -1094,9 +1047,10 @@ class PaimonBatchWriter(_BucketedTaskWriter, DataSourceArrowWriter):
     """df.write.format("paimon") / SQL ``INSERT INTO`` for append tables
     AND fixed-bucket tables (PK or bucket-keyed append).
 
-    Append (bucket-unaware): each task groups its Arrow batches by the
-    partition columns and writes one parquet file per spec - no extra
-    shuffle imposed.
+    Append (bucket-unaware): each task streams its Arrow batches through
+    the shared layout writer (formats/avro_direct.write_layout), which
+    groups them by the partition columns and writes files in the table's
+    file.format, rolled at target-file-size - no extra shuffle imposed.
 
     Fixed-bucket (``bucket`` > 0): the task computes the engine's bucket
     per row and writes one SORTED file per (partition, bucket); PK rows
@@ -1141,12 +1095,13 @@ class PaimonStreamWriter(_BucketedTaskWriter, DataSourceStreamArrowWriter):
     shared per-row bucketing, dynamic-bucket via raw staging + the
     Table.write assigner at commit.
 
-    Executors stage one sorted parquet file per (partition, bucket) per
-    micro-batch task; commit() moves them into the table layout and
-    snapshots with commit_identifier = batchId - replaying a batch after
-    failure is a metadata no-op, the same exactly-once contract as
-    ExactlyOnceBatchSink / TableCommitImpl filterAndCommit. PK batches
-    read the LSN base from the latest snapshot inside the task (the
+    Executors stage sorted data files (the table's file.format, rolled at
+    target-file-size) per (partition, bucket) per micro-batch task
+    through the shared layout writer; commit() moves them into the table
+    layout and snapshots with commit_identifier = batchId - replaying a
+    batch after failure is a metadata no-op, the same exactly-once
+    contract as ExactlyOnceBatchSink / TableCommitImpl filterAndCommit. PK
+    batches read the LSN base from the latest snapshot inside the task (the
     previous batch's commit is durable before the next batch plans), and
     changelog producers run in the shared commit tail."""
 

@@ -1,16 +1,14 @@
-"""Per-file column statistics from Parquet footers.
+"""Per-file column statistics of files this engine did not encode itself.
 
 The reference collects stats in the writer (io/StatsCollectingSingleFileWriter,
 SimpleColStatsCollector modes none/counts/truncate(16)/full —
-paimon-common/.../statistics/*.java:25-32). We get the same numbers for free
-from Parquet footers (min/max/null-count per row group), so stats collection
-is a metadata-only read of each freshly written file — O(files), no data scan.
-
-Scale note: this runs where the file was written. The batch writer extracts
-footer stats inside the same Spark task that wrote the file (see
-write.py) so the driver only ever sees DataFileMeta dicts — at 100 TB the
-driver cost stays O(#files) JSON, identical to the reference's CommitMessage
-flow.
+paimon-common/.../statistics/*.java:25-32), and so do the data-file write
+tasks here (formats/avro_direct._ColStats over the Arrow rows). What is
+left for this module is files written by Spark itself: Table.write's
+Spark-native parquet/orc staging, changelog files and migrate sources.
+Parquet footers give the numbers for free (min/max/null-count per row
+group), so that is a metadata-only read of each file — O(files), no data
+scan. ORC files are read once and go through the writers' own rule.
 """
 
 from __future__ import annotations
@@ -43,85 +41,71 @@ def _truncate(v, mode: str, is_max: bool):
 def collect_file_stats(path: str, stats_mode: str = "truncate(16)") -> dict:
     """Returns {"_row_count": n, "cols": {col: {min,max,null_count}}}.
     Footer reads route through FileIO so staging on s3://hdfs:// works; a
-    plain local path keeps the direct open (no behavior change). ORC
-    files (migrate sources) compute stats from one read — pyarrow does
-    not expose ORC column statistics, and migration is a one-time pass."""
+    plain local path keeps the direct open (no behavior change). A column
+    whose footer lacks statistics (Spark's INT96 timestamps, parquet-mr's
+    ≥4096-byte drop) gets no entry: its null count is unknown, not 0."""
     from ..fileio import for_path
     if path.endswith(".orc"):
-        return _collect_orc_stats(path, stats_mode)
+        return _orc_stats(path, stats_mode)
     with for_path(path).open_input(path) as f:
         md = pq.ParquetFile(f).metadata
     out: dict = {}
     row_count = md.num_rows
     if stats_mode == "none":
         return {"_row_count": row_count, "cols": {}}
-    ncols = md.num_columns
-    for ci in range(ncols):
+    for ci in range(md.num_columns):
         name = md.schema.column(ci).path  # dotted path for nested leaves
-        if "." in name:  # nested columns: skip leaf stats (match reference's top-level stats)
+        rgs = [md.row_group(rg).column(ci).statistics
+               for rg in range(md.num_row_groups)]
+        # nested leaves: skipped (match reference's top-level stats); no
+        # footer statistics: no entry (the null count is unknown, not 0)
+        if "." in name or any(st is None or not st.has_null_count
+                              for st in rgs):
             continue
-        mn = mx = None
-        nulls = 0
-        have = True
-        for rg in range(md.num_row_groups):
-            col = md.row_group(rg).column(ci)
-            st = col.statistics
-            if st is None or not st.has_min_max:
-                have = False
-                if st is not None and st.null_count is not None:
-                    nulls += st.null_count
-                continue
-            nulls += st.null_count or 0
-            try:
-                smin, smax = st.min, st.max
-            except Exception:  # pyarrow can't cast stats for this type
-                have = False   # (e.g. some decimal/interval encodings):
-                continue       # skip min/max, keep null counts — pruning
-            if mn is None or smin < mn:  # stays conservative
-                mn = smin
-            if mx is None or smax > mx:
-                mx = smax
-        entry = {"null_count": nulls}
-        if have and mn is not None and stats_mode != "counts":
-            tmn = _truncate(mn, stats_mode, is_max=False)
-            tmx = _truncate(mx, stats_mode, is_max=True)
-            if tmn is not None:
-                entry["min"] = _jsonable(tmn)
-            if tmx is not None:
-                entry["max"] = _jsonable(tmx)
+        entry = {"null_count": sum(st.null_count for st in rgs)}
         out[name] = entry
+        if stats_mode == "counts" or not all(st.has_min_max for st in rgs):
+            continue
+        try:
+            mn, mx = min(st.min for st in rgs), max(st.max for st in rgs)
+        except Exception:  # pyarrow can't cast stats for this type (e.g.
+            continue       # some decimal encodings): null counts only
+        tmn = _truncate(mn, stats_mode, is_max=False)
+        tmx = _truncate(mx, stats_mode, is_max=True)
+        if tmn is not None:
+            entry["min"] = _jsonable(tmn)
+        if tmx is not None:
+            entry["max"] = _jsonable(tmx)
     return {"_row_count": row_count, "cols": out}
 
 
-def _collect_orc_stats(path: str, stats_mode: str) -> dict:
-    """ORC variant for migrate sources: one read, min/max/null per
-    top-level orderable column (same output shape and truncate rules as
-    the parquet footer path, so pruning code sees no difference)."""
+def _orc_stats(path: str, stats_mode: str) -> dict:
+    """ORC files (Table.write's Spark-native ORC staging, migrate sources):
+    pyarrow exposes no ORC column statistics, so read the file stripe by
+    stripe and apply the writers' own rule (formats/avro_direct._ColStats).
+    Spark's ORC writer stores NTZ as a bigint tagged
+    `spark.sql.catalyst.type` and TimestampType as a plain ORC timestamp
+    of the UTC instant; both are mapped back to the µs Arrow types Spark
+    hands a writer."""
     import pyarrow as pa
-    import pyarrow.compute as pc
     import pyarrow.orc as orc
 
     from ..fileio import for_path
+    from ..formats.avro_direct import arrow_file_stats
+
+    def as_spark(batch):
+        cols = []
+        for fld, col in zip(batch.schema, batch.columns):
+            if (fld.metadata or {}).get(b"spark.sql.catalyst.type") \
+                    == b"timestamp_ntz":
+                col = col.cast(pa.timestamp("us"))
+            elif pa.types.is_timestamp(fld.type):
+                col = col.cast(pa.timestamp("us", fld.type.tz or "UTC"))
+            cols.append(col)
+        return pa.table(cols, names=batch.schema.names)
+
     with for_path(path).open_input(path) as f:
-        tbl = orc.ORCFile(f).read()
-    out: dict = {}
-    if stats_mode == "none":
-        return {"_row_count": tbl.num_rows, "cols": {}}
-    for name in tbl.column_names:
-        col = tbl[name]
-        entry = {"null_count": col.null_count}
-        t = col.type
-        orderable = not (pa.types.is_nested(t) or pa.types.is_binary(t)
-                         or pa.types.is_large_binary(t) or pa.types.is_null(t))
-        if (orderable and stats_mode != "counts"
-                and col.null_count < len(col)):
-            mm = pc.min_max(col)
-            mn, mx = mm["min"].as_py(), mm["max"].as_py()
-            tmn = _truncate(mn, stats_mode, is_max=False)
-            tmx = _truncate(mx, stats_mode, is_max=True)
-            if tmn is not None:
-                entry["min"] = _jsonable(tmn)
-            if tmx is not None:
-                entry["max"] = _jsonable(tmx)
-        out[name] = entry
-    return {"_row_count": tbl.num_rows, "cols": out}
+        o = orc.ORCFile(f)
+        return arrow_file_stats(
+            (as_spark(o.read_stripe(i)) for i in range(o.nstripes)),
+            stats_mode)

@@ -707,50 +707,6 @@ def _path_key(p: str) -> str:
     return urllib.parse.unquote(u.path)
 
 
-def _collect_stats_spark(spark, files: list[str], fmt: str, schema,
-                         stats_mode: str) -> dict:
-    """Per-file column stats for formats without a pyarrow footer API (ORC):
-    ONE distributed agg grouped by _metadata.file_path — same numbers as the
-    footer path, O(files) rows back to the driver."""
-    from .metadata.stats import _jsonable, _truncate
-
-    df = spark.read.format(fmt).load(files)
-    want_minmax = stats_mode not in ("none", "counts")
-    simple = {f.name: f.dataType.simpleString() for f in df.schema.fields}
-    aggs = [F.count(F.lit(1)).alias("__rc")]
-    for c, dt in simple.items():
-        if stats_mode == "none":
-            continue
-        aggs.append(F.sum(F.when(F.col(c).isNull(), 1).otherwise(0))
-                    .alias(f"__n_{c}"))
-        if want_minmax and not dt.startswith(("array", "map", "struct",
-                                              "binary")):
-            aggs.append(F.min(c).alias(f"__mn_{c}"))
-            aggs.append(F.max(c).alias(f"__mx_{c}"))
-    rows = (df.groupBy(F.col("_metadata.file_path").alias("__f"))
-              .agg(*aggs).collect())
-    out = {}
-    for r in rows:
-        d = r.asDict()
-        local = urllib.parse.unquote(urllib.parse.urlparse(d["__f"]).path)
-        cols = {}
-        for c in simple:
-            if stats_mode == "none":
-                continue
-            entry = {"null_count": d[f"__n_{c}"] or 0}
-            mn, mx = d.get(f"__mn_{c}"), d.get(f"__mx_{c}")
-            if mn is not None:
-                tmn = _truncate(mn, stats_mode, is_max=False)
-                tmx = _truncate(mx, stats_mode, is_max=True)
-                if tmn is not None:
-                    entry["min"] = _jsonable(tmn)
-                if tmx is not None:
-                    entry["max"] = _jsonable(tmx)
-            cols[c] = entry
-        out[local] = {"_row_count": d["__rc"], "cols": cols}
-    return out
-
-
 def compute_bloom_positions(spark, paths: list[str], fmt: str,
                             cols: list[str]) -> dict:
     """Per-file per-column bloom positions in ONE distributed pass
@@ -823,8 +779,9 @@ def _walk_staged(spark, staging: str, schema: TableSchema,
                  bloom_cols: list[str]) -> list:
     """(path, size, partition, bucket, stats, file_index) per file of a
     Spark-native parquet/orc staging write: the dir walk gives paths, sizes
-    and the layout, the footers give stats (a distributed pass past 64
-    files; one Spark aggregation for ORC), one Spark scan gives blooms."""
+    and the layout, collect_file_stats gives stats (parquet footers, a
+    distributed pass past 64 files; ORC always distributed), one Spark scan
+    gives blooms."""
     from .fileio import for_path
     fmt = "orc" if schema.core_options.file_format == "orc" else "parquet"
     sizes = {p: sz for p, sz in for_path(staging).walk_files(staging)
@@ -833,13 +790,11 @@ def _walk_staged(spark, staging: str, schema: TableSchema,
     if not files:
         return []
     stats_mode = schema.core_options.metadata_stats_mode
-    if fmt == "orc":
-        # no cheap footer API for ORC via pyarrow — one distributed
-        # agg job over the staging dir computes per-file stats
-        stats = _collect_stats_spark(spark, files, fmt, schema, stats_mode)
-    elif len(files) > 64:
-        # footer reads are ~5ms each; a distributed pass only pays off once
-        # the driver loop rivals the ~1.5s Python-RDD job spin-up
+    if fmt == "orc" or len(files) > 64:
+        # ORC stats read the data (pyarrow exposes no ORC column stats), so
+        # they run where the data is; parquet footer reads are ~5ms each,
+        # and a distributed pass only pays off once the driver loop rivals
+        # the ~1.5s Python-RDD job spin-up
         stats = dict(spark.sparkContext
                      .parallelize(files, min(len(files), 64))
                      .map(lambda p: (_path_key(p),

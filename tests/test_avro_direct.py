@@ -1,13 +1,13 @@
-"""Pins for the direct Arrow→avro write (formats/avro_direct.py), the one
-way avro data files get written.
+"""Pins for the task-side data-file writer (formats/avro_direct.py): every
+avro data file, and every file the DataSource writers write in any format.
 
 Its correctness surface is (a) identical read-back rows and (b) manifest
 stats equal to the parquet-footer numbers Spark's parquet writer produces
-for the same rows — min/max/null_count feed file pruning,
-`_SEQUENCE_NUMBER` ordering and the `_VALUE_KIND` delete-row proof. Every
-pin compares against a parquet table written from the same input with the
-same layout (coalesce(1) / trigger=1 / bucket count), so each is a true
-A/B on identical rows."""
+for the same rows wherever a footer carries statistics — min/max/null_count
+feed file pruning, `_SEQUENCE_NUMBER` ordering and the `_VALUE_KIND`
+delete-row proof. Every pin compares against a table written from the same
+input with the same layout (coalesce(1) / trigger=1 / bucket count), so
+each is a true A/B on identical rows."""
 
 import json
 import math
@@ -86,27 +86,10 @@ def _edge_rows():
     ]
 
 
-def test_direct_stats_parity_edge_types(spark, catalog):
-    """Byte-level stats parity with parquet footers on every edge: NaN
-    max (Java total order), -0.0 min, INT96 timestamp no-stats, NTZ full
-    stats, decimal null-count-only, >4096 string stats drop, truncate(16)
-    prefix-min/dropped-max, nested column skipped, all-null column.
-    coalesce(1) + trigger=1 keep all rows in ONE file (the avro write
-    otherwise spreads small appends to `min(cores, trigger)` tasks): the
-    4096-byte stats-drop rule is per-file, so the spot-checks below only
-    read cleanly when the edge rows share a footer."""
-    df = spark.createDataFrame(_edge_rows(), EDGE_SCHEMA).coalesce(1)
-    ta = catalog.create_table("db.dx_a", df.schema,
-                              options={"file.format": "avro", **ONE_FILE})
-    ta.write(spark, df)
-    tp = catalog.create_table("db.dx_p", df.schema, options=ONE_FILE)
-    tp.write(spark, df)
-    assert _file_sigs(ta) == _file_sigs(tp)
-    _same_rows(ta.read(spark), tp.read(spark))
-    # spot-check the semantics themselves on the avro table
-    snap = ta.snapshots.latest()
+def _merged_stats(t) -> dict:
+    """Per-column stats merged over the latest snapshot's files."""
     stats = {}
-    for e in ta.entries_at(snap):
+    for e in t.entries_at(t.snapshots.latest()):
         for c, st in e.file.stats.items():
             cur = stats.setdefault(c, {"null_count": 0})
             cur["null_count"] += st["null_count"]
@@ -121,11 +104,39 @@ def test_direct_stats_parity_edge_types(spark, catalog):
                 elif not (isinstance(cur["max"], float)
                           and math.isnan(cur["max"])) and mx > cur["max"]:
                     cur["max"] = mx
+    return stats
+
+
+def test_direct_stats_parity_edge_types(spark, catalog):
+    """Byte-level stats parity with parquet footers on every edge: NaN
+    max (Java total order), -0.0 min, NTZ full stats, decimal
+    null-count-only, >4096 string stats drop, truncate(16) prefix-min /
+    dropped-max, nested column skipped, all-null column. TimestampType is
+    INT96 in Spark's parquet, whose footer has no statistics: the parquet
+    table has no `ts` entry, the avro table real bounds and null count.
+    coalesce(1) + trigger=1 keep all rows in ONE file (the avro write
+    otherwise spreads small appends to `min(cores, trigger)` tasks): the
+    4096-byte stats-drop rule is per-file, so the spot-checks below only
+    read cleanly when the edge rows share a footer."""
+    df = spark.createDataFrame(_edge_rows(), EDGE_SCHEMA).coalesce(1)
+    ta = catalog.create_table("db.dx_a", df.schema,
+                              options={"file.format": "avro", **ONE_FILE})
+    ta.write(spark, df)
+    tp = catalog.create_table("db.dx_p", df.schema, options=ONE_FILE)
+    tp.write(spark, df)
+    assert (_file_sigs(ta, drop_cols=("ts",))
+            == _file_sigs(tp, drop_cols=("ts",)))
+    _same_rows(ta.read(spark), tp.read(spark))
+    assert "ts" not in _merged_stats(tp)            # INT96: no footer stats
+    # spot-check the semantics themselves on the avro table
+    stats = _merged_stats(ta)
     assert "arr" not in stats                       # nested: no entry
-    assert stats["ts"] == {"null_count": 0}         # INT96: no stats at all
+    assert stats["ts"] == {"null_count": 1,         # real bounds + nulls
+                           "min": datetime(2021, 3, 4, 5, 6, 7),
+                           "max": datetime(2022, 1, 1)}
     assert "min" in stats["tsn"]                    # NTZ: real stats
     assert stats["dec"] == {"null_count": 1}        # decimal: counts only
-    assert stats["s_long"] == {"null_count": 0}     # >4096: dropped whole
+    assert "s_long" not in stats                    # >4096: dropped whole
     assert stats["all_null"] == {"null_count": 3}
     assert math.isnan(stats["d_nan"]["max"])        # Java order: NaN is max
     assert stats["d_nan"]["min"] == -2.0
@@ -397,3 +408,210 @@ def test_sql_insert_avro_matches_table_write(spark, catalog, customer, pk,
     assert (_file_sigs(ds, drop_cols=(SEQUENCE_NUMBER,), with_seq=False)
             == _file_sigs(tw, drop_cols=(SEQUENCE_NUMBER,), with_seq=False))
     _same_rows(ds.read(spark), tw.read(spark))
+
+
+# (pk, bloom, via) of the DataSource writes each format makes: together
+# they cover PK and append tables, bloom on and off, df.write and SQL
+# INSERT, against Table.write avro tables of the same rows and options
+_EDGE_CONFIGS = [(False, False, "df"), (True, True, "df"),
+                 (False, True, "sql"), (True, False, "sql")]
+
+
+def _edge_table(catalog, name, fmt, pk, bloom):
+    opts = {"file.format": fmt, **({"bucket": "2"} if pk else ONE_FILE)}
+    if bloom:
+        opts["file-index.bloom-filter.columns"] = "i,l,s,dt"
+    return catalog.create_table(name, EDGE_SCHEMA, options=opts,
+                                primary_keys=["i"] if pk else None)
+
+
+@pytest.fixture(scope="module")
+def edge_refs(spark, tmp_path_factory):
+    """One Table.write avro table of the edge rows per config, shared by
+    the per-format DataSource writer tests."""
+    from incubator_paimon_spark import Catalog
+
+    catalog = Catalog(str(tmp_path_factory.mktemp("edge_wh")))
+    df = spark.createDataFrame(_edge_rows(), EDGE_SCHEMA).coalesce(1)
+    refs = {}
+    for pk, bloom, _ in _EDGE_CONFIGS:
+        t = _edge_table(catalog, f"db.edge_ref_{int(pk)}{int(bloom)}",
+                        "avro", pk, bloom)
+        t.write(spark, df)
+        refs[pk, bloom] = t
+    return catalog, df, refs
+
+
+@pytest.mark.parametrize("fmt", ["parquet", "orc", "avro"])
+def test_datasource_writer_matches_table_write_avro(spark, edge_refs, fmt):
+    """The DataSource writers encode every format through the layout
+    writer, stats rule and bloom hash of Table.write's avro: on the edge
+    rows each file's stats and bloom index are equal (seq bounds too for
+    df.write; SQL INSERT's clustered write numbers _SEQUENCE_NUMBER per
+    task), and the rows read back equal."""
+    from incubator_paimon_spark.datasource import register
+
+    catalog, df, refs = edge_refs
+    register(spark)
+    sql = shutil.which("javac") is not None
+    if sql:
+        from incubator_paimon_spark.jvm_catalog import install_sql_catalog
+        install_sql_catalog(spark, f"pedge_{fmt}", catalog.warehouse)
+        df.createOrReplaceTempView("edge_src")
+    for pk, bloom, via in _EDGE_CONFIGS:
+        if via == "sql" and not sql:
+            continue
+        name = f"edge_{fmt}_{int(pk)}{int(bloom)}"
+        ds = _edge_table(catalog, f"db.{name}", fmt, pk, bloom)
+        if via == "df":
+            df.write.format("paimon").mode("append").option(
+                "path", ds.path).save()
+        else:
+            spark.sql(f"INSERT INTO pedge_{fmt}.db.{name} "
+                      "SELECT * FROM edge_src")
+        files = [e.file.file_name
+                 for e in ds.entries_at(ds.snapshots.latest())]
+        assert files and all(f.endswith(f".{fmt}") for f in files)
+        drop = (SEQUENCE_NUMBER,) if via == "sql" else ()
+        ref = refs[pk, bloom]
+        assert (_file_sigs(ds, drop, via == "df")
+                == _file_sigs(ref, drop, via == "df")), (pk, bloom, via)
+        _same_rows(ds.read(spark), ref.read(spark))
+
+
+def test_is_null_keeps_files_without_footer_stats(spark, catalog):
+    """A column whose footer has no statistics (Spark's INT96 timestamps,
+    parquet-mr's ≥4096-byte string drop) has no stats entry, and the
+    writers' own rule matches: IS NULL never prunes the file holding the
+    NULL, on Table.write parquet and avro and on DataSource avro."""
+    from incubator_paimon_spark.datasource import register
+
+    register(spark)
+    df = spark.createDataFrame(
+        [(1, datetime(2021, 3, 4), "x" * 5000), (2, None, None)],
+        "id int, ts timestamp, s string").coalesce(1)
+    for fmt, via in (("parquet", "tw"), ("avro", "tw"), ("avro", "ds")):
+        t = catalog.create_table(f"db.isn_{fmt}_{via}", df.schema,
+                                 options={"file.format": fmt, **ONE_FILE})
+        if via == "tw":
+            t.write(spark, df)
+        else:
+            df.write.format("paimon").mode("append").option(
+                "path", t.path).save()
+        for col in ("ts", "s"):
+            got = t.read(spark, predicate=P.is_null(col)).collect()
+            assert [r.id for r in got] == [2], (fmt, via, col)
+        assert spark.read.format("paimon").load(t.path).filter(
+            "ts IS NULL").count() == 1, (fmt, via)
+
+
+@pytest.mark.parametrize("fmt", ["parquet", "orc"])
+def test_datasource_nan_rows_survive_filters(spark, catalog, fmt):
+    """A double holding NaN: the file's max is NaN (Spark orders NaN above
+    every value), and a parquet footer carries no double statistics for
+    Spark's row-group pushdown to trust, so `d > 2.0` finds the NaN row
+    through Table.read and format("paimon") — whose PK merge read keeps
+    the NaN a NaN, not a NULL."""
+    import pyarrow.parquet as pq
+
+    from incubator_paimon_spark.datasource import register
+
+    register(spark)
+    df = spark.createDataFrame([(1, 1.0), (2, float("nan"))],
+                               "id int, d double").coalesce(1)
+    for pk in (False, True):
+        t = catalog.create_table(
+            f"db.nan_{fmt}_{int(pk)}", df.schema,
+            primary_keys=["id"] if pk else None,
+            options={"file.format": fmt, **({"bucket": "1"} if pk else {})})
+        df.write.format("paimon").mode("append").option(
+            "path", t.path).save()
+        assert math.isnan(_merged_stats(t)["d"]["max"])
+        if fmt == "parquet":
+            for e in t.entries_at(t.snapshots.latest()):
+                md = pq.ParquetFile(os.path.join(t.path, e.file.file_name)
+                                    ).metadata
+                assert md.row_group(0).column(1).statistics is None
+        for got in (t.read(spark), spark.read.format("paimon").load(t.path)):
+            assert [r.id for r in got.filter("d > 2.0").collect()] == [2], pk
+
+
+def test_datasource_orc_timestamp_roundtrip_non_utc(spark, catalog):
+    """DataSource ORC files store timestamps the way Spark's ORC writer
+    does (TimestampType a plain ORC timestamp of the UTC wall clock, NTZ a
+    tagged bigint): under a non-UTC session zone the values read back
+    unchanged through Table.read, the DataSource reader (append and PK
+    merge reads) and the stream reader."""
+    from incubator_paimon_spark.datasource import register
+
+    register(spark)
+    key = "spark.sql.session.timeZone"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "America/Los_Angeles")
+    try:
+        rows = [(1, datetime(2021, 3, 4, 5, 6, 7), datetime(2021, 3, 4)),
+                (2, datetime(2022, 7, 1, 23, 30), None), (3, None, None)]
+        df = spark.createDataFrame(rows,
+                                   "id int, ts timestamp, tsn timestamp_ntz")
+        for pk in (False, True):
+            t = catalog.create_table(
+                f"db.orc_ts_{int(pk)}", df.schema,
+                primary_keys=["id"] if pk else None,
+                options={"file.format": "orc",
+                         **({"bucket": "1"} if pk else {})})
+            df.write.format("paimon").mode("append").option(
+                "path", t.path).save()
+            q = (spark.readStream.format("paimon")
+                 .option("scan.mode", "earliest").load(t.path)
+                 .writeStream.format("memory")
+                 .queryName(f"orc_ts_stream_{int(pk)}")
+                 .trigger(availableNow=True).start())
+            q.awaitTermination(180)
+            for got in (t.read(spark),
+                        spark.read.format("paimon").load(t.path),
+                        spark.table(f"orc_ts_stream_{int(pk)}")):
+                assert sorted(map(tuple, got.select(
+                    "id", "ts", "tsn").collect())) == rows, pk
+    finally:
+        spark.conf.set(key, prev)
+
+
+def test_datasource_parquet_append_rolls_at_target_file_size(spark, catalog,
+                                                             customer):
+    """A single-task DataSource parquet append streams its batches into
+    files that roll at target-file-size; every row is intact."""
+    from incubator_paimon_spark.datasource import register
+
+    register(spark)
+    t = catalog.create_table("db.ds_roll", customer.schema,
+                             options={"target-file-size": "2kb",
+                                      "write-only": "true"})
+    customer.coalesce(1).write.format("paimon").mode("append").option(
+        "path", t.path).save()
+    entries = t.entries_at(t.snapshots.read(1))
+    assert len(entries) > 1
+    assert sum(e.file.row_count for e in entries) == customer.count()
+    _same_rows(t.read(spark), customer)
+
+
+def test_migrate_orc_stats_match_writers(spark, catalog, tmp_path):
+    """CALL sys.migrate_table on an ORC source applies the writers' stats
+    rule: NaN is a double's max, NTZ and TimestampType bounds are
+    datetimes — equal to Table.write's avro and orc stats of the rows."""
+    from incubator_paimon_spark.procedures import call_sql
+
+    df = spark.createDataFrame(
+        [(1, 1.0, datetime(2021, 3, 4, 5, 6, 7), datetime(2021, 3, 4)),
+         (2, float("nan"), None, datetime(2022, 1, 1, 0, 0, 0, 5))],
+        "id int, d double, ts timestamp, tsn timestamp_ntz").coalesce(1)
+    df.write.orc(str(tmp_path / "src"))
+    tm = call_sql(spark, catalog,
+                  f"CALL sys.migrate_table(table => 'db.mig_nan', "
+                  f"source_dir => '{tmp_path / 'src'}')")
+    got = _sig(_merged_stats(tm))
+    assert math.isnan(_merged_stats(tm)["d"]["max"])
+    for fmt in ("avro", "orc"):
+        t = catalog.create_table(f"db.mig_ref_{fmt}", df.schema,
+                                 options={"file.format": fmt, **ONE_FILE})
+        t.write(spark, df)
+        assert got == _sig(_merged_stats(t)), fmt

@@ -98,3 +98,15 @@ def test_headline_is_protocol_not_healed():
     assert '"protocol_median"' in src and '"healed_median"' in src
     # the old behavior recorded final_best as the headline
     assert '"final_best"' not in src and '"first_best"' not in src
+
+
+def test_prior_gated_reads_parsed_queries():
+    """Every gated artifact carries the bench line under `parsed`; the
+    drift bar is the latest one's query medians at that scale factor."""
+    import json
+    import os
+
+    here = os.path.dirname(os.path.abspath(bench.__file__))
+    with open(os.path.join(here, "BENCH_r16.json")) as f:
+        want = json.load(f)["parsed"]["queries"]
+    assert want and bench._prior_gated(0.1) == want
