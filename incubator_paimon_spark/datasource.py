@@ -19,6 +19,10 @@ plans snapshot ranges + per-file splits (control-plane-sized), workers read
 each changelog/delta file as Arrow RecordBatches — a backfill over many
 snapshots fans out instead of funneling Python rows through the driver.
 
+One class per job: PaimonDataSource, PaimonBatchReader (with filter
+pushdown), PaimonStreamReader and the two writers. Both readers decode data
+files through formats/data_file.read_data_file.
+
 Known upstream caveat (pyspark 4.1): the JVM memoizes ONE planned read
 per python-source instance (PythonDataSourceV2.readInfo), so a single
 ``spark.read.format("paimon").load()`` HANDLE branched into scans with
@@ -45,41 +49,38 @@ from pyspark.sql.datasource import (DataSource, DataSourceArrowWriter,
                                     DataSourceStreamArrowWriter,
                                     DataSourceStreamReader,
                                     InputPartition,
-                                    SimpleDataSourceStreamReader,
                                     WriterCommitMessage)
 from pyspark.sql import types as T
 
 from .types import ADD_KINDS, SEQUENCE_NUMBER, VALUE_KIND
 
 ROW_KIND_COL = "_row_kind"
+_PUSHDOWN_CONF = "spark.sql.python.filterPushdown.enabled"
 
 
 def register(spark):
     """Register format("paimon") on this session. Also enables the Python
     DataSource filter-pushdown conf (off by default in Spark 4.1): with it,
-    partitions()/manifest pruning sees the query's WHERE clause. Sessions
-    where the conf cannot be set fall back to a reader without pushFilters
-    — the worker refuses a pushFilters-bearing reader when the conf is off,
-    so the choice must happen here, driver-side.
+    partitions()/manifest pruning sees the query's WHERE clause. The batch
+    reader defines pushFilters, which the worker refuses while the conf is
+    off, so a session that cannot set it gets a clear error here.
 
     Also installs a QueryExecutionListener that clears pyspark's one-shot
     read-plan memo after every query (see _ReadPlanMemoClearListener) so
     a HELD DataFrame handle filtered two ways across queries serves each
     query its own file list instead of the first query's pruned one."""
     try:
-        spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
-        enabled = (spark.conf.get("spark.sql.python.filterPushdown.enabled")
-                   == "true")
-    except Exception:
-        enabled = False
+        spark.conf.set(_PUSHDOWN_CONF, "true")
+    except Exception as e:
+        raise RuntimeError(
+            f"format('paimon') needs {_PUSHDOWN_CONF}=true, and this "
+            f"session cannot set it: {e}") from e
     try:
-        spark.dataSource.register(PaimonDataSource if enabled
-                                  else PaimonDataSourceNoPushdown)
+        spark.dataSource.register(PaimonDataSource)
     except Exception as e:  # idempotent: newSession() shares the registry
         if "DATA_SOURCE_ALREADY_EXISTS" not in str(e):
             raise
-    if enabled:
-        _install_memo_clear_listener(spark)
+    _install_memo_clear_listener(spark)
 
 
 class _ReadPlanMemoClearListener:
@@ -163,18 +164,6 @@ def _load_table(options):
     return Table(path, branch=options.get("branch"))
 
 
-def _read_file(path: str):
-    """A whole data file of any format as one Arrow table."""
-    if path.endswith(".orc"):
-        import pyarrow.orc as orc
-        return orc.ORCFile(path).read()
-    if path.endswith(".avro"):
-        from .formats.avro_spark import read_avro_arrow
-        return read_avro_arrow(path)
-    import pyarrow.parquet as pq
-    return pq.read_table(path)
-
-
 @dataclass
 class _Split(InputPartition):
     files: list          # absolute data-file paths
@@ -216,11 +205,6 @@ class PaimonDataSource(DataSource):
         return PaimonBatchReader(self.options, self._changelog())
 
     def streamReader(self, schema):
-        # preferred by the engine: executor-side Arrow-batch micro-batches
-        return PaimonStreamReaderDist(self.options, self._changelog())
-
-    def simpleStreamReader(self, schema):
-        # driver-side fallback; also the unit-level spec for offsets/limits
         return PaimonStreamReader(self.options, self._changelog())
 
     def writer(self, schema, overwrite):
@@ -230,21 +214,14 @@ class PaimonDataSource(DataSource):
         return PaimonStreamWriter(self.options)
 
 
-class PaimonDataSourceNoPushdown(PaimonDataSource):
-    """Same source, minus pushFilters: the engine worker refuses a reader
-    that merely DEFINES pushFilters when the pushdown conf is off, so
-    register() picks this class for such sessions."""
+class PaimonBatchReader(DataSourceReader):
+    """format("paimon") batch reads, with DSv2-style filter pushdown."""
 
-    def reader(self, schema):
-        return PaimonBatchReaderNoPushdown(self.options, self._changelog())
-
-
-class PaimonBatchReaderNoPushdown(DataSourceReader):
     def __init__(self, options, changelog):
         self.options = options
         self.changelog = changelog
         self.table = _load_table(options)
-        self._pushed = None  # Predicate built by pushFilters (subclass)
+        self._pushed = None  # Predicate built by pushFilters
 
     def partitions(self):
         """Raw-convertible files (append tables; compacted / key-disjoint PK
@@ -342,7 +319,8 @@ class PaimonBatchReaderNoPushdown(DataSourceReader):
     def read(self, split):
         import numpy as np
         import pyarrow as pa
-        import pyarrow.parquet as pq
+
+        from .formats.data_file import read_data_file
 
         cols = list(split.user_cols)
         deleted = self._deleted_positions(split)
@@ -396,35 +374,21 @@ class PaimonBatchReaderNoPushdown(DataSourceReader):
                     .cast(pa.string()))
             return conform(tb)
 
-        def stream_file(f):
-            """Record-batch iterator for either data format (ORC streams by
-            stripe; both keep worker memory at one batch)."""
-            if f.endswith(".orc"):
-                import pyarrow.orc as orc
-                o = orc.ORCFile(f)
-                for i in range(o.nstripes):
-                    yield o.read_stripe(i)
-            elif f.endswith(".avro"):
-                from .formats.avro_spark import read_avro_arrow
-                yield from read_avro_arrow(f).to_batches()
-            else:
-                yield from pq.ParquetFile(f).iter_batches()
-
         if not split.pks:
             # raw path: stream record batches, never materialize the file
             for f, rel in zip(split.files, split.rel_names):
                 offset = 0
-                for b in stream_file(f):
+                for b in read_data_file(f):
                     tb = injected(masked(pa.Table.from_batches([b]),
                                          rel, offset))
                     offset += b.num_rows
                     yield from project(tb).to_batches()
             return
 
-        tables = []
-        for f, rel in zip(split.files, split.rel_names):
-            tables.append(masked(_read_file(f), rel, 0))
-        tbl = pa.concat_tables(tables, promote_options="default")
+        tbl = pa.concat_tables(
+            [masked(pa.Table.from_batches(list(read_data_file(f))), rel, 0)
+             for f, rel in zip(split.files, split.rel_names)],
+            promote_options="default")
         if target is not None:  # evolution null-fill before the merge
             for name in cols:
                 if name not in tbl.column_names:
@@ -451,10 +415,6 @@ class PaimonBatchReaderNoPushdown(DataSourceReader):
                                ).to_batches()
         else:
             yield from project(tbl).to_batches()
-
-
-class PaimonBatchReader(PaimonBatchReaderNoPushdown):
-    """The default batch reader: adds DSv2-style filter pushdown."""
 
     def pushFilters(self, filters):
         """Map Spark's pushed filters onto the Predicate IR so partitions()
@@ -581,20 +541,7 @@ class _StreamSplit(InputPartition):
     inject: tuple = ()
 
 
-
-def _dbg(tag):
-    """Append a line to $PMN_STREAM_DEBUG (if set): the stream reader runs
-    in a forked source-runner process where neither stdout nor in-process
-    monkeypatching is visible, so offset/plan call-order questions (fresh
-    query vs restart replay) are only answerable with a file trace."""
-    import os
-    f = os.environ.get("PMN_STREAM_DEBUG")
-    if f:
-        with open(f, "a") as fh:
-            fh.write(tag + "\n")
-
-
-class PaimonStreamReaderDist(DataSourceStreamReader):
+class PaimonStreamReader(DataSourceStreamReader):
     """Executor-side micro-batch reader (DataSourceStreamReader): offsets =
     {"snapshot_id": last consumed}, one InputPartition per changelog/delta
     file, data moves as Arrow RecordBatches read ON THE WORKERS.
@@ -605,7 +552,7 @@ class PaimonStreamReaderDist(DataSourceStreamReader):
     ranges and file lists (control-plane-sized). Parity:
     PaimonMicroBatchStream.scala:32 planning + SparkSource per-split reads.
 
-    Restart contract (traced via PMN_STREAM_DEBUG, pinned by
+    Restart contract (pinned by
     test_stream_restart_mid_backfill_exactly_once): on a checkpointed
     restart the engine FIRST replays the last batch via
     partitions(start, end) — which re-seeds `_progress` to the
@@ -625,14 +572,20 @@ class PaimonStreamReaderDist(DataSourceStreamReader):
         self._progress = None  # last planned/committed end snapshot id
 
     def initialOffset(self):
-        # identical policy to the simple reader (kept as the unit-level
-        # spec); never moves the limit window backwards — the engine may
-        # call this AFTER the first latestOffset already advanced it
-        off = PaimonStreamReader.initialOffset(self)
-        _dbg(f"initialOffset -> {off}")
-        self._progress = (off["snapshot_id"] if self._progress is None
-                          else max(self._progress, off["snapshot_id"]))
-        return off
+        """scan.mode: from-snapshot / earliest / latest (only new commits).
+        Never moves the limit window backwards — the engine may call this
+        AFTER the first latestOffset already advanced it."""
+        mode = self.options.get("scan.mode", "latest")
+        t = self.table
+        if mode == "from-snapshot":
+            sid = int(self.options.get("scan.snapshot-id", "1")) - 1
+        elif mode == "earliest":
+            sid = (t.snapshots.earliest_id() or 1) - 1
+        else:
+            sid = t.snapshots.latest_id() or 0
+        self._progress = (sid if self._progress is None
+                          else max(self._progress, sid))
+        return {"snapshot_id": sid}
 
     def latestOffset(self):
         if self._progress is None:
@@ -645,16 +598,14 @@ class PaimonStreamReaderDist(DataSourceStreamReader):
             # .py "when query restart from checkpoint, use the last
             # committed offset as the start offset"), which sets _progress
             # to the checkpointed end, so limits can never rewind offsets.
-            self._progress = PaimonStreamReader.initialOffset(self)["snapshot_id"]
+            self.initialOffset()
         end = _admissible_end(self.table, self.options, self._progress, self)
         if end is None:  # minRows holds the trigger: report no progress
             end = self._progress
         self._progress = max(self._progress, end)
-        _dbg(f"latestOffset -> {end}")
         return {"snapshot_id": end}
 
     def partitions(self, start, end):
-        _dbg(f"partitions {start} {end}")
         t = self.table
         start_id, end_id = start["snapshot_id"], end["snapshot_id"]
         # after a restart latestOffset may have been seeded below the
@@ -687,27 +638,27 @@ class PaimonStreamReaderDist(DataSourceStreamReader):
     def read(self, partition):
         # runs on an executor: no self/table state, Arrow end-to-end
         import pyarrow as pa
-        import pyarrow.ipc as ipc
-        tbl = _read_file(partition.path)
-        target = ipc.read_schema(pa.py_buffer(partition.arrow_schema_bytes))
-        n = tbl.num_rows
+
+        from .formats.data_file import read_data_file
+        target = pa.ipc.read_schema(pa.py_buffer(partition.arrow_schema_bytes))
         inject = dict(partition.inject)
-        arrays = []
-        for name in partition.cols:
-            field = target.field(name)
-            if name in inject:  # hive-migrated: constant from the entry
-                arrays.append(pa.array([inject[name]] * n, field.type))
-            elif name in tbl.column_names:
-                arrays.append(tbl[name].combine_chunks().cast(field.type))
-            else:  # file predates the column (schema evolution): nulls
-                arrays.append(pa.nulls(n, field.type))
-        if partition.changelog:
-            if VALUE_KIND in tbl.column_names:
-                arrays.append(tbl[VALUE_KIND].combine_chunks().cast(pa.string()))
-            else:
-                arrays.append(pa.array(["+I"] * n, pa.string()))
-        out = pa.Table.from_arrays(arrays, schema=target)
-        yield from out.to_batches()
+        for b in read_data_file(partition.path):
+            n = b.num_rows
+            names = b.schema.names
+            arrays = []
+            for name in partition.cols:
+                field = target.field(name)
+                if name in inject:  # hive-migrated: constant from the entry
+                    arrays.append(pa.array([inject[name]] * n, field.type))
+                elif name in names:
+                    arrays.append(b.column(name).cast(field.type))
+                else:  # file predates the column (schema evolution): nulls
+                    arrays.append(pa.nulls(n, field.type))
+            if partition.changelog:
+                arrays.append(b.column(VALUE_KIND).cast(pa.string())
+                              if VALUE_KIND in names
+                              else pa.array(["+I"] * n, pa.string()))
+            yield pa.RecordBatch.from_arrays(arrays, schema=target)
 
     def commit(self, end):
         # durable consumer progress (ConsumerManager.java:40): protects the
@@ -716,75 +667,6 @@ class PaimonStreamReaderDist(DataSourceStreamReader):
         cid = self.options.get("consumer-id")
         if cid:
             self.table.write_consumer(cid, end["snapshot_id"] + 1)
-
-
-class PaimonStreamReader(SimpleDataSourceStreamReader):
-    """Offsets = {"snapshot_id": last consumed}; each batch is the delta of
-    the snapshots committed since (DataTableStreamScan nextPlan loop).
-
-    Kept as the unit-testable spec of offset/limit semantics; the engine
-    itself selects PaimonStreamReaderDist (streamReader() wins over
-    simpleStreamReader() in the Python DataSource API)."""
-
-    def __init__(self, options, changelog):
-        self.options = options
-        self.changelog = changelog
-        self.table = _load_table(options)
-
-    def initialOffset(self):
-        mode = self.options.get("scan.mode", "latest")
-        t = self.table
-        if mode == "from-snapshot":
-            sid = int(self.options.get("scan.snapshot-id", "1")) - 1
-        elif mode == "earliest":
-            sid = (t.snapshots.earliest_id() or 1) - 1
-        else:  # latest: only new commits
-            sid = t.snapshots.latest_id() or 0
-        return {"snapshot_id": sid}
-
-    def read(self, start):
-        end_id = _admissible_end(self.table, self.options,
-                                 start["snapshot_id"], self)
-        if end_id is None or end_id <= start["snapshot_id"]:
-            return iter([]), start
-        end = {"snapshot_id": end_id}
-        return self.readBetweenOffsets(start, end), end
-
-    def commit(self, end):
-        # durable consumer progress (ConsumerManager.java:40): protects the
-        # un-consumed snapshots from expiration
-        cid = self.options.get("consumer-id")
-        if cid:
-            self.table.write_consumer(cid, end["snapshot_id"] + 1)
-
-    def readBetweenOffsets(self, start, end):
-        # returns a list iterator (not a generator): the engine's prefetch
-        # cache copy.copy()s the iterator for replay
-        t = self.table
-        schema = t.schema
-        cols = schema.field_names()
-        rows = []
-        for sid in range(start["snapshot_id"] + 1, end["snapshot_id"] + 1):
-            if not t.snapshots.exists(sid):
-                continue
-            snap = t.snapshots.read(sid)
-            entries = t.stream_entries(snap, self.changelog)
-            for e in entries:
-                tbl = _read_file(os.path.join(t.path, e.file.file_name))
-                have_kind = VALUE_KIND in tbl.column_names
-                # hive-migrated files lack the partition columns in their
-                # bytes (partition_in_data=False): inject from the manifest
-                # entry, same as PaimonStreamReaderDist.read
-                inject = ({} if e.file.partition_in_data
-                          else dict(e.partition))
-                for row in tbl.to_pylist():
-                    vals = [inject[c] if c in inject else row.get(c)
-                            for c in cols]
-                    if self.changelog:
-                        vals.append(row.get(VALUE_KIND, "+I") if have_kind
-                                    else "+I")
-                    rows.append(tuple(vals))
-        return iter(rows)
 
 
 @dataclass

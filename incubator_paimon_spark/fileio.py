@@ -30,6 +30,7 @@ in the metadata layer calls through it, so adding a backend is one
 
 from __future__ import annotations
 
+import contextlib
 import os
 import uuid
 from abc import ABC, abstractmethod
@@ -288,12 +289,19 @@ class LocalFileIO(FileIO):
             os.unlink(tmp)
 
     def write_overwrite(self, path, data):
+        """Readers see the old bytes or the new ones, never a mix; a failed
+        write keeps the old bytes and leaves no temp file behind."""
         path = self._p(path)
         os.makedirs(os.path.dirname(path), exist_ok=True)
         tmp = f"{path}.tmp-{uuid.uuid4().hex}"
-        with open(tmp, "wb") as f:
-            f.write(data)
-        os.replace(tmp, path)
+        try:
+            with open(tmp, "wb") as f:
+                f.write(data)
+            os.replace(tmp, path)
+        except BaseException:
+            with contextlib.suppress(FileNotFoundError):
+                os.unlink(tmp)
+            raise
 
     def exists(self, path):
         return os.path.exists(self._p(path))

@@ -28,7 +28,9 @@ the correctness arbiter:
   (`Array.validate(full=True)`), matching the Python path's
   bytes.decode() strictness.
 
-Set PMN_AVRO_NATIVE=0 to force the Python decoder (A/B and debugging).
+There is no switch to force the Python decoder: the native decoder's A/B
+against it is on record, and a test forces the fallback by making
+`native_block_decoder` return None.
 
 Parity note: the reference reads Avro through a JVM columnar reader
 (paimon-format/.../avro/AvroBulkFormat.java); this is the same
@@ -338,7 +340,7 @@ def native_block_decoder(schema: dict):
     """-> _NativeDecoder for this writer schema, or None when the schema
     has non-flat fields, native is disabled, or the self-test failed."""
     global _disabled, _tested
-    if _disabled or os.environ.get("PMN_AVRO_NATIVE", "1") == "0":
+    if _disabled:
         return None
     specs = []
     for f in schema["fields"]:

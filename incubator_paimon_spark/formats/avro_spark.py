@@ -6,7 +6,7 @@ sync-marker byte-range SPLITS of large containers (avro_read_splits) — each
 task decodes its units and yields the decoder's arrow batches directly, so
 both many-file and few-large-file avro tables scan with full executor
 parallelism (per-core decode speed is Python-bound; see avro_codec
-docstring).
+docstring). One-file reads outside Spark go through formats/data_file.py.
 """
 
 from __future__ import annotations
@@ -134,12 +134,3 @@ def read_avro_files_df(spark, paths: list[str], read_schema,
 
     return files_df.mapInArrow(decode, schema=read_schema)
 
-
-def read_avro_arrow(path: str, target_arrow_schema=None):
-    """One file → pyarrow Table (native datasource read path), decoded
-    with the compiled columnar decoder. Types come from the container's
-    own avro schema unless a target schema is given — never from
-    per-chunk inference, which would drift (int32 → int64)."""
-    from .avro_decode import read_container_arrow
-    data = for_path(path).read_bytes(path)
-    return read_container_arrow(data, target_arrow_schema)

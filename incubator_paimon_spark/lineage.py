@@ -39,9 +39,8 @@ import time
 from .metadata.util import atomic_write_json, new_uuid, read_json
 
 # roll the loose ev-*.json tail into a parquet segment past this many
-# events (env-overridable for tests/probes)
-LINEAGE_SEGMENT_THRESHOLD = int(
-    os.environ.get("PAIMON_LINEAGE_SEGMENT_THRESHOLD", "1000"))
+# events
+LINEAGE_SEGMENT_THRESHOLD = 1000
 
 # flattened endpoint rows: one row per (event, direction, endpoint).
 # (event_id, direction, ord) is the dedupe key for crash-replayed rows.

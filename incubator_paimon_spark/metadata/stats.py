@@ -8,7 +8,8 @@ left for this module is files written by Spark itself: Table.write's
 Spark-native parquet/orc staging, changelog files and migrate sources.
 Parquet footers give the numbers for free (min/max/null-count per row
 group), so that is a metadata-only read of each file — O(files), no data
-scan. ORC files are read once and go through the writers' own rule.
+scan. ORC files are decoded once (formats/data_file) and go through the
+writers' own rule.
 """
 
 from __future__ import annotations
@@ -48,7 +49,7 @@ def collect_file_stats(path: str, stats_mode: str = "truncate(16)") -> dict:
     if path.endswith(".orc"):
         return _orc_stats(path, stats_mode)
     with for_path(path).open_input(path) as f:
-        md = pq.ParquetFile(f).metadata
+        md = pq.read_metadata(f)
     out: dict = {}
     row_count = md.num_rows
     if stats_mode == "none":
@@ -81,31 +82,9 @@ def collect_file_stats(path: str, stats_mode: str = "truncate(16)") -> dict:
 
 def _orc_stats(path: str, stats_mode: str) -> dict:
     """ORC files (Table.write's Spark-native ORC staging, migrate sources):
-    pyarrow exposes no ORC column statistics, so read the file stripe by
-    stripe and apply the writers' own rule (formats/avro_direct._ColStats).
-    Spark's ORC writer stores NTZ as a bigint tagged
-    `spark.sql.catalyst.type` and TimestampType as a plain ORC timestamp
-    of the UTC instant; both are mapped back to the µs Arrow types Spark
-    hands a writer."""
-    import pyarrow as pa
-    import pyarrow.orc as orc
-
-    from ..fileio import for_path
+    pyarrow exposes no ORC column statistics, so decode the file stripe by
+    stripe in Spark's Arrow types and apply the writers' own rule
+    (formats/avro_direct._ColStats)."""
     from ..formats.avro_direct import arrow_file_stats
-
-    def as_spark(batch):
-        cols = []
-        for fld, col in zip(batch.schema, batch.columns):
-            if (fld.metadata or {}).get(b"spark.sql.catalyst.type") \
-                    == b"timestamp_ntz":
-                col = col.cast(pa.timestamp("us"))
-            elif pa.types.is_timestamp(fld.type):
-                col = col.cast(pa.timestamp("us", fld.type.tz or "UTC"))
-            cols.append(col)
-        return pa.table(cols, names=batch.schema.names)
-
-    with for_path(path).open_input(path) as f:
-        o = orc.ORCFile(f)
-        return arrow_file_stats(
-            (as_spark(o.read_stripe(i)) for i in range(o.nstripes)),
-            stats_mode)
+    from ..formats.data_file import read_data_file
+    return arrow_file_stats(read_data_file(path), stats_mode)

@@ -44,7 +44,7 @@ from .predicate import And, Leaf, Or, Predicate, split_by_fields
 # ManifestStore cache bound: below it the driver pass plans warm from cached
 # objects in ~1-2 s (§6 probe: 1.2 s at 300k entries); above it every plan is
 # a cold re-parse (~40 s at 1M) while the executor pass holds at ~2.4 s.
-PLAN_DF_MIN_MANIFESTS = int(os.environ.get("PAIMON_PLAN_DF_MIN_MANIFESTS", "50"))
+PLAN_DF_MIN_MANIFESTS = 50
 
 # derived from the manifest writer's single source of truth so a new
 # column lands in both the parquet layout and this read schema at once;

@@ -35,6 +35,10 @@ from __future__ import annotations
 import os
 from collections import OrderedDict
 
+import pyarrow as pa
+import pyspark.sql.types as T
+
+from .formats.data_file import read_data_file
 from .metadata.manifest import ManifestEntry, live_entries
 from .murmur import spark_hash
 from .predicate import And, P
@@ -357,17 +361,8 @@ class LocalTableQuery:
                 self._file_index(e, tbl=fut.result())
 
     def _read_arrow(self, name: str, columns: list[str]):
-        path = os.path.join(self.table.path, name)
-        if name.endswith(".avro"):
-            from .formats.avro_decode import read_container_arrow
-            data = self.table.io.read_bytes(path)
-            return read_container_arrow(data).select(columns)
-        if name.endswith(".orc"):
-            import pyarrow.orc as po
-            with self.table.io.open_input(path) as f:
-                return po.ORCFile(f).read(columns=columns)
-        import pyarrow.parquet as pq
-        return pq.read_table(path, columns=columns)
+        return pa.Table.from_batches(list(read_data_file(
+            os.path.join(self.table.path, name), columns, self.table.io)))
 
 
 class _FilePlan:
@@ -394,7 +389,7 @@ class _FileIndex:
     eagerly building every row dict — the pre-r9 shape — made the cold
     path O(rows × columns) Python work instead of O(rows) dict inserts
     (VERDICT r8 #4)."""
-    __slots__ = ("n", "pos", "seq", "kind", "cols", "plan", "_memo")
+    __slots__ = ("n", "pos", "seq", "kind", "cols", "local", "plan", "_memo")
 
     def __init__(self, tbl, plan: _FilePlan):
         self.n = tbl.num_rows
@@ -411,6 +406,16 @@ class _FileIndex:
         self.seq = tbl.column(SEQUENCE_NUMBER).to_pylist()
         self.kind = tbl.column(VALUE_KIND).to_pylist()
         self.cols = {c: tbl.column(c) for c in tbl.column_names}
+        # TimestampType columns: returned as the naive local datetime
+        # `collect()` gives (NTZ columns already read as naive datetimes).
+        # They are held as epoch µs, which order exactly for the merge
+        # order and skip building a tz-aware datetime per probed row.
+        self.local = []
+        for name, src, recast in plan.specs:
+            if src is not None and recast is None \
+                    and _is_instant(tbl.schema.field(src)):
+                self.local.append(name)
+                self.cols[src] = self.cols[src].cast(pa.int64())
         self.plan = plan
 
     def probe(self, ktup) -> list:
@@ -438,9 +443,19 @@ class _FileIndex:
                     row[name] = v if recast is None else _py_cast(v, recast)
             ot = tuple(_null_low(row.get(s)) for s in self.plan.seq_names) \
                 + ((self.seq[i],),)
+            for name in self.local:  # after `ot`: µs order exactly
+                if row[name] is not None:
+                    row[name] = _TS.fromInternal(row[name])
             out.append((ot, self.kind[i], i, row))
         self._memo[ktup] = out
         return out
+
+
+_TS = T.TimestampType()
+
+
+def _is_instant(field) -> bool:
+    return pa.types.is_timestamp(field.type) and field.type.tz is not None
 
 
 def _py_cast(value, dt):
@@ -451,7 +466,6 @@ def _py_cast(value, dt):
     if value is None or dt is None:
         return None if value is None else value
     import datetime as _dt
-    import pyspark.sql.types as T
 
     from .metadata.schema import _runtime_type
     rt = _runtime_type(dt)

@@ -26,10 +26,10 @@ import time as _time
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..merge_engines import apply_merge, merge_key
+from ..merge_engines import apply_merge
 from ..read import read_files_df, plan_to_df
-from ..types import (DELETE, INSERT, ROW_KIND, SEQUENCE_NUMBER, UPDATE_AFTER,
-                     UPDATE_BEFORE, VALUE_KIND)
+from ..types import INSERT, ROW_KIND, SEQUENCE_NUMBER, VALUE_KIND
+from ..write import state_diff_kinds
 
 
 def _resolve_bound(table, ref) -> int:
@@ -110,37 +110,12 @@ def changelog_between(spark: SparkSession, table, start, end=None) -> DataFrame:
         df = incremental_between(spark, table, s1, s2)
         return df.withColumn(ROW_KIND, F.lit(INSERT))
 
-    # state diff: full outer join old vs new merged state on the key
-    keys = merge_key(schema)
-    cols = [f.name for f in schema.fields]
+    # state diff of the merged old vs new state (the producers' rule)
     old = plan_to_df(spark, table, table.new_scan(snapshot_id=s1).plan()) if s1 > 0 \
         else spark.createDataFrame([], schema.spark_schema())
     new = plan_to_df(spark, table, table.new_scan(snapshot_id=s2).plan())
-
-    o = old.withColumn("__o", F.lit(True)).alias("o")
-    n = new.withColumn("__n", F.lit(True)).alias("n")
-    cond = None
-    for k in keys:
-        c = F.col(f"o.{k}").eqNullSafe(F.col(f"n.{k}"))
-        cond = c if cond is None else cond & c
-    j = o.join(n, cond, "full_outer")
-
-    val_cols = [c for c in cols if c not in keys]
-    changed = F.lit(False)
-    for c in val_cols:
-        changed = changed | ~F.col(f"o.{c}").eqNullSafe(F.col(f"n.{c}"))
-
-    def proj(side):
-        return [F.col(f"{side}.{c}").alias(c) for c in cols]
-
-    inserts = j.filter(F.col("o.__o").isNull() & F.col("n.__n").isNotNull()) \
-               .select(*proj("n"), F.lit(INSERT).alias(ROW_KIND))
-    deletes = j.filter(F.col("o.__o").isNotNull() & F.col("n.__n").isNull()) \
-               .select(*proj("o"), F.lit(DELETE).alias(ROW_KIND))
-    upd = j.filter(F.col("o.__o").isNotNull() & F.col("n.__n").isNotNull() & changed)
-    ub = upd.select(*proj("o"), F.lit(UPDATE_BEFORE).alias(ROW_KIND))
-    ua = upd.select(*proj("n"), F.lit(UPDATE_AFTER).alias(ROW_KIND))
-    return inserts.unionByName(ub).unionByName(ua).unionByName(deletes)
+    return state_diff_kinds(old, new, schema).withColumnRenamed(
+        VALUE_KIND, ROW_KIND)
 
 
 class MicroBatchStream:

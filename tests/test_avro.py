@@ -380,7 +380,7 @@ def test_columnar_encoder_extreme_values_byte_identical():
         assert a == b, codec
 
 
-def test_native_decoder_differential_vs_python():
+def test_native_decoder_differential_vs_python(monkeypatch):
     """The C block decoder must produce tables EQUAL to the pure-Python
     compiled decoder across every supported kind, null pattern, codec,
     block split, and the numeric edges (int64 min/max, varint byte
@@ -437,12 +437,9 @@ def test_native_decoder_differential_vs_python():
     for codec in ("deflate", "null"):
         data = A.write_container(avs, [dict(r) for r in rows], codec=codec,
                                  block_rows=100)  # ragged last block
-        import os
-        os.environ["PMN_AVRO_NATIVE"] = "0"
-        try:
+        with monkeypatch.context() as m:  # force the Python decoder
+            m.setattr(N, "native_block_decoder", lambda schema: None)
             py = D.read_container_arrow(data)
-        finally:
-            os.environ["PMN_AVRO_NATIVE"] = "1"
         nat = D.read_container_arrow(data)
         assert nat.schema == py.schema, codec
         for name in py.column_names:
@@ -461,12 +458,10 @@ def test_native_decoder_differential_vs_python():
     assert got == whole.column("l").to_pylist()
 
 
-def test_native_decoder_fallback_and_kill_switch():
+def test_native_decoder_fallback():
     """Schemas outside the flat-scalar set (decimal / array / record)
     must return None from native_block_decoder (Python path serves
-    them); PMN_AVRO_NATIVE=0 forces the fallback for any schema."""
-    import os
-
+    them)."""
     from incubator_paimon_spark.formats import avro_decode as D
     from incubator_paimon_spark.formats import avro_native as N
 
@@ -479,11 +474,6 @@ def test_native_decoder_fallback_and_kill_switch():
     assert N.native_block_decoder(dec) is None
     assert N.native_block_decoder(arr) is None
     assert N.native_block_decoder(flat) is not None
-    os.environ["PMN_AVRO_NATIVE"] = "0"
-    try:
-        assert N.native_block_decoder(flat) is None
-    finally:
-        os.environ["PMN_AVRO_NATIVE"] = "1"
     # complex schema decodes correctly through the fallback
     rows = [{"x": Decimal("1.25")}, {"x": None}]
     data = A.write_container(dec, rows)

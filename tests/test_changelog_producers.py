@@ -115,17 +115,26 @@ def test_stream_delta_mode_skips_compact_and_changelog_files(
     t.write(spark, customer.limit(10).withColumn("c_acctbal", F.lit(7.0)))
     t.compact(spark, full=True)
 
-    r = PaimonStreamReader({"path": t.path, "scan.mode": "earliest"}, False)
-    it, end = r.read(r.initialOffset())
-    rows = list(it)
+    def read_all(changelog):
+        """initialOffset → latestOffset → partitions → read, as the engine
+        drives the reader; returns (end offset, [kind per row])."""
+        r = PaimonStreamReader({"path": t.path, "scan.mode": "earliest"},
+                               changelog)
+        start = r.initialOffset()
+        end = r.latestOffset()
+        kinds = []
+        for p in r.partitions(start, end):
+            for b in r.read(p):
+                kinds += (b.column("_row_kind").to_pylist() if changelog
+                          else [None] * b.num_rows)
+        return end, kinds
+
+    end, rows = read_all(False)
     assert end["snapshot_id"] == 3
     # 150 + 10 delta rows; nothing from changelog files or the compaction
     assert len(rows) == customer.count() + 10
 
-    rc = PaimonStreamReader({"path": t.path, "scan.mode": "earliest"}, True)
-    rc.changelog = True
-    it, _ = rc.read(rc.initialOffset())
-    kinds = [row[-1] for row in it]
+    _, kinds = read_all(True)
     assert kinds.count("-U") == 10 and kinds.count("+U") == 10
     assert kinds.count("+I") == customer.count()
 

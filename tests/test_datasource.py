@@ -25,6 +25,22 @@ def test_batch_read_merges_pk(spark, catalog, customer):
     assert df.filter("c_acctbal = 5.0").count() == 30
 
 
+def test_register_fails_loudly_when_pushdown_conf_is_refused():
+    """The batch reader always defines pushFilters, so a session that
+    refuses the pushdown conf gets a clear error, not another reader."""
+    from incubator_paimon_spark.datasource import register
+
+    class Conf:
+        def set(self, key, value):
+            raise RuntimeError("Cannot modify the value of a static config")
+
+    class Session:
+        conf = Conf()
+
+    with pytest.raises(RuntimeError, match="filterPushdown.enabled"):
+        register(Session())
+
+
 def test_stream_changelog_and_resume(spark, catalog, customer):
     t = catalog.create_table("db.dsst", customer.schema,
                              primary_keys=["c_custkey"],
@@ -152,7 +168,7 @@ def test_call_sql_and_aggregation_fields(spark, catalog, customer):
 def test_stream_read_limits_bytes_files_minrows(spark, catalog, customer):
     """PaimonReadLimits parity: maxBytes/maxFiles bound a trigger; minRows +
     maxTriggerDelay hold a trigger until backlog or timeout (unit-level on
-    PaimonStreamReader.read — no streaming engine needed)."""
+    PaimonStreamReader's offset calls — no streaming engine needed)."""
     from incubator_paimon_spark.datasource import PaimonStreamReader
 
     t = catalog.create_table("db.dslim2", customer.schema,
@@ -161,35 +177,38 @@ def test_stream_read_limits_bytes_files_minrows(spark, catalog, customer):
     for i in range(4):
         t.write(spark, customer.filter(f"c_custkey % 4 = {i}"))
 
+    def reader(**limits):
+        return PaimonStreamReader(
+            {"path": t.path, "scan.mode": "earliest",
+             **{f"read.stream.{k}": v for k, v in limits.items()}}, False)
+
     # maxBytes: 1 byte budget → the crossing snapshot is included, one per call
-    r = PaimonStreamReader({"path": t.path, "scan.mode": "earliest",
-                            "read.stream.maxBytesPerTrigger": "1"}, False)
+    r = reader(maxBytesPerTrigger="1")
     start = r.initialOffset()
-    _, end = r.read(start)
-    assert end["snapshot_id"] == start["snapshot_id"] + 1
+    assert r.latestOffset()["snapshot_id"] == start["snapshot_id"] + 1
 
     # maxFiles: every snapshot wrote 2 buckets → 2 files crosses a 2-file cap
-    r = PaimonStreamReader({"path": t.path, "scan.mode": "earliest",
-                            "read.stream.maxFilesPerTrigger": "2"}, False)
-    _, end = r.read(r.initialOffset())
-    assert end["snapshot_id"] == start["snapshot_id"] + 1
+    r = reader(maxFilesPerTrigger="2")
+    r.initialOffset()
+    assert r.latestOffset()["snapshot_id"] == start["snapshot_id"] + 1
 
     # minRows larger than the whole backlog + long delay → batch held
-    r = PaimonStreamReader({"path": t.path, "scan.mode": "earliest",
-                            "read.stream.minRowsPerTrigger": "10000000",
-                            "read.stream.maxTriggerDelayMs": "3600000"}, False)
+    r = reader(minRowsPerTrigger="10000000", maxTriggerDelayMs="3600000")
     start = r.initialOffset()
-    it, end = r.read(start)
-    assert end == start and list(it) == []
+    assert r.latestOffset() == start
+    assert r.partitions(start, start) == []
     # delay expired → admitted despite minRows
     r._last_trigger_ms = 0
-    _, end = r.read(start)
+    end = r.latestOffset()
     assert end["snapshot_id"] == 4
 
-    # no limits → drain everything in one trigger
-    r = PaimonStreamReader({"path": t.path, "scan.mode": "earliest"}, False)
-    _, end = r.read(r.initialOffset())
+    # no limits → drain everything in one trigger, every row read
+    r = reader()
+    start = r.initialOffset()
+    end = r.latestOffset()
     assert end["snapshot_id"] == 4
+    assert sum(b.num_rows for p in r.partitions(start, end)
+               for b in r.read(p)) == customer.count()
 
 
 def test_batch_read_raw_split_and_dv(spark, catalog, customer):
@@ -398,7 +417,7 @@ def test_batch_reader_pushdown_in_filter(spark, catalog, customer):
 def test_stream_restart_mid_backfill_exactly_once(spark, catalog, customer):
     """Kill a readStream.format('paimon') query PART-WAY through a
     multi-batch backfill and restart it on the same checkpoint: the
-    offset logic (PaimonStreamReaderDist — the engine replays the last
+    offset logic (PaimonStreamReader — the engine replays the last
     batch via partitions(start, end) first, which re-seeds the window
     base; latestOffset/partitions never move the window backwards) must
     resume from the checkpointed offset — every source row lands exactly

@@ -55,6 +55,22 @@ def test_local_contract(tmp):
     _common_contract(LocalFileIO(), tmp)
 
 
+def test_local_write_overwrite_replaces_whole_and_cleans_up(tmp):
+    """write_overwrite: a reader sees exactly the new bytes and no temp
+    file is left; a write that raises keeps the old bytes and leaves no
+    temp file behind either."""
+    io = LocalFileIO()
+    p = f"{tmp}/snapshot/LATEST"
+    io.write_overwrite(p, b"old-bytes")
+    io.write_overwrite(p, b"new")
+    assert io.read_bytes(p) == b"new"
+    assert os.listdir(f"{tmp}/snapshot") == ["LATEST"]
+    with pytest.raises(TypeError):
+        io.write_overwrite(p, "text is not bytes")  # f.write raises
+    assert io.read_bytes(p) == b"new"
+    assert os.listdir(f"{tmp}/snapshot") == ["LATEST"]
+
+
 def test_local_accepts_file_uri(tmp):
     _common_contract(LocalFileIO(), f"file://{tmp}")
 

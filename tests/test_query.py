@@ -201,3 +201,40 @@ def test_lookup_cache_eviction_still_correct(spark, catalog, customer):
     assert q._cached_rows <= max(n for n, _ in q._file_cache.values())
     q.close()
     assert q._cached_rows == 0
+
+
+@pytest.mark.parametrize("fmt", ["parquet", "orc", "avro"])
+def test_lookup_values_equal_scan_values_every_format(spark, catalog, fmt):
+    """TimestampType, TimestampNTZType and a NaN double come back from
+    lookup_many as the values and Python types `Table.read().collect()`
+    gives, on every data-file format (NaN matches NaN)."""
+    import math
+    from datetime import datetime
+
+    import pyspark.sql.types as T
+
+    schema = T.StructType([
+        T.StructField("k", T.IntegerType(), False),
+        T.StructField("ts", T.TimestampType()),
+        T.StructField("ntz", T.TimestampNTZType()),
+        T.StructField("d", T.DoubleType())])
+    rows = [(1, datetime(2024, 1, 2, 3, 4, 5, 6), datetime(2024, 1, 2, 3, 4, 5),
+             float("nan")),
+            (2, None, None, None),
+            (3, datetime(1999, 12, 31, 23, 59, 59, 999999),
+             datetime(1970, 1, 1), -0.5)]
+    t = catalog.create_table(f"db.q_types_{fmt}", schema, primary_keys=["k"],
+                             options={"bucket": "1", "file.format": fmt})
+    t.write(spark, spark.createDataFrame(rows, schema))
+    scan = sorted(tuple(r) for r in t.read(spark).collect())
+    got = t.new_query().lookup_many([r[0] for r in scan])
+
+    def same(a, b):
+        if isinstance(a, float) and isinstance(b, float) \
+                and math.isnan(a) and math.isnan(b):
+            return True
+        return type(a) is type(b) and a == b
+
+    for want, row in zip(scan, got):
+        have = tuple(row[c] for c in schema.names)
+        assert all(map(same, have, want)), (fmt, have, want)

@@ -53,6 +53,29 @@ def test_changelog_state_diff(spark, catalog, customer):
                cl.groupBy(ROW_KIND).agg(F.count("*").alias("cnt")).collect()}
     assert by_kind == {"-U": 4, "+U": 4}
 
+    # row values: the diff of the two merged states, row for row, with
+    # every kind (inserts, updates and deletes across 1 → 3)
+    ins = customer.filter("c_custkey > 140")
+    t.write(spark, ins.unionByName(customer.limit(2))
+            .withColumn(ROW_KIND, F.when(F.col("c_custkey") > 140, "+I")
+                        .otherwise("-D")))
+    cl = changelog_between(spark, t, 1, 3)
+    cols = [f.name for f in t.schema.fields]
+    assert cl.columns == cols + [ROW_KIND]
+    old = {r["c_custkey"]: tuple(r) for r in t.read(spark, snapshot_id=1).collect()}
+    new = {r["c_custkey"]: tuple(r) for r in t.read(spark, snapshot_id=3).collect()}
+    want = []
+    for k in old.keys() | new.keys():
+        if k not in old:
+            want.append(new[k] + ("+I",))
+        elif k not in new:
+            want.append(old[k] + ("-D",))
+        elif old[k] != new[k]:
+            want += [old[k] + ("-U",), new[k] + ("+U",)]
+    got = [tuple(r) for r in cl.collect()]
+    assert sorted(got) == sorted(want)
+    assert {w[-1] for w in want} == {"+I", "-U", "+U", "-D"}
+
 
 def test_microbatch_stream_and_consumer(spark, catalog, customer):
     t = _mk(catalog, spark, customer, name="db.mb")
