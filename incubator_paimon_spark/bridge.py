@@ -1,9 +1,11 @@
 """Python side of the JVM->Python engine bridge (PaimonPyBridge.java).
 
 Row-level SQL against native-catalog identifiers — ``DELETE FROM`` /
-``UPDATE`` / ``MERGE INTO`` / ``CALL`` / ``ALTER COLUMN TYPE`` — keeps
-ONE implementation: the engine's Python executors (`row_ops.py`,
-`sql.execute_sql`, `procedures.call`, `SchemaManager`). The JVM catalog
+``UPDATE`` / ``MERGE INTO`` / ``CALL`` — and all DDL (``CREATE`` /
+``ALTER`` / ``DROP`` / ``RENAME TABLE``, ``CREATE`` / ``DROP
+NAMESPACE``) keep ONE implementation: the engine's Python executors
+(`row_ops.py`, `sql.execute_sql`, `procedures.call`) and its `Catalog`
+/ `SchemaManager`. The JVM catalog
 and the injected analyzer rule (PaimonSqlExtensions.java) forward over a
 py4j callback implemented here; the reference routes the same verbs
 through catalyst rules into its JVM core
@@ -24,7 +26,11 @@ import datetime
 import json
 from decimal import Decimal
 
+from pyspark.sql.types import _parse_datatype_json_value
+
+from .metadata.schema import SchemaManager
 from .predicate import And, Or, P, Predicate
+from .table import Catalog
 
 __all__ = ["install_bridge", "PaimonBridgeHandler"]
 
@@ -142,6 +148,16 @@ def _mark_no_such_system_table(exc: ValueError) -> str:
     return msg
 
 
+# bridge verb -> PaimonBridgeHandler._<verb>; a trailing session argument
+# is optional (the handler falls back to its installing session)
+_VERBS = frozenset({
+    "sql", "delete_where", "call_procedure", "list_procedures",
+    "is_warehouse_table", "list_partitions", "drop_partition",
+    "system_table_df", "global_system_table_df", "create_table",
+    "alter_table", "drop_table", "rename_table", "create_namespace",
+    "drop_namespace"})
+
+
 class PaimonBridgeHandler:
     """The py4j callback object. One per installing Python session; the
     statement's own session rides in the args so execution sees its temp
@@ -159,16 +175,14 @@ class PaimonBridgeHandler:
         from pyspark.sql import SparkSession
         return SparkSession(self._sc, jsession)
 
-    def _sql(self, statement, cat_name, warehouse, jsession):
-        from incubator_paimon_spark import Catalog
-
+    def _sql(self, statement, cat_name, warehouse, jsession=None):
         from .sql import execute_sql
         spark = self._wrap(jsession)
         cat = _PrefixCatalog(Catalog(warehouse), cat_name)
         execute_sql(spark, cat, statement)
         return "ok"
 
-    def _delete_where(self, path, filters_json, jsession):
+    def _delete_where(self, path, filters_json, jsession=None):
         from .datasource import _load_table
         from .row_ops import delete_where, truncate
         spark = self._wrap(jsession)
@@ -183,33 +197,58 @@ class PaimonBridgeHandler:
             delete_where(spark, table, pred)
         return "ok"
 
-    def _update_column_type(self, path, column, type_json):
-        from pyspark.sql.types import _parse_datatype_json_string
+    # -- DDL: one verb per mutation, each one call into the Catalog or
+    # SchemaManager that owns the rule (PaimonSparkCatalog keeps only the
+    # Spark-API checks) -------------------------------------------------
 
-        from .metadata.schema import SchemaManager
-        SchemaManager(path).update_column_type(
-            column, _parse_datatype_json_string(type_json))
+    def _create_table(self, warehouse, identifier, spec_json):
+        spec = json.loads(spec_json)
+        pk = spec["primary_key"]
+        cat = Catalog(warehouse)
+        try:
+            cat.create_table(
+                identifier, _parse_datatype_json_value(spec["schema"]),
+                partition_keys=spec["partition_keys"],
+                primary_keys=[k.strip() for k in pk.split(",")] if pk else None,
+                options=spec["options"], comment=spec["comment"])
+        except (ValueError, RuntimeError) as exc:
+            # PaimonSparkCatalog checked the table was absent, so if it
+            # exists now another writer won the race (to the existence
+            # check or to schema-0's exclusive create): mark it with the
+            # structured sentinel the catalog turns into
+            # TableAlreadyExistsException. A refused schema writes
+            # nothing, so its error surfaces as itself.
+            db, name = identifier.split(".", 1)
+            if name in cat.list_tables(db):
+                raise ValueError("TABLE_ALREADY_EXISTS: " + str(exc)) from exc
+            raise
         return "ok"
 
-    def _move_column(self, path, column, after):
-        from .metadata.schema import SchemaManager
-        SchemaManager(path).move_column(column, after)
+    def _alter_table(self, path, changes_json):
+        """All of one ALTER TABLE statement's changes (encoded by
+        PaimonSparkCatalog.changeJson) in ONE schema commit."""
+        changes = json.loads(changes_json)
+        for c in changes:
+            for k in ("dtype", "new_type"):
+                if k in c:
+                    c[k] = _parse_datatype_json_value(c[k])
+        SchemaManager(path).commit_changes(changes)
         return "ok"
 
-    def _update_column_nullability(self, path, column, nullable):
-        from .metadata.schema import SchemaManager
-        SchemaManager(path).update_column_nullability(column, bool(nullable))
+    def _drop_table(self, warehouse, identifier):
+        Catalog(warehouse).drop_table(identifier, ignore_if_not_exists=False)
         return "ok"
 
-    def _add_column(self, path, column, type_json, nullable, comment,
-                    first, after):
-        from pyspark.sql.types import _parse_datatype_json_string
+    def _rename_table(self, warehouse, old, new):
+        Catalog(warehouse).rename_table(old, new)
+        return "ok"
 
-        from .metadata.schema import SchemaManager
-        SchemaManager(path).add_column(
-            column, _parse_datatype_json_string(type_json),
-            nullable=bool(nullable), description=comment,
-            after=after, first=bool(first))
+    def _create_namespace(self, warehouse, db):
+        Catalog(warehouse).create_database(db)
+        return "ok"
+
+    def _drop_namespace(self, warehouse, db, cascade):
+        Catalog(warehouse).drop_database(db, cascade=bool(cascade))
         return "ok"
 
     def _is_warehouse_table(self, warehouse, db, tbl):
@@ -243,7 +282,7 @@ class PaimonBridgeHandler:
         out.sort(key=lambda r: tuple(str(x) for x in r))
         return json.dumps(out)
 
-    def _drop_partition(self, path, spec_str, jsession):
+    def _drop_partition(self, path, spec_str, jsession=None):
         from .datasource import _load_table
         spec = {}
         for kv in spec_str.split(","):
@@ -257,14 +296,12 @@ class PaimonBridgeHandler:
         _load_table({"path": path}).drop_partition(spec)
         return "ok"
 
-    def _call_procedure(self, payload_json, cat_name, warehouse, jsession):
+    def _call_procedure(self, payload_json, cat_name, warehouse, jsession=None):
         """CALL through Spark 4's ProcedureCatalog: named args arrive
         with by_name=True; positionals are matched against the Python
         procedure's declared parameter order (the registry is the one
         source of signatures)."""
         import inspect
-
-        from incubator_paimon_spark import Catalog
 
         from .procedures import _PROCEDURES, call
         p = json.loads(payload_json)
@@ -298,7 +335,7 @@ class PaimonBridgeHandler:
         from .procedures import _PROCEDURES
         return json.dumps(sorted(_PROCEDURES))
 
-    def _system_table_df(self, path, name, jsession):
+    def _system_table_df(self, path, name, jsession=None):
         """`SELECT * FROM <cat>.db.`t$<sys>``: build the system-table
         DataFrame in the statement's session and return the LIVE JVM
         Dataset by reference — the catalog wraps it as a DSv2 scan, so
@@ -312,9 +349,7 @@ class PaimonBridgeHandler:
             raise ValueError(_mark_no_such_system_table(exc)) from exc
         return df._jdf
 
-    def _global_system_table_df(self, warehouse, name, jsession):
-        from incubator_paimon_spark import Catalog
-
+    def _global_system_table_df(self, warehouse, name, jsession=None):
         from .system_tables import catalog_system_table
         spark = self._wrap(jsession)
         try:
@@ -326,41 +361,9 @@ class PaimonBridgeHandler:
     # -- BiFunction ----------------------------------------------------
 
     def apply(self, verb, args):
-        a = list(args) if args is not None else []
-        if verb == "sql":
-            return self._sql(a[0], a[1], a[2], a[3] if len(a) > 3 else None)
-        if verb == "delete_where":
-            return self._delete_where(a[0], a[1],
-                                      a[2] if len(a) > 2 else None)
-        if verb == "update_column_type":
-            return self._update_column_type(a[0], a[1], a[2])
-        if verb == "move_column":
-            return self._move_column(a[0], a[1],
-                                     a[2] if len(a) > 2 else None)
-        if verb == "update_column_nullability":
-            return self._update_column_nullability(a[0], a[1], a[2])
-        if verb == "add_column":
-            return self._add_column(a[0], a[1], a[2], a[3], a[4], a[5],
-                                    a[6] if len(a) > 6 else None)
-        if verb == "call_procedure":
-            return self._call_procedure(a[0], a[1], a[2],
-                                        a[3] if len(a) > 3 else None)
-        if verb == "list_procedures":
-            return self._list_procedures()
-        if verb == "is_warehouse_table":
-            return self._is_warehouse_table(a[0], a[1], a[2])
-        if verb == "list_partitions":
-            return self._list_partitions(a[0])
-        if verb == "drop_partition":
-            return self._drop_partition(a[0], a[1],
-                                        a[2] if len(a) > 2 else None)
-        if verb == "system_table_df":
-            return self._system_table_df(a[0], a[1],
-                                         a[2] if len(a) > 2 else None)
-        if verb == "global_system_table_df":
-            return self._global_system_table_df(a[0], a[1],
-                                                a[2] if len(a) > 2 else None)
-        raise ValueError(f"unknown bridge verb {verb!r}")
+        if verb not in _VERBS:
+            raise ValueError(f"unknown bridge verb {verb!r}")
+        return getattr(self, "_" + verb)(*list(args or []))
 
     class Java:  # py4j proxy declaration
         implements = ["java.util.function.BiFunction"]

@@ -276,17 +276,18 @@ class LocalFileIO(FileIO):
         path = self._p(path)
         os.makedirs(os.path.dirname(path), exist_ok=True)
         tmp = f"{path}.tmp-{uuid.uuid4().hex}"
-        with open(tmp, "wb") as f:
-            f.write(data)
-            f.flush()
-            os.fsync(f.fileno())
         try:
+            with open(tmp, "wb") as f:
+                f.write(data)
+                f.flush()
+                os.fsync(f.fileno())
             os.link(tmp, path)
             return True
         except FileExistsError:
             return False
         finally:
-            os.unlink(tmp)
+            with contextlib.suppress(FileNotFoundError):
+                os.unlink(tmp)
 
     def write_overwrite(self, path, data):
         """Readers see the old bytes or the new ones, never a mix; a failed

@@ -911,23 +911,16 @@ class JdbcCatalog(Catalog):
                     return Table(path)
                 raise ValueError(f"table {identifier} already exists")
             try:
-                from .metadata.schema import SchemaManager, TableSchema
-                from .table import _validate
-                ts = TableSchema.create(schema, partition_keys,
-                                        primary_keys, options, comment)
-                _validate(ts)
-                SchemaManager(path).commit_new(ts)
+                return self._create_new_table(db, name, schema,
+                                              partition_keys, primary_keys,
+                                              options, comment)
             except Exception:
                 # a claim without a schema is a phantom: release it so
                 # the failed create doesn't poison the identifier
-                self.dialect.release_table(self.catalog_key, db, name)
+                from .metadata.schema import SchemaManager
+                if SchemaManager(path).latest_id() is None:
+                    self.dialect.release_table(self.catalog_key, db, name)
                 raise
-        t = Table(path)
-        for ref, database in getattr(self, "_attached", []):
-            s = ref()
-            if s is not None and (database is None or database == db):
-                self._bind_view(s, t, f"{db}_{name}")
-        return t
 
     def get_table(self, identifier: str) -> Table:
         db, name = identifier.split(".", 1)

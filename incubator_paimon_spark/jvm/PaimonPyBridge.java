@@ -1,12 +1,13 @@
 /*
  * JVM -> Python engine bridge. The catalog's row-level SQL surface
- * (DELETE/UPDATE/MERGE INTO/CALL/ALTER COLUMN TYPE) delegates to the
- * Python engine's proven executors (row_ops.py, sql.execute_sql,
- * procedures.call) instead of replicating them in Java — the reference
- * wires the same operations through catalyst rules into its JVM core
- * (paimon-spark/.../catalyst/analysis/PaimonDeleteTable.scala,
- * PaimonMergeIntoBase.scala); here the core IS Python, so the rule's
- * body is one callback.
+ * (DELETE/UPDATE/MERGE INTO/CALL) and all of its DDL (CREATE/ALTER/
+ * DROP/RENAME TABLE, CREATE/DROP NAMESPACE) delegate to the Python
+ * engine (row_ops.py, sql.execute_sql, procedures.call, Catalog,
+ * SchemaManager) instead of replicating it in Java -- the reference
+ * wires the same operations through catalyst rules and its SparkCatalog
+ * into its JVM core (paimon-spark/.../catalyst/analysis/
+ * PaimonDeleteTable.scala, PaimonMergeIntoBase.scala, SparkCatalog.java);
+ * here the core IS Python, so each operation is one callback.
  *
  * Mechanics: the owning Python session registers a py4j callback object
  * implementing java.util.function.BiFunction (a JDK interface, so py4j's

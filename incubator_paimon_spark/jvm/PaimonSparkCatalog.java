@@ -9,12 +9,11 @@
  * DataSource relation for it (spark.read.format("paimon")), and unwraps
  * Spark's own connector Table from the analyzed plan -- so scans,
  * filter pushdown, merge-on-read and streaming all run through exactly
- * the code the format("paimon") path uses. DDL (r13) writes the SAME
- * schema-N JSON files the Python SchemaManager writes -- the file format
- * is the contract -- so a table created by SQL `CREATE TABLE` is
- * indistinguishable from one created by Catalog.create_table; evolution
- * rules that carry real logic (type widening) still point at the Python
- * API rather than being replicated here.
+ * the code the format("paimon") path uses. DDL is delegated the same
+ * way: each CREATE/ALTER/DROP/RENAME is one PaimonPyBridge call into the
+ * Python Catalog / SchemaManager, which own every schema rule, so a
+ * table created by SQL `CREATE TABLE` is the one Catalog.create_table
+ * would create.
  *
  * The Python side compiles this lazily with the JDK's javac when a
  * caller asks for SQL catalog installation (jvm_catalog.py); no build
@@ -161,28 +160,31 @@ public class PaimonSparkCatalog
     private static final java.util.concurrent.ConcurrentHashMap<String, Table>
             TABLE_CACHE = new java.util.concurrent.ConcurrentHashMap<>();
 
-    private static String schemaStamp(File tableDir) {
-        File sd = new File(tableDir, "schema");
-        long bestId = -1;
+    /** The highest schema/schema-N file, or null; a leaked
+     *  `schema-N.tmp-*` from a failed create is not a schema. */
+    static File latestSchemaFile(File tableDir) {
         File best = null;
-        File[] children = sd.listFiles();
+        long bestId = -1;
+        File[] children = new File(tableDir, "schema").listFiles();
         if (children != null) {
             for (File f : children) {
-                String n = f.getName();
-                if (n.startsWith("schema-") && !n.contains(".tmp-")) {
-                    try {
-                        long id = Long.parseLong(n.substring(7));
-                        if (id > bestId) {
-                            bestId = id;
-                            best = f;
-                        }
-                    } catch (NumberFormatException ignored) {
+                if (f.getName().matches("schema-\\d+")) {
+                    long id = Long.parseLong(f.getName().substring(7));
+                    if (id > bestId) {
+                        bestId = id;
+                        best = f;
                     }
                 }
             }
         }
+        return best;
+    }
+
+    private static String schemaStamp(File tableDir) {
+        File best = latestSchemaFile(tableDir);
         return best == null ? "none"
-                : bestId + ":" + best.lastModified() + ":" + best.length();
+                : best.getName() + ":" + best.lastModified() + ":"
+                        + best.length();
     }
 
     private static String snapshotStamp(File tableDir) {
@@ -460,25 +462,7 @@ public class PaimonSparkCatalog
 
         static TableMeta read(File tableDir) {
             try {
-                File sd = new File(tableDir, "schema");
-                File best = null;
-                long bestId = -1;
-                File[] children = sd.listFiles();
-                if (children != null) {
-                    for (File f : children) {
-                        String n = f.getName();
-                        if (n.startsWith("schema-")) {
-                            try {
-                                long id = Long.parseLong(n.substring(7));
-                                if (id > bestId) {
-                                    bestId = id;
-                                    best = f;
-                                }
-                            } catch (NumberFormatException ignored) {
-                            }
-                        }
-                    }
-                }
+                File best = latestSchemaFile(tableDir);
                 if (best == null) {
                     return null;
                 }
@@ -1256,112 +1240,29 @@ public class PaimonSparkCatalog
     private static UnsupportedOperationException pythonDdl(String op) {
         return new UnsupportedOperationException(
                 op + " is served by the Python API (incubator_paimon_spark"
-                        + ".Catalog / SchemaManager) -- it owns the "
-                        + "evolution rules this SQL catalog does not "
-                        + "replicate");
+                        + ".Catalog / SchemaManager), not by this SQL "
+                        + "catalog");
     }
 
     // ------------------------------------------------------------------
-    // DDL. The contract is the schema-N JSON file the Python
-    // SchemaManager writes (metadata/schema.py:110-121 to_json; the
-    // reference's SchemaManager.java:76 schema files): fields are Spark
-    // StructField jsonValue payloads + a stable field id, committed via
-    // exclusive create (tmp file + no-replace ATOMIC_MOVE = the local
-    // FileIO try_create). Everything else about the table -- reads,
-    // writes, compaction -- keeps running through the Python engine,
-    // which re-reads the latest schema file on every Table load.
+    // DDL. Every mutation is ONE bridge call into the Python engine's
+    // Catalog / SchemaManager (bridge.py create_table, alter_table,
+    // drop_table, rename_table, create_namespace, drop_namespace), which
+    // own every schema rule -- the same ones Catalog.create_table,
+    // catalog.sql and the Jdbc catalog apply (the reference's
+    // SparkCatalog likewise only turns Spark TableChanges into
+    // SchemaChanges for its core catalog). This side keeps the Spark-API
+    // contract only: existence checks with Spark's exception types,
+    // identity-only partition transforms, reserved-property filtering,
+    // and the loadTable cache.
 
     private static final java.util.Set<String> RESERVED_PROPS =
             new java.util.HashSet<>(java.util.Arrays.asList(
                     "provider", "location", "comment", "owner", "external",
                     "path", "primary-key", "option.primary-key"));
 
-    // CoreOptions.getImmutableOptionKeys() mirror (schema.py:302): layout
-    // and merge semantics of already-written files
-    private static final java.util.Set<String> IMMUTABLE_OPTIONS =
-            new java.util.HashSet<>(java.util.Arrays.asList(
-                    "bucket-key", "merge-engine", "ignore-delete",
-                    "sequence.field", "rowkind.field", "primary-key",
-                    "partition"));
-
-    private static com.fasterxml.jackson.databind.node.ObjectNode
-            schemaJson(ObjectMapper om, long id,
-                       com.fasterxml.jackson.databind.node.ArrayNode fields,
-                       long highestFieldId, List<String> partitionKeys,
-                       List<String> primaryKeys, Map<String, String> options,
-                       String comment) {
-        com.fasterxml.jackson.databind.node.ObjectNode root =
-                om.createObjectNode();
-        root.put("version", 1);
-        root.put("id", id);
-        root.set("fields", fields);
-        root.put("highestFieldId", highestFieldId);
-        com.fasterxml.jackson.databind.node.ArrayNode pk = om.createArrayNode();
-        for (String k : primaryKeys) {
-            pk.add(k);
-        }
-        com.fasterxml.jackson.databind.node.ArrayNode pt = om.createArrayNode();
-        for (String k : partitionKeys) {
-            pt.add(k);
-        }
-        root.set("partitionKeys", pt);
-        root.set("primaryKeys", pk);
-        com.fasterxml.jackson.databind.node.ObjectNode opts =
-                om.createObjectNode();
-        for (Map.Entry<String, String> e : options.entrySet()) {
-            opts.put(e.getKey(), e.getValue());
-        }
-        root.set("options", opts);
-        if (comment == null) {
-            root.putNull("comment");
-        } else {
-            root.put("comment", comment);
-        }
-        root.put("timeMillis", System.currentTimeMillis());
-        return root;
-    }
-
-    /** Exclusive create of schema/schema-&lt;id&gt;; false = lost the race. */
-    private static boolean commitSchema(File tableDir, long id, JsonNode json)
-            throws java.io.IOException {
-        File sd = new File(tableDir, "schema");
-        sd.mkdirs();
-        File target = new File(sd, "schema-" + id);
-        File tmp = new File(sd, "schema-" + id + ".tmp-"
-                + java.util.UUID.randomUUID().toString().replace("-", ""));
-        new ObjectMapper().writerWithDefaultPrettyPrinter()
-                .writeValue(tmp, json);
-        try {
-            java.nio.file.Files.move(tmp.toPath(), target.toPath());
-            return true;
-        } catch (java.nio.file.FileAlreadyExistsException e) {
-            tmp.delete();
-            return false;
-        }
-    }
-
-    private static JsonNode latestSchemaNode(File tableDir)
-            throws java.io.IOException {
-        File sd = new File(tableDir, "schema");
-        File best = null;
-        long bestId = -1;
-        File[] children = sd.listFiles();
-        if (children != null) {
-            for (File f : children) {
-                String n = f.getName();
-                if (n.startsWith("schema-") && !n.contains(".tmp-")) {
-                    try {
-                        long id = Long.parseLong(n.substring(7));
-                        if (id > bestId) {
-                            bestId = id;
-                            best = f;
-                        }
-                    } catch (NumberFormatException ignored) {
-                    }
-                }
-            }
-        }
-        return best == null ? null : new ObjectMapper().readTree(best);
+    private static String identifier(Identifier ident) {
+        return ident.namespace()[0] + "." + ident.name();
     }
 
     @Override
@@ -1387,13 +1288,6 @@ public class PaimonSparkCatalog
             partitionKeys.add(String.join(".",
                     t.references()[0].fieldNames()));
         }
-        List<String> primaryKeys = new ArrayList<>();
-        String pkProp = properties.get("primary-key");
-        if (pkProp != null && !pkProp.isEmpty()) {
-            for (String k : pkProp.split(",")) {
-                primaryKeys.add(k.trim());
-            }
-        }
         java.util.LinkedHashMap<String, String> options =
                 new java.util.LinkedHashMap<>();
         for (Map.Entry<String, String> e : properties.entrySet()) {
@@ -1401,61 +1295,30 @@ public class PaimonSparkCatalog
                 options.put(e.getKey(), e.getValue());
             }
         }
-        // the Python _validate's load-bearing rules (table.py:735)
-        List<String> names = new ArrayList<>(
-                java.util.Arrays.asList(schema.fieldNames()));
-        for (String k : partitionKeys) {
-            if (!names.contains(k)) {
-                throw new IllegalArgumentException(
-                        "partition column " + k + " not in schema " + names);
-            }
-        }
-        for (String k : primaryKeys) {
-            if (!names.contains(k)) {
-                throw new IllegalArgumentException(
-                        "primary key column " + k + " not in schema " + names);
-            }
-        }
-        String engine = options.getOrDefault("merge-engine", "deduplicate");
-        if (!"deduplicate".equals(engine) && primaryKeys.isEmpty()) {
-            throw new IllegalArgumentException(
-                    "merge-engine requires primary keys");
-        }
-        if (primaryKeys.size() == 1
-                && partitionKeys.contains(primaryKeys.get(0))) {
-            throw new IllegalArgumentException(
-                    "primary key must not equal partition key only");
-        }
+        uncache(ident); // a re-created identifier must not serve stale
         try {
             ObjectMapper om = new ObjectMapper();
-            // fields = Spark's own StructType json payload + stable ids;
-            // PK fields are non-nullable (TableSchema.create parity)
-            JsonNode st = om.readTree(schema.json());
-            com.fasterxml.jackson.databind.node.ArrayNode fields =
-                    om.createArrayNode();
-            int i = 0;
-            for (JsonNode f : st.path("fields")) {
-                com.fasterxml.jackson.databind.node.ObjectNode fo =
-                        f.deepCopy();
-                if (primaryKeys.contains(fo.path("name").asText())) {
-                    fo.put("nullable", false);
-                }
-                fo.put("id", i++);
-                fields.add(fo);
-            }
-            File dir = tableDir(ident);
-            dir.mkdirs();
-            uncache(ident); // a re-created identifier must not serve stale
-            if (!commitSchema(dir, 0, schemaJson(
-                    om, 0, fields, i - 1, partitionKeys, primaryKeys,
-                    options, properties.get("comment")))) {
+            java.util.LinkedHashMap<String, Object> spec =
+                    new java.util.LinkedHashMap<>();
+            spec.put("schema", om.readTree(schema.json()));
+            spec.put("partition_keys", partitionKeys);
+            spec.put("primary_key", properties.get("primary-key"));
+            spec.put("options", options);
+            spec.put("comment", properties.get("comment"));
+            PaimonPyBridge.call("create_table", warehouse,
+                    identifier(ident), om.writeValueAsString(spec));
+            return loadWith(ident, null, null);
+        } catch (com.fasterxml.jackson.core.JsonProcessingException
+                | NoSuchTableException e) {
+            throw new IllegalStateException(e);
+        } catch (RuntimeException e) {
+            // the bridge marks a lost create race with a structured
+            // sentinel (bridge.py TABLE_ALREADY_EXISTS)
+            String m = e.getMessage();
+            if (m != null && m.contains("TABLE_ALREADY_EXISTS:")) {
                 throw new TableAlreadyExistsException(ident);
             }
-            return loadWith(ident, null, null);
-        } catch (TableAlreadyExistsException e) {
             throw e;
-        } catch (Exception e) {
-            throw new RuntimeException("CREATE TABLE failed: " + e, e);
         }
     }
 
@@ -1465,107 +1328,88 @@ public class PaimonSparkCatalog
         if (!tableExists(ident)) {
             throw new NoSuchTableException(ident);
         }
-        // ALTER COLUMN TYPE / FIRST / AFTER delegate over the bridge to
-        // the Python SchemaManager (update_column_type owns the widening
-        // matrix — byte->..->decimal chains, SchemaChange.java:95-512
-        // parity; move_column owns reordering, which is metadata-only
-        // because field ids anchor reads) — the catalog never replicates
-        // those rules. Spark sends one TableChange per ALTER COLUMN
-        // statement, so a mixed batch stays unsupported.
-        boolean bridged = false;
+        // the whole statement is one SchemaManager.commit_changes call:
+        // one schema-N, or nothing when any change is refused
+        ObjectMapper om = new ObjectMapper();
+        com.fasterxml.jackson.databind.node.ArrayNode arr =
+                om.createArrayNode();
         for (TableChange c : changes) {
-            bridged |= c instanceof TableChange.UpdateColumnType
-                    || c instanceof TableChange.UpdateColumnPosition
-                    || c instanceof TableChange.UpdateColumnNullability
-                    || (c instanceof TableChange.AddColumn
-                            && ((TableChange.AddColumn) c).position() != null);
+            arr.add(changeJson(om, c));
         }
-        if (bridged) {
-            if (changes.length != 1) {
-                throw pythonDdl("ALTER COLUMN TYPE/position/nullability "
-                        + "combined with other changes");
-            }
-            if (changes[0] instanceof TableChange.AddColumn) {
-                // ADD COLUMN ... FIRST/AFTER: placed in ONE schema
-                // commit by SchemaManager.add_column
-                TableChange.AddColumn ac =
-                        (TableChange.AddColumn) changes[0];
-                String after = null;
-                boolean firstPos =
-                        ac.position() instanceof TableChange.First;
-                if (ac.position() instanceof TableChange.After) {
-                    after = ((TableChange.After) ac.position()).column();
-                } else if (!firstPos) {
-                    throw pythonDdl("column position " + ac.position());
-                }
-                PaimonPyBridge.call("add_column",
-                        tableDir(ident).getAbsolutePath(),
-                        singleName(ac.fieldNames()),
-                        ac.dataType().json(), ac.isNullable(),
-                        ac.comment(), firstPos, after);
-            } else if (changes[0] instanceof TableChange.UpdateColumnType) {
-                TableChange.UpdateColumnType uc =
-                        (TableChange.UpdateColumnType) changes[0];
-                PaimonPyBridge.call("update_column_type",
-                        tableDir(ident).getAbsolutePath(),
-                        singleName(uc.fieldNames()),
-                        uc.newDataType().json());
-            } else if (changes[0]
-                    instanceof TableChange.UpdateColumnNullability) {
-                TableChange.UpdateColumnNullability un =
-                        (TableChange.UpdateColumnNullability) changes[0];
-                PaimonPyBridge.call("update_column_nullability",
-                        tableDir(ident).getAbsolutePath(),
-                        singleName(un.fieldNames()), un.nullable());
-            } else {
-                TableChange.UpdateColumnPosition up =
-                        (TableChange.UpdateColumnPosition) changes[0];
-                String after;
-                if (up.position() instanceof TableChange.First) {
-                    after = null;
-                } else if (up.position() instanceof TableChange.After) {
-                    after = ((TableChange.After) up.position()).column();
-                } else {
-                    throw pythonDdl("column position " + up.position());
-                }
-                PaimonPyBridge.call("move_column",
-                        tableDir(ident).getAbsolutePath(),
-                        singleName(up.fieldNames()), after);
-            }
-            uncache(ident);
-            return loadWith(ident, null, null);
-        }
+        PaimonPyBridge.call("alter_table",
+                tableDir(ident).getAbsolutePath(), arr.toString());
+        uncache(ident);
+        return loadWith(ident, null, null);
+    }
+
+    /** One TableChange as the change dict SchemaManager.commit_changes takes. */
+    private static com.fasterxml.jackson.databind.node.ObjectNode changeJson(
+            ObjectMapper om, TableChange c) {
+        com.fasterxml.jackson.databind.node.ObjectNode o =
+                om.createObjectNode();
         try {
-            File dir = tableDir(ident);
-            JsonNode base = latestSchemaNode(dir);
-            com.fasterxml.jackson.databind.node.ObjectNode next =
-                    base.deepCopy();
-            ObjectMapper om = new ObjectMapper();
-            long nextId = base.path("id").asLong() + 1;
-            next.put("id", nextId);
-            next.put("timeMillis", System.currentTimeMillis());
-            com.fasterxml.jackson.databind.node.ObjectNode opts =
-                    (com.fasterxml.jackson.databind.node.ObjectNode)
-                            next.path("options");
-            com.fasterxml.jackson.databind.node.ArrayNode fields =
-                    (com.fasterxml.jackson.databind.node.ArrayNode)
-                            next.path("fields");
-            for (TableChange c : changes) {
-                applyChange(om, next, opts, fields, base, c);
+            if (c instanceof TableChange.SetProperty) {
+                TableChange.SetProperty sp = (TableChange.SetProperty) c;
+                o.put("op", "set_option");
+                o.put("key", sp.property());
+                o.put("value", sp.value());
+            } else if (c instanceof TableChange.RemoveProperty) {
+                o.put("op", "remove_option");
+                o.put("key", ((TableChange.RemoveProperty) c).property());
+            } else if (c instanceof TableChange.AddColumn) {
+                TableChange.AddColumn ac = (TableChange.AddColumn) c;
+                o.put("op", "add_column");
+                o.put("name", singleName(ac.fieldNames()));
+                o.set("dtype", om.readTree(ac.dataType().json()));
+                o.put("nullable", ac.isNullable());
+                o.put("description", ac.comment());
+                o.put("first", ac.position() instanceof TableChange.First);
+                o.put("after", afterColumn(ac.position()));
+            } else if (c instanceof TableChange.RenameColumn) {
+                TableChange.RenameColumn rc = (TableChange.RenameColumn) c;
+                o.put("op", "rename_column");
+                o.put("name", singleName(rc.fieldNames()));
+                o.put("new_name", rc.newName());
+            } else if (c instanceof TableChange.DeleteColumn) {
+                o.put("op", "drop_column");
+                o.put("name", singleName(
+                        ((TableChange.DeleteColumn) c).fieldNames()));
+            } else if (c instanceof TableChange.UpdateColumnComment) {
+                TableChange.UpdateColumnComment uc =
+                        (TableChange.UpdateColumnComment) c;
+                o.put("op", "update_column_comment");
+                o.put("name", singleName(uc.fieldNames()));
+                o.put("comment", uc.newComment());
+            } else if (c instanceof TableChange.UpdateColumnType) {
+                TableChange.UpdateColumnType uc =
+                        (TableChange.UpdateColumnType) c;
+                o.put("op", "update_column_type");
+                o.put("name", singleName(uc.fieldNames()));
+                o.set("new_type", om.readTree(uc.newDataType().json()));
+            } else if (c instanceof TableChange.UpdateColumnNullability) {
+                TableChange.UpdateColumnNullability un =
+                        (TableChange.UpdateColumnNullability) c;
+                o.put("op", "update_column_nullability");
+                o.put("name", singleName(un.fieldNames()));
+                o.put("nullable", un.nullable());
+            } else if (c instanceof TableChange.UpdateColumnPosition) {
+                TableChange.UpdateColumnPosition up =
+                        (TableChange.UpdateColumnPosition) c;
+                o.put("op", "move_column");
+                o.put("name", singleName(up.fieldNames()));
+                o.put("after", afterColumn(up.position())); // null = FIRST
+            } else {
+                throw pythonDdl(c.getClass().getSimpleName());
             }
-            if (!commitSchema(dir, nextId, next)) {
-                throw new IllegalStateException(
-                        "schema-" + nextId + " already exists "
-                                + "(concurrent DDL) - retry");
-            }
-            uncache(ident);
-            return loadWith(ident, null, null);
-        } catch (NoSuchTableException | UnsupportedOperationException
-                | IllegalArgumentException | IllegalStateException e) {
-            throw e;
-        } catch (Exception e) {
-            throw new RuntimeException("ALTER TABLE failed: " + e, e);
+        } catch (com.fasterxml.jackson.core.JsonProcessingException e) {
+            throw new IllegalStateException(e);
         }
+        return o;
+    }
+
+    private static String afterColumn(TableChange.ColumnPosition p) {
+        return p instanceof TableChange.After
+                ? ((TableChange.After) p).column() : null;
     }
 
     private static String singleName(String[] fieldNames) {
@@ -1576,184 +1420,14 @@ public class PaimonSparkCatalog
         return fieldNames[0];
     }
 
-    private static int fieldIndex(
-            com.fasterxml.jackson.databind.node.ArrayNode fields,
-            String name) {
-        for (int i = 0; i < fields.size(); i++) {
-            if (fields.get(i).path("name").asText().equals(name)) {
-                return i;
-            }
-        }
-        throw new IllegalArgumentException("no such column: " + name);
-    }
-
-    private void applyChange(
-            ObjectMapper om,
-            com.fasterxml.jackson.databind.node.ObjectNode next,
-            com.fasterxml.jackson.databind.node.ObjectNode opts,
-            com.fasterxml.jackson.databind.node.ArrayNode fields,
-            JsonNode base,
-            TableChange c) throws Exception {
-        if (c instanceof TableChange.SetProperty) {
-            TableChange.SetProperty sp = (TableChange.SetProperty) c;
-            checkMutable(sp.property(), sp.value(), base);
-            checkBucketChange(sp.property(), sp.value(), base);
-            opts.put(sp.property(), sp.value());
-        } else if (c instanceof TableChange.RemoveProperty) {
-            String k = ((TableChange.RemoveProperty) c).property();
-            checkMutable(k, null, base);
-            opts.remove(k);
-        } else if (c instanceof TableChange.AddColumn) {
-            TableChange.AddColumn ac = (TableChange.AddColumn) c;
-            String name = singleName(ac.fieldNames());
-            if (ac.position() != null) {
-                // single-change ADD COLUMN FIRST/AFTER bridges above;
-                // reaching here means a multi-change batch
-                throw pythonDdl("ADD COLUMN with a position combined "
-                        + "with other changes");
-            }
-            for (JsonNode f : fields) {
-                if (f.path("name").asText().equals(name)) {
-                    throw new IllegalArgumentException(
-                            "column " + name + " already exists");
-                }
-            }
-            long hid = next.path("highestFieldId").asLong() + 1;
-            next.put("highestFieldId", hid);
-            com.fasterxml.jackson.databind.node.ObjectNode fo =
-                    om.createObjectNode();
-            fo.put("name", name);
-            fo.set("type", om.readTree(ac.dataType().json()));
-            fo.put("nullable", ac.isNullable());
-            fo.set("metadata", om.createObjectNode());
-            fo.put("id", hid);
-            if (ac.comment() != null) {
-                fo.put("description", ac.comment());
-            }
-            fields.add(fo);
-        } else if (c instanceof TableChange.RenameColumn) {
-            TableChange.RenameColumn rc = (TableChange.RenameColumn) c;
-            String name = singleName(rc.fieldNames());
-            String newName = rc.newName();
-            for (JsonNode f : fields) {
-                if (f.path("name").asText().equals(newName)) {
-                    throw new IllegalArgumentException(
-                            "column " + newName + " already exists");
-                }
-            }
-            int i = fieldIndex(fields, name);
-            ((com.fasterxml.jackson.databind.node.ObjectNode) fields.get(i))
-                    .put("name", newName);
-            renameInArray(next, "primaryKeys", name, newName);
-            renameInArray(next, "partitionKeys", name, newName);
-        } else if (c instanceof TableChange.DeleteColumn) {
-            String name = singleName(
-                    ((TableChange.DeleteColumn) c).fieldNames());
-            for (JsonNode k : base.path("primaryKeys")) {
-                if (k.asText().equals(name)) {
-                    throw new IllegalArgumentException(
-                            "cannot drop key column " + name);
-                }
-            }
-            for (JsonNode k : base.path("partitionKeys")) {
-                if (k.asText().equals(name)) {
-                    throw new IllegalArgumentException(
-                            "cannot drop key column " + name);
-                }
-            }
-            fields.remove(fieldIndex(fields, name));
-        } else if (c instanceof TableChange.UpdateColumnComment) {
-            TableChange.UpdateColumnComment uc =
-                    (TableChange.UpdateColumnComment) c;
-            int i = fieldIndex(fields, singleName(uc.fieldNames()));
-            ((com.fasterxml.jackson.databind.node.ObjectNode) fields.get(i))
-                    .put("description", uc.newComment());
-        } else if (c instanceof TableChange.UpdateColumnType) {
-            // handled above via the bridge (single-change statements);
-            // reaching here means it was mixed into a multi-change batch
-            throw pythonDdl("ALTER COLUMN TYPE");
-        } else {
-            throw pythonDdl(c.getClass().getSimpleName());
-        }
-    }
-
-    private static void renameInArray(
-            com.fasterxml.jackson.databind.node.ObjectNode root, String key,
-            String name, String newName) {
-        com.fasterxml.jackson.databind.node.ArrayNode arr =
-                (com.fasterxml.jackson.databind.node.ArrayNode)
-                        root.path(key);
-        for (int i = 0; i < arr.size(); i++) {
-            if (arr.get(i).asText().equals(name)) {
-                arr.set(i, newName);
-            }
-        }
-    }
-
-    private static void checkMutable(String key, String value, JsonNode base)
-            throws IllegalArgumentException {
-        if (IMMUTABLE_OPTIONS.contains(key)) {
-            String cur = base.path("options").path(key).isMissingNode()
-                    ? null : base.path("options").path(key).asText();
-            if (value == null || !value.equals(cur)) {
-                // SchemaManager.checkAlterTableOption parity: re-setting
-                // the current value is an allowed no-op
-                throw new IllegalArgumentException(
-                        "Change '" + key + "' is not supported.");
-            }
-        }
-    }
-
-    private static void checkBucketChange(String key, String value,
-                                          JsonNode base) {
-        if (!"bucket".equals(key)) {
-            return;
-        }
-        int oldB = Integer.parseInt(
-                base.path("options").path("bucket").asText("-1"));
-        int newB = Integer.parseInt(value);
-        if (newB == oldB) {
-            return;
-        }
-        if (newB == 0 || newB < -1) {
-            throw new IllegalArgumentException(
-                    "The number of buckets needs to be greater than 0.");
-        }
-        if (oldB == -1 || newB == -1) {
-            throw new IllegalArgumentException(
-                    "Cannot change 'bucket' from " + oldB + " to " + newB
-                            + ": transitions between -1 and a fixed count "
-                            + "are not supported (rescale-bucket.md).");
-        }
-        boolean hasKey = base.path("primaryKeys").size() > 0
-                || !base.path("options").path("bucket-key").asText("")
-                        .isEmpty();
-        if (!hasKey) {
-            throw new IllegalArgumentException(
-                    "Cannot rescale 'bucket' on a table without a bucket "
-                            + "key (bucket-key or primary key).");
-        }
-    }
-
     @Override
     public boolean dropTable(Identifier ident) {
-        File dir = tableDir(ident);
-        if (ident.namespace().length != 1 || !isTableDir(dir)) {
+        if (!tableExists(ident)) {
             return false;
         }
         uncache(ident);
-        deleteRecursively(dir);
+        PaimonPyBridge.call("drop_table", warehouse, identifier(ident));
         return true;
-    }
-
-    private static void deleteRecursively(File f) {
-        File[] children = f.listFiles();
-        if (children != null) {
-            for (File c : children) {
-                deleteRecursively(c);
-            }
-        }
-        f.delete();
     }
 
     @Override
@@ -1772,23 +1446,15 @@ public class PaimonSparkCatalog
         if (tableExists(newIdent)) {
             throw new TableAlreadyExistsException(newIdent);
         }
-        File dst = tableDir(newIdent);
-        if (!dstNamespaceExists(newIdent)) {
+        if (!namespaceExists(newIdent.namespace())) {
             throw new IllegalArgumentException(
                     "target namespace does not exist: "
                             + String.join(".", newIdent.namespace()));
         }
         uncache(oldIdent);
         uncache(newIdent);
-        if (!tableDir(oldIdent).renameTo(dst)) {
-            throw new IllegalStateException(
-                    "rename failed: " + oldIdent + " -> " + newIdent);
-        }
-    }
-
-    private boolean dstNamespaceExists(Identifier ident) {
-        return ident.namespace().length == 1
-                && dbDir(ident.namespace()[0]).isDirectory();
+        PaimonPyBridge.call("rename_table", warehouse,
+                identifier(oldIdent), identifier(newIdent));
     }
 
     // ------------------------------------------------------------------
@@ -2178,7 +1844,7 @@ public class PaimonSparkCatalog
         if (namespaceExists(namespace)) {
             throw new NamespaceAlreadyExistsException(namespace);
         }
-        dbDir(namespace[0]).mkdirs();
+        PaimonPyBridge.call("create_namespace", warehouse, namespace[0]);
     }
 
     @Override
@@ -2193,14 +1859,11 @@ public class PaimonSparkCatalog
         if (!namespaceExists(namespace)) {
             throw new NoSuchNamespaceException(namespace);
         }
-        try {
-            if (listTables(namespace).length > 0 && !cascade) {
-                throw new NonEmptyNamespaceException(namespace);
-            }
-        } catch (NoSuchNamespaceException e) {
-            return false;
+        if (listTables(namespace).length > 0 && !cascade) {
+            throw new NonEmptyNamespaceException(namespace);
         }
-        deleteRecursively(dbDir(namespace[0]));
+        PaimonPyBridge.call("drop_namespace", warehouse, namespace[0],
+                cascade);
         return true;
     }
 }

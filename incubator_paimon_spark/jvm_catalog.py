@@ -18,16 +18,16 @@ jar under the user cache, added to the LIVE session via ``ADD JAR`` —
 
 r13 surface: writes (``INSERT INTO``/``OVERWRITE``, incl. fixed-bucket
 PK tables via a clustered write distribution) and DDL (``CREATE/DROP/
-RENAME TABLE``, ``CREATE/DROP NAMESPACE``, column add/rename/drop,
-``SET TBLPROPERTIES``) are native — the catalog writes the same
-schema-N JSON the Python ``SchemaManager`` writes, so both sides serve
-one table state.
+RENAME TABLE``, ``CREATE/DROP NAMESPACE``, every ``ALTER TABLE`` column
+and property change). The catalog delegates all DDL to the Python
+engine over the bridge: one call per statement into ``Catalog`` or
+``SchemaManager.commit_changes``, so SQL DDL applies exactly the rules
+the Python API and ``catalog.sql`` apply.
 
 r14 surface: row-level SQL. ``DELETE FROM`` (DSv2 ``SupportsDelete``)
-plus ``CALL <cat>.sys.<proc>(...)`` (Spark 4 ``ProcedureCatalog``) and
-``ALTER COLUMN TYPE`` work on any session with the catalog installed —
-they reach the Python engine over the ``PaimonPyBridge`` py4j callback
-registered here. ``UPDATE`` / ``MERGE INTO`` / subquery ``DELETE`` need
+plus ``CALL <cat>.sys.<proc>(...)`` (Spark 4 ``ProcedureCatalog``) work
+on any session with the catalog installed — they reach the Python
+engine over the ``PaimonPyBridge`` py4j callback registered here. ``UPDATE`` / ``MERGE INTO`` / subquery ``DELETE`` need
 the injected analyzer rule: ``install_row_level_sql(spark)`` returns a
 cloned session carrying it.
 """
@@ -110,8 +110,8 @@ def install_sql_catalog(spark, name: str, warehouse: str) -> str:
     """Wire ``spark.sql("... FROM <name>.<db>.<table>")`` into a LIVE
     session: register the Python data source, add the (lazily compiled)
     catalog jar, set the catalog confs, and register the JVM->Python
-    engine bridge (r14 — serves SupportsDelete, CALL procedures and
-    ALTER COLUMN TYPE without any further setup). Catalogs instantiate
+    engine bridge (serves DDL, SupportsDelete and CALL procedures
+    without any further setup). Catalogs instantiate
     on first reference, so no session restart is needed. Returns
     `name`."""
     from .bridge import install_bridge
@@ -189,7 +189,7 @@ def install_generic_catalog(spark, warehouse: str):
     register(spark)
     jar = ensure_jar()
     spark.sql(f"ADD JAR '{jar}'")
-    install_bridge(spark)  # DELETE/CALL/ALTER TYPE on warehouse tables
+    install_bridge(spark)  # DDL/DELETE/CALL on warehouse tables
     s = SparkSession(spark.sparkContext, spark._jsparkSession.cloneSession())
     s.conf.set("spark.sql.catalog.spark_catalog", GENERIC_CATALOG_CLASS)
     s.conf.set("spark.sql.catalog.spark_catalog.warehouse", warehouse)

@@ -15,7 +15,7 @@ from __future__ import annotations
 import json
 import os
 import time
-from dataclasses import dataclass, field as dc_field
+from dataclasses import dataclass, field as dc_field, replace
 
 from pyspark.sql import types as T
 
@@ -165,8 +165,9 @@ class SchemaManager:
         return os.path.join(self.dir, f"schema-{sid}")
 
     def latest_id(self) -> int | None:
-        ids = [int(n.split("-")[1]) for n in self.io.list_names(self.dir)
-               if n.startswith("schema-")]
+        # a leaked `schema-N.tmp-<hex>` from a failed create is not a schema
+        ids = [int(n[len("schema-"):]) for n in self.io.list_names(self.dir)
+               if n.startswith("schema-") and n[len("schema-"):].isdigit()]
         return max(ids) if ids else None
 
     def latest(self) -> TableSchema | None:
@@ -190,15 +191,27 @@ class SchemaManager:
     # ---- evolution (SchemaChange.java:95-512) ----
 
     def _next(self, base: TableSchema) -> TableSchema:
-        return TableSchema(
-            id=base.id + 1,
-            fields=[DataField(f.id, f.name, f.type, f.nullable, f.description) for f in base.fields],
-            highest_field_id=base.highest_field_id,
-            partition_keys=list(base.partition_keys),
-            primary_keys=list(base.primary_keys),
-            options=dict(base.options),
-            comment=base.comment,
-        )
+        return replace(base, id=base.id + 1,
+                       fields=[replace(f) for f in base.fields],
+                       partition_keys=list(base.partition_keys),
+                       primary_keys=list(base.primary_keys),
+                       options=dict(base.options),
+                       time_millis=int(time.time() * 1000))
+
+    def commit_changes(self, changes: list[dict]) -> TableSchema:
+        """Apply `changes` in order to ONE next schema and commit it once
+        (SchemaManager.commitChanges). Each change is a dict whose "op"
+        names one of ``_APPLY``'s rules and whose other keys are that
+        rule's arguments. Every change is checked against the schema as
+        evolved by the ones before it, so a statement whose later change
+        fails commits nothing."""
+        base = self.latest()
+        s = self._next(base)
+        for c in changes:
+            args = dict(c)
+            _APPLY[args.pop("op")](s, **args)
+        _validate_bucket_change(base, s)
+        return self.commit_new(s)
 
     def add_column(self, name: str, dtype: T.DataType, nullable=True,
                    description=None, after: str | None = None,
@@ -206,124 +219,137 @@ class SchemaManager:
         """`after`/`first` place the new column in ONE schema commit
         (SchemaChange.Move.after/first on an AddColumn — the reference
         applies position inside the same change)."""
-        base = self.latest()
-        if name in base.field_names():
-            raise ValueError(f"column {name!r} already exists")
-        s = self._next(base)
-        s.highest_field_id += 1
-        f = DataField(s.highest_field_id, name, dtype, nullable, description)
-        if first:
-            s.fields.insert(0, f)
-        elif after is not None:
-            _ = base.field_by_name(after)
-            i = next(j for j, g in enumerate(s.fields) if g.name == after)
-            s.fields.insert(i + 1, f)
-        else:
-            s.fields.append(f)
-        return self.commit_new(s)
+        return self.commit_changes([dict(
+            op="add_column", name=name, dtype=dtype, nullable=nullable,
+            description=description, after=after, first=first)])
 
     def drop_column(self, name: str) -> TableSchema:
-        base = self.latest()
-        if name in base.primary_keys or name in base.partition_keys:
-            raise ValueError(f"cannot drop key column {name!r}")
-        s = self._next(base)
-        s.fields = [f for f in s.fields if f.name != name]
-        if len(s.fields) == len(base.fields):
-            raise KeyError(name)
-        return self.commit_new(s)
+        return self.commit_changes([dict(op="drop_column", name=name)])
 
     def rename_column(self, name: str, new_name: str) -> TableSchema:
-        base = self.latest()
-        if new_name in base.field_names():
-            raise ValueError(f"column {new_name!r} already exists")
-        s = self._next(base)
-        s.fields = [
-            DataField(f.id, new_name if f.name == name else f.name, f.type, f.nullable, f.description)
-            for f in s.fields
-        ]
-        s.primary_keys = [new_name if k == name else k for k in s.primary_keys]
-        s.partition_keys = [new_name if k == name else k for k in s.partition_keys]
-        return self.commit_new(s)
+        return self.commit_changes([dict(op="rename_column", name=name,
+                                         new_name=new_name)])
 
     def update_column_nullability(self, name: str, nullable: bool) -> TableSchema:
         """SchemaChange.updateColumnNullability parity (reference
         SchemaManager.java:309-326): both directions are metadata-only;
         the one refusal is making a PRIMARY KEY column nullable."""
-        base = self.latest()
-        _ = base.field_by_name(name)
-        if nullable and name in base.primary_keys:
-            raise ValueError("Cannot change nullability of primary key")
-        s = self._next(base)
-        s.fields = [
-            DataField(f.id, f.name, f.type,
-                      nullable if f.name == name else f.nullable,
-                      f.description)
-            for f in s.fields
-        ]
-        return self.commit_new(s)
+        return self.commit_changes([dict(op="update_column_nullability",
+                                         name=name, nullable=nullable)])
 
     def update_column_type(self, name: str, new_type: T.DataType) -> TableSchema:
-        base = self.latest()
-        old = base.field_by_name(name)
-        if not _can_widen(old.type, new_type):
-            raise ValueError(f"cannot change {name}: {old.type.simpleString()} -> {new_type.simpleString()}")
-        s = self._next(base)
-        s.fields = [
-            DataField(f.id, f.name, new_type if f.name == name else f.type, f.nullable, f.description)
-            for f in s.fields
-        ]
-        return self.commit_new(s)
+        return self.commit_changes([dict(op="update_column_type", name=name,
+                                         new_type=new_type)])
 
     def update_column_comment(self, name: str, comment: str | None) -> TableSchema:
-        base = self.latest()
-        _ = base.field_by_name(name)  # raises if missing
-        s = self._next(base)
-        s.fields = [
-            DataField(f.id, f.name, f.type, f.nullable,
-                      comment if f.name == name else f.description)
-            for f in s.fields
-        ]
-        return self.commit_new(s)
+        return self.commit_changes([dict(op="update_column_comment",
+                                         name=name, comment=comment)])
 
     def move_column(self, name: str, after: str | None = None) -> TableSchema:
         """Reorder a column: FIRST (after=None) or AFTER `after`.
         Field ids anchor reads, so a move is metadata-only — old data
         files keep serving their bytes by id (SchemaChange.Move parity,
         reference SchemaManager)."""
-        base = self.latest()
-        _ = base.field_by_name(name)
-        if after is not None:
-            _ = base.field_by_name(after)
-        if name == after:
-            raise ValueError("cannot move a column after itself")
-        s = self._next(base)
-        moving = next(f for f in s.fields if f.name == name)
-        rest = [f for f in s.fields if f.name != name]
-        if after is None:
-            s.fields = [moving] + rest
-        else:
-            i = next(j for j, f in enumerate(rest) if f.name == after)
-            s.fields = rest[:i + 1] + [moving] + rest[i + 1:]
-        return self.commit_new(s)
+        return self.commit_changes([dict(op="move_column", name=name,
+                                         after=after)])
 
     def update_options(self, set_options: dict | None = None, remove: list[str] | None = None) -> TableSchema:
-        base = self.latest()
-        s = self._next(base)
-        for k, v in (set_options or {}).items():
-            if (k in _IMMUTABLE_OPTIONS
-                    and str(v) != base.options.get(k)):
-                # SchemaManager.checkAlterTableOption (SchemaManager.java:519)
-                # — these shape the on-disk layout/merge semantics; changing
-                # them would misread every existing file. Re-setting the
-                # current value is an allowed no-op.
-                raise ValueError(f"Change '{k}' is not supported.")
-            s.options[k] = str(v)
-        for k in remove or []:
-            if k in _IMMUTABLE_OPTIONS and k in base.options:
-                raise ValueError(f"Change '{k}' is not supported.")
-            s.options.pop(k, None)
-        _validate_bucket_change(base, s)
-        return self.commit_new(s)
+        return self.commit_changes(
+            [dict(op="set_option", key=k, value=v)
+             for k, v in (set_options or {}).items()]
+            + [dict(op="remove_option", key=k) for k in remove or []])
+
+
+# ---- the per-change rules (SchemaChange.java:95-512); each mutates the
+# evolving schema `s` in place and raises on a change it refuses ----
+
+def _add_column(s: TableSchema, name, dtype, nullable=True, description=None,
+                after=None, first=False):
+    if name in s.field_names():
+        raise ValueError(f"column {name!r} already exists")
+    s.highest_field_id += 1
+    f = DataField(s.highest_field_id, name, dtype, nullable, description)
+    if first:
+        s.fields.insert(0, f)
+    elif after is not None:
+        s.fields.insert(_index(s, after) + 1, f)
+    else:
+        s.fields.append(f)
+
+
+def _drop_column(s: TableSchema, name):
+    if name in s.primary_keys or name in s.partition_keys:
+        raise ValueError(f"cannot drop key column {name!r}")
+    del s.fields[_index(s, name)]
+
+
+def _rename_column(s: TableSchema, name, new_name):
+    if new_name in s.field_names():
+        raise ValueError(f"column {new_name!r} already exists")
+    s.field_by_name(name).name = new_name
+    s.primary_keys = [new_name if k == name else k for k in s.primary_keys]
+    s.partition_keys = [new_name if k == name else k for k in s.partition_keys]
+
+
+def _update_column_nullability(s: TableSchema, name, nullable):
+    f = s.field_by_name(name)
+    if nullable and name in s.primary_keys:
+        raise ValueError("Cannot change nullability of primary key")
+    f.nullable = bool(nullable)
+
+
+def _update_column_type(s: TableSchema, name, new_type):
+    f = s.field_by_name(name)
+    if not _can_widen(f.type, new_type):
+        raise ValueError(f"cannot change {name}: {f.type.simpleString()} -> {new_type.simpleString()}")
+    f.type = new_type
+
+
+def _update_column_comment(s: TableSchema, name, comment):
+    s.field_by_name(name).description = comment
+
+
+def _move_column(s: TableSchema, name, after=None):
+    if name == after:
+        raise ValueError("cannot move a column after itself")
+    moving = s.fields.pop(_index(s, name))
+    s.fields.insert(0 if after is None else _index(s, after) + 1, moving)
+
+
+def _set_option(s: TableSchema, key, value):
+    if key in _IMMUTABLE_OPTIONS and str(value) != s.options.get(key):
+        # SchemaManager.checkAlterTableOption (SchemaManager.java:519)
+        # — these shape the on-disk layout/merge semantics; changing
+        # them would misread every existing file. Re-setting the
+        # current value is an allowed no-op.
+        raise ValueError(f"Change '{key}' is not supported.")
+    s.options[key] = str(value)
+
+
+def _remove_option(s: TableSchema, key):
+    if key in _IMMUTABLE_OPTIONS and key in s.options:
+        raise ValueError(f"Change '{key}' is not supported.")
+    s.options.pop(key, None)
+
+
+def _index(s: TableSchema, name) -> int:
+    for i, f in enumerate(s.fields):
+        if f.name == name:
+            return i
+    raise KeyError(name)
+
+
+_APPLY = {
+    "add_column": _add_column,
+    "drop_column": _drop_column,
+    "rename_column": _rename_column,
+    "update_column_nullability": _update_column_nullability,
+    "update_column_type": _update_column_type,
+    "update_column_comment": _update_column_comment,
+    "move_column": _move_column,
+    "set_option": _set_option,
+    "remove_option": _remove_option,
+}
 
 
 # CoreOptions.getImmutableOptionKeys() (@Immutable annotations,

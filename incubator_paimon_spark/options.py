@@ -105,10 +105,6 @@ class CoreOptions:
 
     # --- changelog (CoreOptions.java:2107-2118) ---
     @property
-    def deletion_vectors_enabled(self) -> bool:
-        return self.raw.get("deletion-vectors.enabled", "false") == "true"
-
-    @property
     def changelog_producer(self) -> str:
         v = self.raw.get("changelog-producer", "none")
         if v not in CHANGELOG_PRODUCERS:

@@ -1350,11 +1350,12 @@ def _exec_alter(spark, catalog, statement):
     if au.startswith("RENAME TO"):
         return catalog.rename_table(ident, action[len("RENAME TO"):].strip())
     t = catalog.get_table(ident)
+    # one statement, one schema-N: a refused change commits nothing
     mgr = t.schemas
     if au.startswith("ADD COLUMN"):
         body = action[len("ADD COLUMNS") if au.startswith("ADD COLUMNS")
                       else len("ADD COLUMN"):].strip()
-        move = None
+        first, after = False, None
         if body.startswith("("):
             body, _ = _balanced(body, 0)
         else:
@@ -1362,15 +1363,13 @@ def _exec_alter(spark, catalog, statement):
             posm = re.search(r"\s+(?:(FIRST)|AFTER\s+(\w+))\s*$", body,
                              re.IGNORECASE)
             if posm:
-                move = (None if posm.group(1) else posm.group(2),)
+                first, after = bool(posm.group(1)), posm.group(2)
                 body = body[:posm.start()]
-        out = None
-        for f in T.StructType.fromDDL(body).fields:
-            out = mgr.add_column(f.name, f.dataType, f.nullable,
-                                 f.metadata.get("comment"))
-            if move is not None:
-                out = mgr.move_column(f.name, move[0])
-        return out
+        return mgr.commit_changes([
+            dict(op="add_column", name=f.name, dtype=f.dataType,
+                 nullable=f.nullable, description=f.metadata.get("comment"),
+                 first=first, after=after)
+            for f in T.StructType.fromDDL(body).fields])
     if au.startswith("RENAME COLUMN"):
         rm = re.match(r"RENAME\s+COLUMN\s+(\w+)\s+TO\s+(\w+)\s*$", action,
                       re.IGNORECASE)
@@ -1382,13 +1381,12 @@ def _exec_alter(spark, catalog, statement):
                       else len("DROP COLUMN"):].strip()
         if body.startswith("("):
             body, _ = _balanced(body, 0)
-        out = None
-        for c in body.split(","):
-            c = c.strip()
+        names = [c.strip() for c in body.split(",")]
+        for c in names:
             if not re.fullmatch(r"\w+", c):
                 raise ValueError(f"bad DROP COLUMN name {c!r}")
-            out = mgr.drop_column(c)
-        return out
+        return mgr.commit_changes([dict(op="drop_column", name=c)
+                                   for c in names])
     # column comment / position (sql-alter.md:104-126) before the TYPE
     # fallback — "COMMENT 'x'" and "AFTER b" are not parseable as types
     com = re.match(r"(?:ALTER|CHANGE)\s+COLUMN\s+(\w+)\s+COMMENT\s+"

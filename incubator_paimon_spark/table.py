@@ -218,7 +218,7 @@ class Table:
     def list_tags(self) -> list[str]:
         d = os.path.join(self.path, TAG_DIR)
         return sorted(n[len("tag-"):] for n in self.io.list_names(d)
-                      if n.startswith("tag-"))
+                      if n.startswith("tag-") and ".tmp-" not in n)
 
     def tag_snapshot(self, name: str) -> Snapshot:
         return Snapshot.from_json(read_json(os.path.join(self.path, TAG_DIR, f"tag-{name}")))
@@ -556,14 +556,22 @@ class Catalog:
         db, name = identifier.split(".", 1)
         self.create_database(db)
         path = os.path.join(self._db_path(db), name)
-        mgr = SchemaManager(path)
-        if mgr.latest_id() is not None:
+        if SchemaManager(path).latest_id() is not None:
             if ignore_if_exists:
                 return Table(path)
             raise ValueError(f"table {identifier} already exists")
+        return self._create_new_table(db, name, schema, partition_keys,
+                                      primary_keys, options, comment)
+
+    def _create_new_table(self, db, name, schema, partition_keys,
+                          primary_keys, options, comment) -> Table:
+        """The create body every catalog shares: build and validate
+        schema-0, commit it (exclusive create, so a lost race raises), and
+        bind the new table's view in each attached session."""
+        path = os.path.join(self._db_path(db), name)
         ts = TableSchema.create(schema, partition_keys, primary_keys, options, comment)
         _validate(ts)
-        mgr.commit_new(ts)
+        SchemaManager(path).commit_new(ts)
         t = Table(path)
         for ref, database in getattr(self, "_attached", []):
             s = ref()

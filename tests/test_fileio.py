@@ -71,6 +71,27 @@ def test_local_write_overwrite_replaces_whole_and_cleans_up(tmp):
     assert os.listdir(f"{tmp}/snapshot") == ["LATEST"]
 
 
+def test_local_try_create_cleans_up_on_failure(tmp, monkeypatch):
+    """try_create: a write or fsync that raises creates nothing and
+    leaves no `<path>.tmp-*` behind."""
+    io = LocalFileIO()
+    p = f"{tmp}/schema/schema-1"
+
+    def failing_fsync(fd):
+        raise OSError("fsync failed")
+
+    with monkeypatch.context() as m:
+        m.setattr(os, "fsync", failing_fsync)
+        with pytest.raises(OSError, match="fsync failed"):
+            io.try_create(p, b"{}")
+    assert os.listdir(f"{tmp}/schema") == []
+    with pytest.raises(TypeError):
+        io.try_create(p, "text is not bytes")  # f.write raises
+    assert os.listdir(f"{tmp}/schema") == []
+    assert io.try_create(p, b"{}") is True
+    assert os.listdir(f"{tmp}/schema") == ["schema-1"]
+
+
 def test_local_accepts_file_uri(tmp):
     _common_contract(LocalFileIO(), f"file://{tmp}")
 

@@ -241,9 +241,10 @@ def test_sql_insert_dynamic_bucket(spark, sqlcat, customer):
 def test_sql_ddl_roundtrip(spark, sqlcat):
     """CREATE NAMESPACE / CREATE TABLE (PK + partitioned) / INSERT /
     ALTER ADD-RENAME-DROP COLUMN + SET TBLPROPERTIES / CTAS / RENAME /
-    DROP — all in pure spark.sql. The catalog writes the same schema-N
-    JSON the Python SchemaManager writes (the file format is the
-    contract), so the Python engine serves every read/write."""
+    DROP — all in pure spark.sql. The catalog delegates every DDL
+    statement to the Python Catalog / SchemaManager over the bridge, so
+    SQL DDL applies the Python API's rules and the engine serves every
+    read/write."""
     spark.sql("CREATE NAMESPACE pa.ddl")
     spark.sql("CREATE TABLE pa.ddl.t (id BIGINT, name STRING, region INT) "
               "PARTITIONED BY (region) "
@@ -311,6 +312,27 @@ def test_sql_create_table_validations(spark, sqlcat):
     with pytest.raises(Exception, match="already exists|TABLE_OR_VIEW"):
         spark.sql("CREATE TABLE pa.ddlv.ok (id BIGINT)")
     spark.sql("CREATE TABLE IF NOT EXISTS pa.ddlv.ok (id BIGINT)")
+    # a column COMMENT is the field's description (TableSchema.create)
+    spark.sql("CREATE TABLE pa.ddlv.cm (id BIGINT COMMENT 'the id', v INT)")
+    assert sqlcat.get_table("ddlv.cm").schema.field_by_name(
+        "id").description == "the id"
+    # the engine's _validate refuses a schema it could not read or write
+    for props, msg in (
+            ("'file.format'='csv'", "file.format"),
+            ("'deletion-vectors.enabled'='true', 'file.format'='orc'",
+             "deletion vectors"),
+            ("'merge-engine'='bogus'", "merge-engine"),
+            ("'changelog-producer'='bogus'", "changelog-producer")):
+        with pytest.raises(Exception, match=msg):
+            spark.sql("CREATE TABLE pa.ddlv.bad3 (id BIGINT) TBLPROPERTIES "
+                      f"('primary-key'='id', {props})")
+        assert "bad3" not in sqlcat.list_tables("ddlv")
+    # one ALTER statement, one schema-N (SchemaManager.commit_changes)
+    sid = sqlcat.get_table("ddlv.ok").schema.id
+    spark.sql("ALTER TABLE pa.ddlv.ok ADD COLUMNS (x INT FIRST, y INT)")
+    t = sqlcat.get_table("ddlv.ok")
+    assert t.schemas.latest_id() == sid + 1
+    assert t.schema.field_names() == ["x", "id", "y"]
     spark.sql("DROP NAMESPACE pa.ddlv CASCADE")
 
 

@@ -82,6 +82,36 @@ class TestSchema:
         with pytest.raises(ValueError):
             mgr.add_column("v", T.StringType())
 
+    def test_commit_changes_is_one_schema_or_none(self, tmp_path):
+        mgr = self._schema(tmp_path)
+        mgr.commit_changes([
+            dict(op="add_column", name="w", dtype=T.StringType(),
+                 after="id"),
+            dict(op="rename_column", name="w", new_name="w2"),
+            dict(op="set_option", key="snapshot.num-retained.max", value=5)])
+        latest = mgr.latest()
+        assert latest.id == 1
+        assert latest.field_names() == ["id", "w2", "v"]
+        assert latest.options["snapshot.num-retained.max"] == "5"
+        # each change sees the ones before it; a refused one commits none
+        with pytest.raises(ValueError, match="key column"):
+            mgr.commit_changes([dict(op="drop_column", name="v"),
+                                dict(op="drop_column", name="id")])
+        assert mgr.latest_id() == 1
+
+    def test_leaked_temp_files_are_not_metadata(self, tmp_path):
+        """A `<name>.tmp-<hex>` left by a failed create is neither a
+        schema version nor a tag."""
+        from incubator_paimon_spark.table import Table
+        mgr = self._schema(tmp_path)
+        (tmp_path / "schema" / "schema-1.tmp-0a1b").write_text("{")
+        assert mgr.latest_id() == 0
+        assert Table(str(tmp_path)).schema.id == 0
+        (tmp_path / "tag").mkdir()
+        (tmp_path / "tag" / "tag-v1").write_text("{}")
+        (tmp_path / "tag" / "tag-v2.tmp-0a1b").write_text("{")
+        assert Table(str(tmp_path)).list_tags() == ["v1"]
+
 
 class TestCommit:
     def test_cas_and_conflict(self, tmp_path):

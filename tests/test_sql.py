@@ -329,6 +329,23 @@ def test_sql_drop_columns_plural(spark, catalog):
     assert catalog.get_table("db.sqldc").schema.field_names() == ["k"]
 
 
+def test_sql_alter_is_one_schema_per_statement(spark, catalog):
+    """One ALTER TABLE statement commits one schema-N: multi-column ADD
+    and ADD ... AFTER land together, and a refused change commits none
+    of the statement's changes."""
+    t = catalog.create_table("db.alt_one", _schema("k bigint, v int"),
+                             primary_keys=["k"])
+    catalog.sql(spark, "ALTER TABLE db.alt_one ADD COLUMNS (a INT, b INT)")
+    assert t.schemas.latest_id() == 1
+    catalog.sql(spark, "ALTER TABLE db.alt_one ADD COLUMN c INT AFTER a")
+    assert t.schemas.latest_id() == 2
+    assert t.schema.field_names() == ["k", "v", "a", "c", "b"]
+    with pytest.raises(ValueError, match="key column"):
+        catalog.sql(spark, "ALTER TABLE db.alt_one DROP COLUMNS (v, k)")
+    assert t.schemas.latest_id() == 2
+    assert t.schema.field_names() == ["k", "v", "a", "c", "b"]
+
+
 def test_delete_update_with_subqueries(spark, catalog):
     """DELETE/UPDATE WHERE evaluates scalar and IN subqueries to literals
     (reference: EvalSubqueriesForDeleteTable,
