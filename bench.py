@@ -779,11 +779,13 @@ def main():
     result["queries"] = times
     result["suite_seconds"] = total
     line = json.dumps(result)
-    # full-fidelity sidecar: survives any stdout truncation in the
-    # driver's artifact (committed by the round driver with the tree)
+    # full-fidelity sidecar: survives any truncation of the captured
+    # stdout; keyed by cpus so a run at one core count never overwrites
+    # the record of another
     try:
         here = os.path.dirname(os.path.abspath(__file__))
-        with open(os.path.join(here, f"BENCH_SELF_sf{sf}.json"), "w") as f:
+        with open(os.path.join(here, f"BENCH_SELF_sf{sf}_c{cpus}.json"),
+                  "w") as f:
             f.write(line + "\n")
     except OSError:
         pass

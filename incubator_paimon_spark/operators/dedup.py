@@ -3,11 +3,14 @@ embedding-cosine near-dup (SURVEY §7.1 step 8 / BASELINE north-star).
 
 Scale design (100 TB corpus, 1000 executors):
 - exact dedup = one hash-groupBy — a single shuffle on a 16-byte key.
-- MinHash/LSH: signatures are pure Column expressions over shingle arrays
-  (no Python); candidate generation is `explode(bands) → groupBy(band,
-  band_hash)` — the classic shuffle-then-self-join-within-bucket plan whose
-  cost is O(candidates), never O(n²). Buckets with one member are dropped
-  before the join; hot buckets can be salted (AQE skew join handles the rest).
+- MinHash/LSH: signatures come from one vectorized Arrow kernel
+  (`minhash_banded`, a `mapInArrow` pass): each document is tokenized,
+  shingled and md5-hashed once, and its permutation minima are one numpy
+  (num_hashes × shingles) operation — Catalyst never sees a per-hash
+  lambda. Candidate generation shuffles the banded rows on (band,
+  band_hash) once and walks each sorted bucket in a second Arrow kernel
+  that scores pairs by signature agreement — cost O(candidates), never
+  O(n²), with a per-bucket head cap for degenerate hot buckets.
 - SimHash: 32-bit signature, near-dups via banded prefix match.
 - embedding near-dup: brute-force within LSH sign-buckets (random-hyperplane
   signs derived deterministically from md5 so results are reproducible and
@@ -20,6 +23,9 @@ every operator oracle-verifiable cross-engine.
 """
 
 from __future__ import annotations
+
+import hashlib
+import re
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -39,16 +45,66 @@ def ensure_parallelism(df: DataFrame, min_partitions: int | None = None) -> Data
     the whole corpus to a handful of cores. At 100 TB the scan already plans
     thousands of file-splits, so the probe makes this a no-op there — an
     unconditional repartition would exchange the raw corpus text before any
-    signature work, doubling the scan cost (VERDICT r4 scale audit). The
-    probe is driver-side planning only (no job runs)."""
+    signature work, doubling the scan cost (VERDICT r4 scale audit).
+
+    The count is read from the physical plan (`planned_partitions`), so no
+    job runs: `df.rdd.getNumPartitions()` executes an adaptive plan's
+    shuffle and broadcast stages, which the caller's action then runs
+    again."""
     target = min_partitions or df.sparkSession.sparkContext.defaultParallelism
+    from py4j.protocol import Py4JError
+    from pyspark.errors import AnalysisException
     try:
-        current = df.rdd.getNumPartitions()
-    except Exception:  # exotic plans that resist RDD conversion: be safe
+        current = planned_partitions(df)
+    except (AnalysisException, Py4JError):
+        # a streaming plan has no executed plan, and an exotic node may
+        # not expose its partitions: repartition to be safe
         current = 0
     if current >= max(target // 2, 1):
         return df
     return df.repartition(target)
+
+
+def planned_partitions(df: DataFrame) -> int:
+    """The partition count `df`'s physical plan fixes before adaptive
+    re-planning, read without executing it; 0 when the plan does not
+    say (a multi-input node other than a broadcast join or a union).
+    Walks down from the plan root (an adaptive plan's input plan): the
+    first node with a known output partitioning answers, a broadcast
+    join asks its streamed side, a cached relation its cached plan, and
+    a leaf its planned input RDD (for a file scan: the planned splits)."""
+    def count(p) -> int:
+        while True:
+            name = p.getClass().getSimpleName()
+            if name == "AdaptiveSparkPlanExec":
+                p = p.inputPlan()
+                continue
+            n = p.outputPartitioning().numPartitions()
+            if n > 0:
+                return n
+            if name == "InMemoryTableScanExec":
+                p = p.relation().cachedPlan()
+                continue
+            if name in ("BroadcastHashJoinExec",
+                        "BroadcastNestedLoopJoinExec"):
+                right = p.buildSide().toString() == "BuildRight"
+                p = p.left() if right else p.right()
+                continue
+            kids = p.children()
+            kids = [kids.apply(i) for i in range(kids.size())]
+            if not kids:
+                rdd = (p.inputRDD() if name in ("FileSourceScanExec",
+                                                "BatchScanExec")
+                       else p.execute())
+                return rdd.getNumPartitions()
+            if name == "UnionExec":
+                counts = [count(k) for k in kids]
+                return sum(counts) if all(counts) else 0
+            if len(kids) != 1:
+                return 0
+            p = kids[0]
+
+    return count(df._jdf.queryExecution().executedPlan())
 
 
 def shingles(col: Column, n: int = 3) -> Column:
@@ -101,26 +157,96 @@ def minhash_perms(num_hashes: int) -> list[tuple[int, int]]:
             for i in range(num_hashes)]
 
 
-def minhash_from_hashes(hs: Column, num_hashes: int) -> Column:
-    """Signature from a precomputed array<long> of shingle hashes. One md5
-    per shingle happened upstream; each signature element is a cheap
-    integer-permutation min — 16 hash functions cost 16 array scans, not
-    16 md5 passes (the naive form recomputed the shingle+md5 pipeline per
-    function because Catalyst does not CSE across lambda functions)."""
-    def perm_min(a: int, b: int) -> Column:
-        # NB: F.transform treats extra (defaulted) lambda params as
-        # element/index args — bind a, b via a closure instead
-        return F.array_min(
-            F.transform(hs, lambda h: (h * F.lit(a) + F.lit(b)) % MINHASH_P))
-
-    return F.array(*[perm_min(a, b) for a, b in minhash_perms(num_hashes)])
+_JAVA_WS = re.compile(r"[ \t\n\x0b\f\r]+")  # Java's `\s`, Spark's split
 
 
-def minhash_signature(col: Column, num_hashes: int = 16, shingle_n: int = 3) -> Column:
-    """MinHash signature as array<long>: element i is min over shingle
-    hashes h of (a_i*h + b_i) mod (2^31-1), h = h32(shingle)."""
-    return minhash_from_hashes(F.transform(shingles(col, shingle_n), h32),
-                               num_hashes)
+def _shingle_set(text: str | None, n: int) -> set[str]:
+    """`shingles` on one document, value for value: Spark's `trim` strips
+    ' ' only and `split(…, '\\s+')` uses Java's ASCII whitespace class
+    (U+00A0 and U+3000 are word characters); a text with fewer than n
+    words is one shingle, and null or empty text is the one shingle ''."""
+    t = (text or "").strip(" ")
+    ws = _JAVA_WS.split(t) if t else []
+    return {" ".join(ws[i:i + n]) for i in range(max(len(ws) - n + 1, 1))}
+
+
+# shingle hashes per numpy pass: bounds the (num_hashes × shingles)
+# permutation matrix at num_hashes × 512 KiB
+_SIGN_CHUNK = 1 << 16
+
+
+def _signatures(texts, shingle_n: int, a, b):
+    """(docs × num_hashes) int64 MinHash signatures: element i of a row is
+    min over the document's distinct shingle hashes h of (a_i·h + b_i) mod
+    (2^31 − 1) — one numpy pass per chunk of documents."""
+    import numpy as np
+
+    sets = [_shingle_set(t, shingle_n) for t in texts]
+    # _h32_py of every shingle, batched: the md5 digests' big-endian
+    # first 4 bytes, decoded by numpy in one call
+    md5 = hashlib.md5
+    H = np.frombuffer(b"".join([md5(sh.encode()).digest()[:4]
+                                for d in sets for sh in d]),
+                      dtype=">u4").astype(np.int64)
+    E = np.cumsum([len(d) for d in sets])
+    S = np.empty((len(E), len(a)), dtype=np.int64)
+    d0 = 0
+    while d0 < len(E):
+        lo = E[d0 - 1] if d0 else 0
+        d1 = max(int(np.searchsorted(E, lo + _SIGN_CHUNK, "right")), d0 + 1)
+        starts = np.concatenate(([lo], E[d0:d1 - 1])) - lo
+        perm = (a[:, None] * H[None, lo:E[d1 - 1]] + b[:, None]) % MINHASH_P
+        S[d0:d1] = np.minimum.reduceat(perm, starts, axis=1).T
+        d0 = d1
+    return S
+
+
+def minhash_band_rows(src: DataFrame, num_hashes: int, bands: int,
+                      shingle_n: int,
+                      names: tuple[str, str, str]) -> DataFrame:
+    """The MinHash signature kernel (one `mapInArrow` pass) behind
+    `minhash_banded` and the streaming near-dup claims. `src`'s last
+    column is the text; every other column passes through. Emits `bands`
+    rows per input row: the pass-through columns, then columns named by
+    `names` — the signature array<long>, the band index (int) and the
+    band hash (md5 of the band's comma-joined decimal values)."""
+    import numpy as np
+    import pyspark.sql.types as T
+
+    rows = num_hashes // bands
+    perms = minhash_perms(num_hashes)
+    a = np.array([p[0] for p in perms], dtype=np.int64)
+    b = np.array([p[1] for p in perms], dtype=np.int64)
+    keep = src.schema.fields[:-1]
+    sig, band, bh = names
+    out_schema = T.StructType(
+        keep + [T.StructField(sig, T.ArrayType(T.LongType())),
+                T.StructField(band, T.IntegerType()),
+                T.StructField(bh, T.StringType())])
+
+    def minhash_sign(batches):
+        import pyarrow as pa
+        for rb in batches:
+            n = rb.num_rows
+            if not n:
+                continue
+            S = _signatures(rb.column(rb.num_columns - 1).to_pylist(),
+                            shingle_n, a, b)
+            bhs = [hashlib.md5(",".join(map(str, r[k * rows:(k + 1) * rows]))
+                               .encode()).hexdigest()
+                   for r in S.tolist() for k in range(bands)]
+            take = pa.array(np.repeat(np.arange(n), bands))
+            sigs = pa.ListArray.from_arrays(
+                pa.array(np.arange(0, n * bands + 1, dtype=np.int32)
+                         * num_hashes),
+                pa.array(np.repeat(S, bands, axis=0).ravel()))
+            cols = [rb.column(i).take(take) for i in range(len(keep))]
+            cols += [sigs,
+                     pa.array(np.tile(np.arange(bands, dtype=np.int32), n)),
+                     pa.array(bhs, pa.string())]
+            yield pa.RecordBatch.from_arrays(cols, names=out_schema.names)
+
+    return src.mapInArrow(minhash_sign, out_schema)
 
 
 def minhash_banded(df: DataFrame, text_col: str, id_col: str,
@@ -129,30 +255,84 @@ def minhash_banded(df: DataFrame, text_col: str, id_col: str,
                    sig_alias: str = "sig") -> DataFrame:
     """The banded signature projection every LSH variant shares:
     (id, sig array<long>, band int, bh string) — `bands` rows per doc,
-    bh = md5 over the band's signature slice. This is also the exact row
-    layout the persisted signature index stores (see dedup_index) so
-    index-backed and from-scratch queries are expression-identical.
+    bh = md5 over the band's comma-joined signature slice, id of the
+    input's type. This is also the exact row layout the persisted
+    signature index stores (see dedup_index), so index-backed and
+    from-scratch queries compare identical values.
 
-    The expensive shingle+md5 pipeline is materialized in its own
-    projection so it runs once per row (CollapseProject keeps a
-    non-cheap alias referenced num_hashes times otherwise)."""
-    rows = num_hashes // bands
-    base = (df.select(F.col(id_col).alias(id_alias),
-                      F.transform(shingles(F.col(text_col), shingle_n),
-                                  h32).alias("hs"))
-              .select(id_alias, minhash_from_hashes(F.col("hs"),
-                                                    num_hashes).alias(sig_alias)))
-    band_arr = F.array(*[
-        F.struct(F.lit(b).alias("band"),
-                 F.md5(F.concat_ws(",", *[
-                     F.element_at(F.col(sig_alias), b * rows + r + 1)
-                     for r in range(rows)])).alias("bh"))
-        for b in range(bands)
-    ])
-    return (base.select(id_alias, sig_alias, F.explode(band_arr).alias("b"))
-                .select(id_alias, sig_alias,
-                        F.col("b.band").alias("band"),
-                        F.col("b.bh").alias("bh")))
+    One `mapInArrow` kernel computes it: per document, the distinct word
+    n-grams of `shingles` (same tokenization, value for value) are
+    md5-hashed once and the num_hashes permutation minima are one numpy
+    operation, so the signature costs one pass over the shingles rather
+    than num_hashes interpreted lambda passes, and planning it is one
+    node rather than a num_hashes-deep expression tree."""
+    return minhash_band_rows(
+        df.select(F.col(id_col).alias(id_alias), F.col(text_col)),
+        num_hashes, bands, shingle_n, (sig_alias, "band", "bh"))
+
+
+# pair rows per vectorized comparison in _score_buckets: bounds the two
+# gathered signature blocks at 2 × 2^16 × num_hashes longs, except for a
+# head whose bucket alone is larger (then 2 × bucket × num_hashes)
+_PAIR_CHUNK = 1 << 16
+
+
+def _bucket_starts(rb):
+    """Row indices (> 0) of `rb` where a new (band, bh) bucket starts."""
+    import numpy as np
+    import pyarrow.compute as pc
+
+    n = rb.num_rows
+    band = rb.column("band").to_numpy()
+    bh = rb.column("bh")
+    brk = (band[1:] != band[:-1]) | pc.not_equal(
+        bh.slice(1), bh.slice(0, n - 1)).to_numpy(zero_copy_only=False)
+    return np.flatnonzero(brk) + 1
+
+
+def _score_buckets(rb, num_hashes: int, min_est_jaccard: float,
+                   max_bucket_size: int | None):
+    """(id_a, id_b, est_jaccard) arrays for the complete (band, bh)
+    buckets in `rb` (rows sorted by band, bh, id): each of a bucket's
+    first `max_bucket_size` members against every later member with a
+    different, non-null id (later ⇒ larger: rows are id-sorted, nulls
+    first), scored by signature agreement with `quantize`'s IEEE ops and
+    thresholded."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    n = rb.num_rows
+    bounds = np.concatenate(([0], _bucket_starts(rb), [n]))
+    st, k = bounds[:-1], np.diff(bounds)
+    cap = k if max_bucket_size is None else max(max_bucket_size, 0)
+    heads = np.minimum(k - 1, cap)
+    st, k, heads = st[heads > 0], k[heads > 0], heads[heads > 0]
+    if not len(st):
+        return
+    head = (np.repeat(st, heads) + np.arange(heads.sum())
+            - np.repeat(np.cumsum(heads) - heads, heads))
+    end = np.repeat(st + k, heads)
+    cnt = end - head - 1
+    cum = np.cumsum(cnt)
+    S = rb.column("sig").flatten().to_numpy().reshape(n, num_hashes)
+    ids = rb.column("id")
+    i = 0
+    while i < len(head):
+        j = max(int(np.searchsorted(cum, cum[i] - cnt[i] + _PAIR_CHUNK,
+                                    "right")), i + 1)
+        c = cnt[i:j]
+        ia = np.repeat(head[i:j], c)
+        ib = ia + 1 + np.arange(c.sum()) - np.repeat(np.cumsum(c) - c, c)
+        agree = (S[ia] == S[ib]).sum(axis=1)
+        est = np.floor(agree.astype(np.float64) / num_hashes * 10000.0
+                       + 0.5) / 10000.0
+        ok = est >= min_est_jaccard
+        ida, idb = ids.take(pa.array(ia[ok])), ids.take(pa.array(ib[ok]))
+        ne = pc.fill_null(pc.not_equal(ida, idb), False)
+        if pc.any(ne).as_py():
+            yield ida.filter(ne), idb.filter(ne), pa.array(est[ok]).filter(ne)
+        i = j
 
 
 def minhash_lsh_pairs(df: DataFrame, text_col: str, id_col: str,
@@ -161,57 +341,77 @@ def minhash_lsh_pairs(df: DataFrame, text_col: str, id_col: str,
                       min_est_jaccard: float = 0.5,
                       max_bucket_size: int | None = 10_000) -> DataFrame:
     """Near-duplicate candidate pairs via banded MinHash LSH, scored by the
-    signature-agreement Jaccard estimate. Returns (id_a, id_b, est_jaccard).
+    signature-agreement Jaccard estimate. Returns (id_a, id_b, est_jaccard),
+    id_a < id_b.
 
-    Plan shape: signatures (scan-side) → explode bands (×bands rows) →
-    groupBy band bucket → pairs within buckets → distinct → score. All
-    shuffles are on small keys; no O(n²) stage — except a degenerate hot
-    bucket (a corpus full of one boilerplate text lands in one bucket and
-    pairs quadratically). max_bucket_size bounds that: the LEFT side of the
-    self-join keeps only each bucket's `cap` smallest ids, so every member
-    still pairs with the bucket's head ids (the cluster stays one connected
+    Plan shape: signature kernel (`minhash_banded`, one pass per document)
+    → repartition on (band, bh) → sort each partition by (band, bh, id) →
+    a pair kernel that walks each bucket → dropDuplicates(id_a, id_b)
+    across bands. The banded rows shuffle once (~130 B per doc and band,
+    the text never moves), the pair kernel scores and thresholds each
+    candidate where it is found, and the dedup exchange moves (id, id,
+    double) rows only. No O(n²) stage — except a degenerate hot bucket (a
+    corpus full of one boilerplate text lands in one bucket and pairs
+    quadratically). max_bucket_size bounds that: only each bucket's `cap`
+    smallest ids pair with the later members, so every member still
+    pairs with the bucket's head ids (the cluster stays one connected
     component through connected_components) while pair count per bucket
-    drops from n² to cap·n. The default cap (10k) is far above any bucket a
-    healthy corpus produces — results are bit-identical to uncapped there —
-    but bounds the one degenerate case that would otherwise go quadratic on
-    a boilerplate-heavy real corpus (VERDICT r4 scale audit). The capped
-    variant loses only (non-head, non-head) edges, which are redundant for
-    clustering; pass None to force the exact uncapped pair set, and use
-    `lsh_bucket_truncation` to audit whether the cap actually fired on a
-    given corpus (empty audit ⇒ capped == uncapped, bit-for-bit).
+    drops from n² to cap·n. The default cap (10k) is far above any bucket
+    a healthy corpus produces — results are bit-identical to uncapped
+    there — but bounds the one degenerate case that would otherwise go
+    quadratic on a boilerplate-heavy real corpus (VERDICT r4 scale
+    audit). The capped variant loses only (non-head, non-head) edges,
+    which are redundant for clustering; pass None to force the exact
+    uncapped pair set, and use `lsh_bucket_truncation` to audit whether
+    the cap actually fired on a given corpus (empty audit ⇒ capped ==
+    uncapped, bit-for-bit).
+
+    The pair kernel streams its partition's Arrow batches and carries the
+    open bucket across batch boundaries, so its memory is bounded by the
+    largest bucket.
     """
-    df = ensure_parallelism(df)
-    exploded = minhash_banded(df, text_col, id_col, num_hashes, bands,
-                              shingle_n)
-    left_src = exploded
-    if max_bucket_size is not None:
-        from pyspark.sql import Window as W
-        w = W.partitionBy("band", "bh").orderBy("id")
-        left_src = (exploded.withColumn("__rn", F.row_number().over(w))
-                            .filter(F.col("__rn") <= max_bucket_size)
-                            .drop("__rn"))
-    left = left_src.alias("l")
-    right = exploded.alias("r")
-    # Score and threshold BEFORE the dedup exchange (r15, guide §2.2 —
-    # shuffle fewer bytes): est_jaccard is a pure function of the two
-    # signatures, and each signature is determined by its id, so every
-    # duplicate (id_a, id_b) candidate row carries the SAME est — scoring
-    # first and deduping after yields the identical pair set while the
-    # dropDuplicates exchange moves (long, long, double) rows instead of
-    # two num_hashes-long signature arrays (~24 B vs ~270 B per candidate;
-    # on a boilerplate-heavy corpus candidates are the dominant shuffle).
-    # The sub-threshold filter also runs map-side, so pairs that would be
-    # discarded anyway never reach the exchange at all.
-    agree = F.size(F.filter(F.zip_with(F.col("l.sig"), F.col("r.sig"),
-                                       lambda a, b: a == b), lambda x: x))
-    est = agree.cast("double") / F.lit(num_hashes)
-    return (left.join(right, (F.col("l.band") == F.col("r.band"))
-                      & (F.col("l.bh") == F.col("r.bh"))
-                      & (F.col("l.id") < F.col("r.id")))
-            .select(F.col("l.id").alias("id_a"), F.col("r.id").alias("id_b"),
-                    quantize(est, 4).alias("est_jaccard"))
-            .filter(F.col("est_jaccard") >= min_est_jaccard)
-            .dropDuplicates(["id_a", "id_b"]))
+    import pyspark.sql.types as T
+
+    banded = minhash_banded(ensure_parallelism(df), text_col, id_col,
+                            num_hashes, bands, shingle_n)
+    id_type = banded.schema["id"].dataType
+    out_schema = T.StructType([T.StructField("id_a", id_type),
+                               T.StructField("id_b", id_type),
+                               T.StructField("est_jaccard", T.DoubleType())])
+
+    def minhash_pairs(batches):
+        import pyarrow as pa
+
+        def key(rb, i):
+            return rb.column("band")[i].as_py(), rb.column("bh")[i].as_py()
+
+        def flush(parts):
+            rb = pa.Table.from_batches(parts).combine_chunks().to_batches()[0]
+            for cols in _score_buckets(rb, num_hashes, min_est_jaccard,
+                                       max_bucket_size):
+                yield pa.RecordBatch.from_arrays(list(cols),
+                                                 names=out_schema.names)
+
+        open_: list = []  # rows of the last bucket seen, maybe continued
+        for rb in batches:
+            if not rb.num_rows:
+                continue
+            if open_ and key(open_[-1], open_[-1].num_rows - 1) != key(rb, 0):
+                yield from flush(open_)
+                open_ = []
+            starts = _bucket_starts(rb)
+            last = int(starts[-1]) if len(starts) else 0
+            if last:
+                yield from flush(open_ + [rb.slice(0, last)])
+                open_ = []
+            open_.append(rb.slice(last))
+        if open_:
+            yield from flush(open_)
+
+    return (banded.repartition("band", "bh")
+                  .sortWithinPartitions("band", "bh", "id")
+                  .mapInArrow(minhash_pairs, out_schema)
+                  .dropDuplicates(["id_a", "id_b"]))
 
 
 # ----------------------------------------------------------------------
@@ -273,8 +473,8 @@ def minhash_lsh_pairs_between(df_new: DataFrame, df_base: DataFrame | None,
     STANDING corpus can put millions of base docs in a single (band, bh)
     bucket, and every new doc landing there would emit millions of
     candidate rows before the est_jaccard filter. The base side keeps
-    only each bucket's `cap` smallest ids (same pattern as the self-join
-    variant, dedup.py minhash_lsh_pairs) — a new doc whose band matches a
+    only each bucket's `cap` smallest ids (the head cap of
+    minhash_lsh_pairs) — a new doc whose band matches a
     mega-bucket still pairs with the bucket's head ids, which is enough
     to flag it as a near-dup of the clique, while per-new-doc candidate
     volume drops from |bucket| to cap. Bit-identical to uncapped on
@@ -478,8 +678,7 @@ def lsh_plane_weights(plane: int, dim: int) -> list[float]:
 
 
 def _h32_py(s: str) -> int:
-    import hashlib
-    return int(hashlib.md5(s.encode()).hexdigest()[:8], 16)
+    return int.from_bytes(hashlib.md5(s.encode()).digest()[:4], "big")
 
 
 # ----------------------------------------------------------------------
@@ -784,8 +983,8 @@ def connected_components(edges: DataFrame, src: str = "id_a",
     `driver_edge_cap` (discovered with one limit(cap+1) pass — LocalLimit
     short-circuits), solve it with driver union-find instead: the result
     is the identical (id, min-id component) labeling. The default cap
-    (200 k edges) is sized for PYTHON object overhead — collected Rows
-    plus the parent/min dicts run ~100+ bytes per entry, so the fast
+    (200 k edges) is sized for PYTHON object overhead — the collected
+    edges plus the parent/min dicts run ~100+ bytes per entry, so the fast
     path holds tens of MB of driver heap, not the raw-longs few MB.
     Larger graphs take the distributed loop exactly as before (the one
     partial pass is the probe's cost); pass driver_edge_cap=None/0 to
@@ -802,8 +1001,9 @@ def connected_components(edges: DataFrame, src: str = "id_a",
               .filter(F.col("u") != F.col("v")).distinct())
 
     if driver_edge_cap:
-        rows = e.limit(driver_edge_cap + 1).collect()
+        rows = e.limit(driver_edge_cap + 1).toPandas()
         if len(rows) <= driver_edge_cap:
+            import pandas as pd
             parent: dict[int, int] = {}
 
             def find(x: int) -> int:
@@ -814,8 +1014,7 @@ def connected_components(edges: DataFrame, src: str = "id_a",
                     parent[x], x = root, parent[x]
                 return root
 
-            for r in rows:
-                u, v = r["u"], r["v"]
+            for u, v in zip(rows["u"].tolist(), rows["v"].tolist()):
                 parent.setdefault(u, u)
                 parent.setdefault(v, v)
                 ru, rv = find(u), find(v)
@@ -827,7 +1026,13 @@ def connected_components(edges: DataFrame, src: str = "id_a",
                 cur = comp_min.get(root)
                 if cur is None or node < cur:
                     comp_min[root] = node
-            out = [(node, comp_min[find(node)]) for node in parent]
+            # an Arrow-backed local relation: a Python-list frame is an
+            # RDD that every downstream stage (dedup_clusters' size join
+            # reads it twice) re-evaluates through Python
+            out = pd.DataFrame(
+                {"id": pd.Series(list(parent), dtype="int64"),
+                 "component": pd.Series([comp_min[find(n)] for n in parent],
+                                        dtype="int64")})
             return edges.sparkSession.createDataFrame(
                 out, "id long, component long")
 

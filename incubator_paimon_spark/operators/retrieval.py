@@ -40,7 +40,7 @@ def bm25_corpus_stats(df: DataFrame, text_col: str,
 
 def _term_eq(t: str):
     # closure factory: a defaulted lambda param would be taken as the
-    # HOF's (element, index) second argument (see minhash_from_hashes)
+    # HOF's (element, index) second argument
     return lambda w: w == t
 
 

@@ -280,34 +280,19 @@ def streaming_neardup_claims(df: DataFrame, text_col: str, id_col: str,
     from pyspark.sql import functions as F
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-    from ..operators.dedup import h32, minhash_from_hashes, shingles
+    from ..operators.dedup import minhash_band_rows
 
-    rows = num_hashes // bands
-    # stage hs → sig in their OWN projections, exactly like
-    # minhash_lsh_pairs: Catalyst does not CSE across lambda functions,
-    # so the inlined form replays the whole shingle+md5 pipeline once
-    # per hash function per band — measured 25× slower in the streaming
-    # plan (95 s vs 4 s for one sf0.01 micro-batch)
-    staged = (df.select("*", F.transform(shingles(F.col(text_col),
-                                                  shingle_n),
-                                         h32).alias("__hs"))
-                .select("*", minhash_from_hashes(F.col("__hs"), num_hashes)
-                             .alias("__sig"))
-                .drop("__hs"))
-    band_arr = F.array(*[
-        F.struct(F.lit(b).alias("band"),
-                 F.md5(F.concat_ws(",", *[
-                     F.element_at(F.col("__sig"), b * rows + r + 1)
-                     for r in range(rows)])).alias("bh"))
-        for b in range(bands)])
+    # one signature pass per document (the Arrow kernel batch LSH uses),
+    # then `bands` rows per document carrying the whole input row
+    signed = minhash_band_rows(
+        df.select("*", F.col(text_col).alias("__text")), num_hashes, bands,
+        shingle_n, ("__sig", "__band", "__bh"))
     ordc = order_col if order_col is not None else id_col
-    bkey = F.concat_ws("|", F.col("__b.band"), F.col("__b.bh"))
-    tagged = (staged.select("*", F.explode(band_arr).alias("__b"))
-                    .select("*", F.col("__b.band").alias("__band"),
-                            bkey.alias("__bkey"),
+    bkey = F.concat_ws("|", F.col("__band"), F.col("__bh"))
+    tagged = (signed.select("*", bkey.alias("__bkey"),
                             F.pmod(F.xxhash64(bkey), F.lit(state_buckets))
                              .alias("__bucket"))
-                    .drop("__b", "__sig"))
+                    .drop("__sig", "__bh"))
 
     in_names = [c for c in tagged.columns
                 if c not in ("__bkey", "__bucket")]

@@ -100,10 +100,10 @@ def test_lazy_nightly_cost_is_index_scan_not_signature_pass(spark, catalog,
     plan = q._jdf.queryExecution().optimizedPlan().toString()
     unindexed = D.minhash_lsh_pairs_between(new, base, "text", "doc_id")
     uplan = unindexed._jdf.queryExecution().optimizedPlan().toString()
-    # the signature pipeline shows up as md5(...) expression trees; the
-    # indexed plan keeps exactly the NEW side's (one pipeline), while
-    # the unindexed plan carries both sides' — strictly more md5 nodes
-    assert 0 < plan.count("md5") < uplan.count("md5")
+    # the signature pass shows up as the MinHash kernel's MapInArrow
+    # node; the indexed plan keeps exactly the NEW side's (one pass),
+    # while the unindexed plan carries both sides' — strictly more
+    assert 0 < plan.count("minhash_sign(") < uplan.count("minhash_sign(")
 
 
 def test_expiration_respects_lagging_index_consumer(spark, catalog, docs):

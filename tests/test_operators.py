@@ -39,7 +39,7 @@ def test_minhash_seeded_neardups_found(spark):
 
 def test_minhash_signature_matches_python(spark):
     d = _docs(spark).filter("doc_id = 0")
-    sig = d.select(D.minhash_signature(F.col("text"), 4, 3).alias("s")).first()["s"]
+    sig = D.minhash_banded(d, "text", "doc_id", 4, 1, 3).first()["sig"]
     text = d.first()["text"]
     ws = text.split()
     shingles = {" ".join(ws[i:i + 3]) for i in range(len(ws) - 2)}
@@ -47,6 +47,162 @@ def test_minhash_signature_matches_python(spark):
     for i, (a, b) in enumerate(D.minhash_perms(4)):
         expect = min((a * h + b) % D.MINHASH_P for h in hashes)
         assert sig[i] == expect
+
+
+# The Column-expression MinHash the Arrow kernel replaced, kept as its
+# reference: shingles → h32 → one array_min(transform) per hash function
+# → md5 of each band's comma-joined slice.
+def _ref_minhash_from_hashes(hs, num_hashes):
+    def perm_min(a, b):
+        return F.array_min(
+            F.transform(hs, lambda h: (h * F.lit(a) + F.lit(b)) % D.MINHASH_P))
+
+    return F.array(*[perm_min(a, b) for a, b in D.minhash_perms(num_hashes)])
+
+
+def _ref_minhash_banded(df, text_col, id_col, num_hashes, bands, shingle_n):
+    rows = num_hashes // bands
+    base = (df.select(F.col(id_col).alias("id"),
+                      F.transform(D.shingles(F.col(text_col), shingle_n),
+                                  D.h32).alias("hs"))
+              .select("id", _ref_minhash_from_hashes(F.col("hs"),
+                                                     num_hashes).alias("sig")))
+    band_arr = F.array(*[
+        F.struct(F.lit(b).alias("band"),
+                 F.md5(F.concat_ws(",", *[
+                     F.element_at(F.col("sig"), b * rows + r + 1)
+                     for r in range(rows)])).alias("bh"))
+        for b in range(bands)])
+    return (base.select("id", "sig", F.explode(band_arr).alias("b"))
+                .select("id", "sig", F.col("b.band").alias("band"),
+                        F.col("b.bh").alias("bh")))
+
+
+# null/empty/whitespace-only text, every Java \s character, the two
+# spaces Java's \s does not match (U+00A0, U+3000), short docs,
+# non-ASCII words and repeated n-grams
+_EDGE_TEXTS = [
+    None, "", " ", "   ", "\t", "\t\t", "\n \r", "\x0b", "\x0c",
+    "\ta b\t", " lead and trail ", "a\tb\nc\x0bd\x0ce\rf g",
+    "x\xa0y z\u3000w v", "\u3000", "\xa0", "one", "two words",
+    "three words here",
+    "caf\u00e9 na\u00efve \u65e5\u672c\u8a9e "
+    "\u0441\u043b\u043e\u0432\u043e \U0001f600 smile",
+    "the cat the cat the cat the cat", "a a a a a a a a",
+    "the quick brown fox jumps over the lazy dog " * 3,
+]
+
+
+def test_minhash_kernel_matches_column_reference(spark):
+    """The Arrow signature kernel's (id, sig, band, bh) rows equal the
+    Column-expression reference on an edge corpus, for long and string
+    ids and three (num_hashes, bands, shingle_n) settings."""
+    import pyspark.sql.types as T
+    longs = spark.createDataFrame(list(enumerate(_EDGE_TEXTS)),
+                                  "doc_id long, text string")
+    strs = spark.createDataFrame([(f"d{i}", t) for i, t in
+                                  enumerate(_EDGE_TEXTS)],
+                                 "doc_id string, text string")
+    for df, id_type in ((longs, T.LongType()), (strs, T.StringType())):
+        for nh, bands, n in ((16, 4, 3), (32, 8, 3), (8, 2, 5)):
+            got = D.minhash_banded(df, "text", "doc_id", nh, bands, n)
+            assert got.schema["id"].dataType == id_type
+            assert got.schema["sig"].dataType == T.ArrayType(T.LongType())
+            assert got.schema["band"].dataType == T.IntegerType()
+            want = _ref_minhash_banded(df, "text", "doc_id", nh, bands, n)
+            rows = sorted(map(tuple, got.collect()))
+            assert rows == sorted(map(tuple, want.collect()))
+            assert len(rows) == len(_EDGE_TEXTS) * bands
+    # null text signs exactly like empty text (the one shingle '')
+    sig = {r["id"]: r["sig"] for r in D.minhash_banded(
+        longs, "text", "doc_id", 16, 4, 3).collect()}
+    assert sig[0] == sig[1] == sig[2]
+
+
+def _old_lsh_pairs(banded, num_hashes, min_est, cap):
+    """The window + self-join candidate plan minhash_lsh_pairs replaced."""
+    from pyspark.sql import Window as W
+    left = banded
+    if cap is not None:
+        w = W.partitionBy("band", "bh").orderBy("id")
+        left = (banded.withColumn("__rn", F.row_number().over(w))
+                      .filter(F.col("__rn") <= cap).drop("__rn"))
+    l, r = left.alias("l"), banded.alias("r")
+    agree = F.size(F.filter(F.zip_with(F.col("l.sig"), F.col("r.sig"),
+                                       lambda a, b: a == b), lambda x: x))
+    est = agree.cast("double") / F.lit(num_hashes)
+    return (l.join(r, (F.col("l.band") == F.col("r.band"))
+                   & (F.col("l.bh") == F.col("r.bh"))
+                   & (F.col("l.id") < F.col("r.id")))
+             .select(F.col("l.id").alias("id_a"), F.col("r.id").alias("id_b"),
+                     TX.quantize(est, 4).alias("est_jaccard"))
+             .filter(F.col("est_jaccard") >= min_est)
+             .dropDuplicates(["id_a", "id_b"]))
+
+
+def test_minhash_lsh_pairs_match_window_self_join(spark):
+    """The bucket-walking pair kernel yields exactly the pair set (and
+    est_jaccard values) of the old window-capped self-join, uncapped, at
+    a cap that fires, and at the default cap — on a corpus with a
+    boilerplate clique, near-copies and a null id. Arrow batches of 7
+    rows make buckets straddle batch boundaries."""
+    docs = _docs(spark).select("doc_id", "text").limit(200)
+    base = [r["text"] for r in docs.limit(20).collect()]
+    extra = ([(5000 + i, "the same boilerplate banner text repeated "
+                         "verbatim across mirrored pages" + " x" * (i % 3))
+              for i in range(40)]
+             + [(6000 + i, " ".join(t.split()[:-1 - i % 2]))
+                for i, t in enumerate(base)]
+             + [(None, base[0])])
+    corpus = docs.union(spark.createDataFrame(extra,
+                                              "doc_id long, text string"))
+    nh, bands, n = 16, 4, 3
+    banded = D.minhash_banded(corpus, "text", "doc_id", nh, bands, n)
+    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "7")
+    try:
+        for cap in (None, 2, 10_000):
+            for thr in (0.5, 0.0):
+                got = sorted(map(tuple, D.minhash_lsh_pairs(
+                    corpus, "text", "doc_id", nh, bands, n,
+                    min_est_jaccard=thr, max_bucket_size=cap).collect()))
+                want = sorted(map(tuple, _old_lsh_pairs(
+                    banded, nh, thr, cap).collect()))
+                assert got == want, (cap, thr)
+                assert len(got) > 40
+    finally:
+        spark.conf.unset("spark.sql.execution.arrow.maxRecordsPerBatch")
+
+
+def test_ensure_parallelism_runs_no_job(spark, tmp_path):
+    """The partition probe reads the physical plan: no job runs — not
+    even for a shuffle or broadcast input under AQE, where
+    `df.rdd.getNumPartitions()` executes the upstream stages — and the
+    repartition decision matches the executed count for a 1-partition
+    cached input and a multi-file parquet scan."""
+    sc = spark.sparkContext
+    one = spark.range(0, 100, 1, 1).persist()
+    one.count()
+    for i in range(6):
+        spark.range(i * 10, i * 10 + 10, 1, 1).write.parquet(
+            str(tmp_path / f"p{i}"))
+    scan = spark.read.parquet(*[str(tmp_path / f"p{i}") for i in range(6)])
+    agg = (spark.range(1000).groupBy((F.col("id") % 7).alias("k")).count()
+           .join(spark.range(7).withColumnRenamed("id", "k"), "k"))
+    bcast = one.join(F.broadcast(spark.range(5).withColumnRenamed("id", "x")),
+                     F.col("id") == F.col("x"))
+    sc.setJobGroup("planned_partitions_probe", "probe")
+    try:
+        for df in (one, scan, agg, bcast):
+            D.ensure_parallelism(df, 8)
+            D.planned_partitions(df)
+        assert sc.statusTracker().getJobIdsForGroup(
+            "planned_partitions_probe") == []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    for df in (one, scan):
+        assert D.planned_partitions(df) == df.rdd.getNumPartitions()
+    assert D.planned_partitions(one) == 1 and D.planned_partitions(scan) > 1
+    assert D.planned_partitions(bcast) == 1
 
 
 def test_exact_dedup_keeps_min_id(spark):

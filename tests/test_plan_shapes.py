@@ -96,12 +96,16 @@ def test_knn_broadcasts_query_side(spark):
 
 
 def test_minhash_lsh_join_is_bucketed(spark):
-    """the LSH candidate self-join must join on (band, bucket-hash) keys —
-    never a cartesian/nested-loop over the corpus."""
+    """LSH candidates are formed inside (band, bucket-hash) buckets —
+    never a cartesian/nested-loop over the corpus: the banded rows are
+    hash-partitioned on those keys, and the signature kernel runs once
+    (no second signature subtree feeding a self-join)."""
     from incubator_paimon_spark.operators import dedup as D
     p = _plan(D.minhash_lsh_pairs(_docs(spark), "text", "doc_id",
                                   num_hashes=16, bands=4))
     assert "CartesianProduct" not in p and "BroadcastNestedLoop" not in p
+    assert "hashpartitioning(band#" in p
+    assert p.count("minhash_sign(") == 1
 
 
 def test_embedding_lsh_join_is_bucketed(spark):
