@@ -50,7 +50,11 @@ def ensure_parallelism(df: DataFrame, min_partitions: int | None = None) -> Data
     The count is read from the physical plan (`planned_partitions`), so no
     job runs: `df.rdd.getNumPartitions()` executes an adaptive plan's
     shuffle and broadcast stages, which the caller's action then runs
-    again."""
+    again. The one count the plan cannot fix beforehand is a shuffle's
+    under AQE coalescing; such an input is repartitioned, as it was
+    when the executed count of a small input (coalesced to one task)
+    decided — the price is one round-robin exchange of an input that
+    AQE would have kept wide."""
     target = min_partitions or df.sparkSession.sparkContext.defaultParallelism
     from py4j.protocol import Py4JError
     from pyspark.errors import AnalysisException
@@ -66,22 +70,42 @@ def ensure_parallelism(df: DataFrame, min_partitions: int | None = None) -> Data
 
 
 def planned_partitions(df: DataFrame) -> int:
-    """The partition count `df`'s physical plan fixes before adaptive
-    re-planning, read without executing it; 0 when the plan does not
-    say (a multi-input node other than a broadcast join or a union).
-    Walks down from the plan root (an adaptive plan's input plan): the
+    """The partition count `df`'s physical plan fixes, read without
+    executing it; 0 when the plan does not say — a multi-input node other
+    than a broadcast join or a union, or, under AQE with partition
+    coalescing on, a count that comes from a shuffle AQE may still
+    coalesce (a small input's groupBy plans spark.sql.shuffle.partitions
+    and then runs as one task). Walks down from the plan root: the
     first node with a known output partitioning answers, a broadcast
     join asks its streamed side, a cached relation its cached plan, and
-    a leaf its planned input RDD (for a file scan: the planned splits)."""
-    def count(p) -> int:
+    a leaf its planned input RDD (for a file scan: the planned splits).
+    An adaptive plan is read as it stands: before it runs, with its
+    exchanges in place; once run (a materialized cache), with AQE's
+    coalesced reads."""
+    coalesce = df.sparkSession.conf.get(
+        "spark.sql.adaptive.coalescePartitions.enabled", "true") == "true"
+
+    def children(p) -> list:
+        kids = p.children()
+        return [kids.apply(i) for i in range(kids.size())]
+
+    def coalescible(p, n: int) -> bool:
+        # does p's n-way partitioning come from a shuffle AQE coalesces?
+        # (a repartition(n) keeps its n)
+        if p.getClass().getSimpleName() == "ShuffleExchangeExec":
+            return p.shuffleOrigin().toString() != "REPARTITION_BY_NUM"
+        return any(coalescible(k, n) for k in children(p)
+                   if k.outputPartitioning().numPartitions() == n)
+
+    def count(p, adaptive: bool) -> int:
         while True:
             name = p.getClass().getSimpleName()
             if name == "AdaptiveSparkPlanExec":
-                p = p.inputPlan()
+                p, adaptive = p.executedPlan(), True
                 continue
             n = p.outputPartitioning().numPartitions()
             if n > 0:
-                return n
+                return 0 if adaptive and coalesce and coalescible(p, n) else n
             if name == "InMemoryTableScanExec":
                 p = p.relation().cachedPlan()
                 continue
@@ -90,21 +114,20 @@ def planned_partitions(df: DataFrame) -> int:
                 right = p.buildSide().toString() == "BuildRight"
                 p = p.left() if right else p.right()
                 continue
-            kids = p.children()
-            kids = [kids.apply(i) for i in range(kids.size())]
+            kids = children(p)
             if not kids:
                 rdd = (p.inputRDD() if name in ("FileSourceScanExec",
                                                 "BatchScanExec")
                        else p.execute())
                 return rdd.getNumPartitions()
             if name == "UnionExec":
-                counts = [count(k) for k in kids]
+                counts = [count(k, adaptive) for k in kids]
                 return sum(counts) if all(counts) else 0
             if len(kids) != 1:
                 return 0
             p = kids[0]
 
-    return count(df._jdf.queryExecution().executedPlan())
+    return count(df._jdf.queryExecution().executedPlan(), False)
 
 
 def shingles(col: Column, n: int = 3) -> Column:
@@ -201,6 +224,13 @@ def _signatures(texts, shingle_n: int, a, b):
     return S
 
 
+# documents per signature-kernel output batch: each output row carries
+# num_hashes longs in one Arrow list array, whose int32 offsets must stay
+# below 2^31 even when Spark hands over a whole partition as one batch
+# (spark.sql.execution.arrow.maxRecordsPerBatch <= 0)
+_SIGN_ROWS = 1 << 16
+
+
 def minhash_band_rows(src: DataFrame, num_hashes: int, bands: int,
                       shingle_n: int,
                       names: tuple[str, str, str]) -> DataFrame:
@@ -223,28 +253,32 @@ def minhash_band_rows(src: DataFrame, num_hashes: int, bands: int,
         keep + [T.StructField(sig, T.ArrayType(T.LongType())),
                 T.StructField(band, T.IntegerType()),
                 T.StructField(bh, T.StringType())])
+    step = max(1, min(_SIGN_ROWS, (2**31 - 1) // (bands * num_hashes)))
 
     def minhash_sign(batches):
+        for whole in batches:
+            for at in range(0, whole.num_rows, step):
+                yield sign(whole.slice(at, step))
+
+    def sign(rb):
         import pyarrow as pa
-        for rb in batches:
-            n = rb.num_rows
-            if not n:
-                continue
-            S = _signatures(rb.column(rb.num_columns - 1).to_pylist(),
-                            shingle_n, a, b)
-            bhs = [hashlib.md5(",".join(map(str, r[k * rows:(k + 1) * rows]))
-                               .encode()).hexdigest()
-                   for r in S.tolist() for k in range(bands)]
-            take = pa.array(np.repeat(np.arange(n), bands))
-            sigs = pa.ListArray.from_arrays(
-                pa.array(np.arange(0, n * bands + 1, dtype=np.int32)
-                         * num_hashes),
-                pa.array(np.repeat(S, bands, axis=0).ravel()))
-            cols = [rb.column(i).take(take) for i in range(len(keep))]
-            cols += [sigs,
-                     pa.array(np.tile(np.arange(bands, dtype=np.int32), n)),
-                     pa.array(bhs, pa.string())]
-            yield pa.RecordBatch.from_arrays(cols, names=out_schema.names)
+        n = rb.num_rows
+        S = _signatures(rb.column(rb.num_columns - 1).to_pylist(),
+                        shingle_n, a, b)
+        bhs = [hashlib.md5(",".join(map(str, r[k * rows:(k + 1) * rows]))
+                           .encode()).hexdigest()
+               for r in S.tolist() for k in range(bands)]
+        take = pa.array(np.repeat(np.arange(n), bands))
+        # int64 arithmetic; the int32 conversion raises rather than wraps
+        sigs = pa.ListArray.from_arrays(
+            pa.array(np.arange(0, n * bands + 1, dtype=np.int64)
+                     * num_hashes, pa.int32()),
+            pa.array(np.repeat(S, bands, axis=0).ravel()))
+        cols = [rb.column(i).take(take) for i in range(len(keep))]
+        cols += [sigs,
+                 pa.array(np.tile(np.arange(bands, dtype=np.int32), n)),
+                 pa.array(bhs, pa.string())]
+        return pa.RecordBatch.from_arrays(cols, names=out_schema.names)
 
     return src.mapInArrow(minhash_sign, out_schema)
 
@@ -273,7 +307,7 @@ def minhash_banded(df: DataFrame, text_col: str, id_col: str,
 
 # pair rows per vectorized comparison in _score_buckets: bounds the two
 # gathered signature blocks at 2 × 2^16 × num_hashes longs, except for a
-# head whose bucket alone is larger (then 2 × bucket × num_hashes)
+# head with more later rows in its batch (then 2 × those × num_hashes)
 _PAIR_CHUNK = 1 << 16
 
 
@@ -290,30 +324,35 @@ def _bucket_starts(rb):
     return np.flatnonzero(brk) + 1
 
 
-def _score_buckets(rb, num_hashes: int, min_est_jaccard: float,
-                   max_bucket_size: int | None):
-    """(id_a, id_b, est_jaccard) arrays for the complete (band, bh)
-    buckets in `rb` (rows sorted by band, bh, id): each of a bucket's
-    first `max_bucket_size` members against every later member with a
-    different, non-null id (later ⇒ larger: rows are id-sorted, nulls
-    first), scored by signature agreement with `quantize`'s IEEE ops and
-    thresholded."""
+def _score_buckets(rb, starts, num_hashes: int, min_est_jaccard: float,
+                   max_bucket_size: int | None, done: int = 0):
+    """(id_a, id_b, est_jaccard) arrays for the (band, bh) buckets in `rb`
+    (rows sorted by band, bh, id; `starts` = `_bucket_starts(rb)`): each
+    of a bucket's first `max_bucket_size` members against every later
+    member with a different, non-null id (later ⇒ larger: rows are
+    id-sorted, nulls first), scored by signature agreement with
+    `quantize`'s IEEE ops and thresholded. The first `done` rows of the
+    first bucket were paired with one another already: only pairs whose
+    later member lies past them are scored."""
     import numpy as np
     import pyarrow as pa
     import pyarrow.compute as pc
 
     n = rb.num_rows
-    bounds = np.concatenate(([0], _bucket_starts(rb), [n]))
+    bounds = np.concatenate(([0], starts, [n]))
     st, k = bounds[:-1], np.diff(bounds)
+    lo = st.copy()
+    lo[0] += done
     cap = k if max_bucket_size is None else max(max_bucket_size, 0)
     heads = np.minimum(k - 1, cap)
-    st, k, heads = st[heads > 0], k[heads > 0], heads[heads > 0]
+    st, k, lo, heads = (x[heads > 0] for x in (st, k, lo, heads))
     if not len(st):
         return
     head = (np.repeat(st, heads) + np.arange(heads.sum())
             - np.repeat(np.cumsum(heads) - heads, heads))
-    end = np.repeat(st + k, heads)
-    cnt = end - head - 1
+    first = np.maximum(head + 1, np.repeat(lo, heads))
+    cnt = np.repeat(st + k, heads) - first
+    head, first, cnt = head[cnt > 0], first[cnt > 0], cnt[cnt > 0]
     cum = np.cumsum(cnt)
     S = rb.column("sig").flatten().to_numpy().reshape(n, num_hashes)
     ids = rb.column("id")
@@ -322,8 +361,8 @@ def _score_buckets(rb, num_hashes: int, min_est_jaccard: float,
         j = max(int(np.searchsorted(cum, cum[i] - cnt[i] + _PAIR_CHUNK,
                                     "right")), i + 1)
         c = cnt[i:j]
-        ia = np.repeat(head[i:j], c)
-        ib = ia + 1 + np.arange(c.sum()) - np.repeat(np.cumsum(c) - c, c)
+        off = np.arange(c.sum()) - np.repeat(np.cumsum(c) - c, c)
+        ia, ib = np.repeat(head[i:j], c), np.repeat(first[i:j], c) + off
         agree = (S[ia] == S[ib]).sum(axis=1)
         est = np.floor(agree.astype(np.float64) / num_hashes * 10000.0
                        + 0.5) / 10000.0
@@ -333,6 +372,38 @@ def _score_buckets(rb, num_hashes: int, min_est_jaccard: float,
         if pc.any(ne).as_py():
             yield ida.filter(ne), idb.filter(ne), pa.array(est[ok]).filter(ne)
         i = j
+
+
+def _pair_batches(batches, num_hashes: int, min_est_jaccard: float,
+                  max_bucket_size: int | None, names: list[str]):
+    """The pair kernel: (id, sig, band, bh) Arrow batches sorted by
+    (band, bh, id) in, (id_a, id_b, est_jaccard) batches out. Each batch
+    is scored as it arrives; of the bucket still open at its end only the
+    first `max_bucket_size` rows (the heads — the only rows a later row
+    pairs with) are carried into the next batch, so memory is one batch
+    plus the cap (the open bucket when uncapped)."""
+    import pyarrow as pa
+
+    def key(rb, i):
+        return rb.column("band")[i].as_py(), rb.column("bh")[i].as_py()
+
+    carry, carry_key = None, None
+    for rb in batches:
+        if not rb.num_rows:
+            continue
+        done = 0
+        if carry is not None and carry.num_rows and carry_key == key(rb, 0):
+            done = carry.num_rows
+            rb = (pa.Table.from_batches([carry, rb]).combine_chunks()
+                    .to_batches()[0])
+        starts = _bucket_starts(rb)
+        for cols in _score_buckets(rb, starts, num_hashes, min_est_jaccard,
+                                   max_bucket_size, done):
+            yield pa.RecordBatch.from_arrays(list(cols), names=names)
+        last = int(starts[-1]) if len(starts) else 0
+        carry = rb.slice(last, None if max_bucket_size is None
+                         else max(max_bucket_size, 0))
+        carry_key = key(rb, rb.num_rows - 1)
 
 
 def minhash_lsh_pairs(df: DataFrame, text_col: str, id_col: str,
@@ -366,9 +437,10 @@ def minhash_lsh_pairs(df: DataFrame, text_col: str, id_col: str,
     the cap actually fired on a given corpus (empty audit ⇒ capped ==
     uncapped, bit-for-bit).
 
-    The pair kernel streams its partition's Arrow batches and carries the
-    open bucket across batch boundaries, so its memory is bounded by the
-    largest bucket.
+    The pair kernel (`_pair_batches`) streams its partition's Arrow
+    batches and carries only the open bucket's head rows across batch
+    boundaries, so its memory is one batch plus max_bucket_size rows
+    (one batch plus the whole open bucket when uncapped).
     """
     import pyspark.sql.types as T
 
@@ -380,33 +452,8 @@ def minhash_lsh_pairs(df: DataFrame, text_col: str, id_col: str,
                                T.StructField("est_jaccard", T.DoubleType())])
 
     def minhash_pairs(batches):
-        import pyarrow as pa
-
-        def key(rb, i):
-            return rb.column("band")[i].as_py(), rb.column("bh")[i].as_py()
-
-        def flush(parts):
-            rb = pa.Table.from_batches(parts).combine_chunks().to_batches()[0]
-            for cols in _score_buckets(rb, num_hashes, min_est_jaccard,
-                                       max_bucket_size):
-                yield pa.RecordBatch.from_arrays(list(cols),
-                                                 names=out_schema.names)
-
-        open_: list = []  # rows of the last bucket seen, maybe continued
-        for rb in batches:
-            if not rb.num_rows:
-                continue
-            if open_ and key(open_[-1], open_[-1].num_rows - 1) != key(rb, 0):
-                yield from flush(open_)
-                open_ = []
-            starts = _bucket_starts(rb)
-            last = int(starts[-1]) if len(starts) else 0
-            if last:
-                yield from flush(open_ + [rb.slice(0, last)])
-                open_ = []
-            open_.append(rb.slice(last))
-        if open_:
-            yield from flush(open_)
+        return _pair_batches(batches, num_hashes, min_est_jaccard,
+                             max_bucket_size, out_schema.names)
 
     return (banded.repartition("band", "bh")
                   .sortWithinPartitions("band", "bh", "id")
@@ -472,9 +519,10 @@ def minhash_lsh_pairs_between(df_new: DataFrame, df_base: DataFrame | None,
     max_bucket_size bounds the one remaining blowup: a boilerplate-heavy
     STANDING corpus can put millions of base docs in a single (band, bh)
     bucket, and every new doc landing there would emit millions of
-    candidate rows before the est_jaccard filter. The base side keeps
-    only each bucket's `cap` smallest ids (the head cap of
-    minhash_lsh_pairs) — a new doc whose band matches a
+    candidate rows before the est_jaccard filter. A row_number window
+    over (band, bh), ordered by base_id, keeps only each base bucket's
+    `cap` smallest ids — the same head rule minhash_lsh_pairs applies in
+    its pair kernel — so a new doc whose band matches a
     mega-bucket still pairs with the bucket's head ids, which is enough
     to flag it as a near-dup of the clique, while per-new-doc candidate
     volume drops from |bucket| to cap. Bit-identical to uncapped on

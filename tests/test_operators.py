@@ -93,10 +93,11 @@ _EDGE_TEXTS = [
 ]
 
 
-def test_minhash_kernel_matches_column_reference(spark):
+def test_minhash_kernel_matches_column_reference(spark, monkeypatch):
     """The Arrow signature kernel's (id, sig, band, bh) rows equal the
     Column-expression reference on an edge corpus, for long and string
-    ids and three (num_hashes, bands, shingle_n) settings."""
+    ids and three (num_hashes, bands, shingle_n) settings — and when it
+    slices each input batch into output batches of a few rows."""
     import pyspark.sql.types as T
     longs = spark.createDataFrame(list(enumerate(_EDGE_TEXTS)),
                                   "doc_id long, text string")
@@ -117,6 +118,11 @@ def test_minhash_kernel_matches_column_reference(spark):
     sig = {r["id"]: r["sig"] for r in D.minhash_banded(
         longs, "text", "doc_id", 16, 4, 3).collect()}
     assert sig[0] == sig[1] == sig[2]
+    monkeypatch.setattr(D, "_SIGN_ROWS", 3)
+    got = D.minhash_banded(longs, "text", "doc_id", 16, 4, 3)
+    want = _ref_minhash_banded(longs, "text", "doc_id", 16, 4, 3)
+    assert sorted(map(tuple, got.collect())) == sorted(map(tuple,
+                                                           want.collect()))
 
 
 def _old_lsh_pairs(banded, num_hashes, min_est, cap):
@@ -144,8 +150,8 @@ def test_minhash_lsh_pairs_match_window_self_join(spark):
     """The bucket-walking pair kernel yields exactly the pair set (and
     est_jaccard values) of the old window-capped self-join, uncapped, at
     a cap that fires, and at the default cap — on a corpus with a
-    boilerplate clique, near-copies and a null id. Arrow batches of 7
-    rows make buckets straddle batch boundaries."""
+    boilerplate clique, a 60-copy bucket, near-copies and a null id.
+    Arrow batches of 7 rows make buckets straddle batch boundaries."""
     docs = _docs(spark).select("doc_id", "text").limit(200)
     base = [r["text"] for r in docs.limit(20).collect()]
     extra = ([(5000 + i, "the same boilerplate banner text repeated "
@@ -153,6 +159,7 @@ def test_minhash_lsh_pairs_match_window_self_join(spark):
               for i in range(40)]
              + [(6000 + i, " ".join(t.split()[:-1 - i % 2]))
                 for i, t in enumerate(base)]
+             + [(7000 + i, base[1]) for i in range(60)]
              + [(None, base[0])])
     corpus = docs.union(spark.createDataFrame(extra,
                                               "doc_id long, text string"))
@@ -173,12 +180,48 @@ def test_minhash_lsh_pairs_match_window_self_join(spark):
         spark.conf.unset("spark.sql.execution.arrow.maxRecordsPerBatch")
 
 
+def test_pair_kernel_carries_only_bucket_heads(monkeypatch):
+    """A capped pair kernel scores a bucket many Arrow batches long while
+    holding one batch plus the cap's head rows, and yields the pairs a
+    brute-force walk of the sorted bucket yields."""
+    import numpy as np
+    import pyarrow as pa
+    rng = np.random.default_rng(7)
+    nh, cap, batch = 4, 3, 5
+    ids = [None] + sorted(rng.choice(10_000, 49, replace=False).tolist())
+    sigs = rng.integers(0, 2, (50, nh)).tolist()
+    tbl = pa.table({"id": pa.array(ids, pa.int64()),
+                    "sig": pa.array(sigs, pa.list_(pa.int64())),
+                    "band": pa.array([0] * 50, pa.int32()),
+                    "bh": pa.array(["h"] * 50)})
+    seen = []
+    score = D._score_buckets
+
+    def spy(rb, *args):
+        seen.append(rb.num_rows)
+        return score(rb, *args)
+
+    monkeypatch.setattr(D, "_score_buckets", spy)
+    out = pa.Table.from_batches(list(D._pair_batches(
+        tbl.to_batches(max_chunksize=batch), nh, 0.0, cap,
+        ["id_a", "id_b", "est_jaccard"])))
+    got = sorted(zip(*out.to_pydict().values()))
+    want = sorted(
+        (ids[i], ids[j], np.floor(sum(x == y for x, y in zip(sigs[i], sigs[j]))
+                                  / nh * 10000.0 + 0.5) / 10000.0)
+        for i in range(1, cap) for j in range(i + 1, 50))
+    assert got == want
+    assert len(seen) == 10 and max(seen) <= cap + batch
+
+
 def test_ensure_parallelism_runs_no_job(spark, tmp_path):
     """The partition probe reads the physical plan: no job runs — not
     even for a shuffle or broadcast input under AQE, where
     `df.rdd.getNumPartitions()` executes the upstream stages — and the
     repartition decision matches the executed count for a 1-partition
-    cached input and a multi-file parquet scan."""
+    cached input and a multi-file parquet scan; a groupBy+join input,
+    whose shuffle AQE coalesces, is repartitioned as the executed count
+    decides."""
     sc = spark.sparkContext
     one = spark.range(0, 100, 1, 1).persist()
     one.count()
@@ -203,6 +246,11 @@ def test_ensure_parallelism_runs_no_job(spark, tmp_path):
         assert D.planned_partitions(df) == df.rdd.getNumPartitions()
     assert D.planned_partitions(one) == 1 and D.planned_partitions(scan) > 1
     assert D.planned_partitions(bcast) == 1
+    assert D.planned_partitions(agg) == 0
+    for df in (one, scan, agg, bcast):
+        executed = df.rdd.getNumPartitions()
+        assert (D.ensure_parallelism(df, 8) is not df) == (executed < 4)
+    assert D.ensure_parallelism(agg, 8) is not agg
 
 
 def test_exact_dedup_keeps_min_id(spark):
